@@ -115,11 +115,12 @@ def spark_path(path: str, cpus: int) -> float:
              .appName(f"blocks-prof-{cpus}")
              .config("spark.sql.shuffle.partitions", str(cpus))
              .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-             .config("spark.sql.files.openCostInBytes", str(1 << 30))
              .config("spark.driver.memory", "8g")
              .config("spark.ui.enabled", "false").getOrCreate())
     try:
-        src = spark.read.parquet(path)  # 4 sorted files -> 4 scan tasks
+        # the engine's plan: default file packing of the sorted files
+        # (about one scan task per core; files never share a term)
+        src = spark.read.parquet(path)
 
         def enc(batches):
             yield from encode_block_batches(batches, BLOCK, AVGDL, K1, B)

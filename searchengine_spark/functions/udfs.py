@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
@@ -217,25 +216,6 @@ def tokens_from_docs_sql(docs: DataFrame) -> DataFrame:
     if sited:
         out.append("site_id")
     return tf.select(*out)
-
-
-def doc_lengths(docs_with_text: DataFrame) -> DataFrame:
-    """(doc_id, dl) without emitting token rows — used by stats-only paths."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = lexicon_dict()
-        for pdf in batches:
-            dls = [sum(split_to_lemmas(t, lex).values()) for t in pdf["text"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "dl": pd.array(dls, dtype="int32"),
-            })
-
-    schema = StructType([
-        StructField("doc_id", LongType(), False),
-        StructField("dl", IntegerType(), False),
-    ])
-    return docs_with_text.select("doc_id", "text").mapInPandas(fn, schema=schema)
 
 
 def url_bucket_col(url_col, n_buckets: int):

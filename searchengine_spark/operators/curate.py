@@ -190,9 +190,13 @@ def quality_percentile_filter(df: DataFrame, top_frac: float = 0.2,
     # A NULL stratum is one group like any other (matching the window
     # route's partitionBy); joins key on (isnull flag, coalesced value)
     # because plain join equality would null-reject the whole stratum.
+    # The cast makes the coalesce string-typed for any stratum type: an
+    # integer stratum would otherwise coerce "" to int, which ANSI mode
+    # rejects.
     q = 1.0 - top_frac
     sig = sig.withColumn("_snull", F.col("_stratum").isNull()) \
-             .withColumn("_sk", F.coalesce(F.col("_stratum"), F.lit("")))
+             .withColumn("_sk", F.coalesce(F.col("_stratum").cast("string"),
+                                           F.lit("")))
     skey = ["_snull", "_sk"]
     hist = sig.groupBy(*skey, "n_tokens").agg(F.count("*").alias("cnt"))
     wdesc = (Window.partitionBy(*skey)

@@ -321,11 +321,15 @@ def build_blocks(postings: DataFrame, head_terms: list[str], avgdl: float,
     bucket-partitioned by term — and shard = doc_id // salt_shard_docs is
     monotonic in doc_id within a term, so file order IS (term, shard,
     doc_id) order. The encoder consumes the scan directly: ZERO exchange,
-    zero sort of posting rows. A run split across Arrow batches (or file
-    splits of oversized buckets) yields an extra smaller block; the block
-    counter carries across batches within a task, so (term, shard,
-    block_id) stays unique per task. (WAND orders by (shard, doc_min),
-    never block_id.)
+    zero sort of posting rows. The scan keeps Spark's default file
+    packing (about one task per core): a task that reads several bucket
+    files back to back still sees whole (term, shard) runs, because
+    term → bucket is a function — runs from different files never share
+    a term, so every file boundary is also a run boundary. A run split
+    across Arrow batches (or file splits of oversized buckets) yields an
+    extra smaller block; the block counter carries across batches within
+    a task, so (term, shard, block_id) stays unique per task. (WAND
+    orders by (shard, doc_min), never block_id.)
     """
     block_size = cfg.block_size
     shard_docs = cfg.salt_shard_docs
@@ -349,48 +353,26 @@ def build_blocks(postings: DataFrame, head_terms: list[str], avgdl: float,
 
 
 @contextmanager
-def one_task_per_file(spark, enabled: bool = True):
-    """Scope two encode-scan tunings around a blocks action:
-
-    - spark.sql.files.openCostInBytes → 1 GiB (only when enabled, i.e.
-      the presorted exchange-free path) so the encode gets one scan task
-      per bucket file — the default packing would bin the small bucket
-      files into a few tasks, collapsing encode parallelism to well
-      below the bucket count. Oversized files (> maxPartitionBytes)
-      still split — benign, see build_blocks.
-    - spark.sql.execution.arrow.maxRecordsPerBatch → 65536 (both paths):
-      the encoder is a streaming mapInArrow whose per-batch overheads
-      (Python round-trip, run-boundary carry, RecordBatch assembly of 11
-      output arrays) and batch-split partial blocks both shrink with
-      fewer, larger batches; 64Ki rows of (term, i64, 2×i32) is a few MB
-      per batch — far under worker memory at any scale.
-
-    No-op on the open cost when enabled=False so callers can gate on the
-    manifest's file_sorted flag without branching.
+def large_arrow_batches(spark):
+    """Scope spark.sql.execution.arrow.maxRecordsPerBatch → 65536 around a
+    blocks action: the encoder is a streaming mapInArrow whose per-batch
+    overheads (Python round-trip, run-boundary carry, RecordBatch
+    assembly of 11 output arrays) and batch-split partial blocks both
+    shrink with fewer, larger batches; 64Ki rows of (term, i64, 2×i32)
+    is a few MB per batch — far under worker memory at any scale.
 
     Cross-talk caveat (same class as the build-scoped AQE toggle,
-    plans/build.py): the confs are session-wide, so a query racing the
-    blocks write in the SAME session plans with them — inflated open
-    cost means a many-small-files table briefly plans one task per file
-    (more tasks, correct results); the batch size only changes Arrow
-    transfer granularity. Other sessions of the SparkContext are
+    plans/build.py): the conf is session-wide, so a query racing the
+    blocks write in the SAME session plans with it — it only changes
+    Arrow transfer granularity. Other sessions of the SparkContext are
     unaffected."""
-    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old_batch = spark.conf.get(batch_key, "10000")
-    spark.conf.set(batch_key, "65536")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, "10000")
+    spark.conf.set(key, "65536")
     try:
-        if not enabled:
-            yield
-            return
-        key = "spark.sql.files.openCostInBytes"
-        old = spark.conf.get(key, "4194304")
-        spark.conf.set(key, str(1 << 30))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, old)
+        yield
     finally:
-        spark.conf.set(batch_key, old_batch)
+        spark.conf.set(key, old)
 
 
 def encode_block_batches(batches, block_size: int, avgdl: float,

@@ -474,8 +474,9 @@ class IvfPqIndex:
         shortcut would append to exactly the half-built index this
         refusal guards against, and disk is the source of truth for
         what the on-disk codes were encoded with."""
-        self.coarse, self.codebooks = None, None
-        self._meta()  # reads + param-checks the sidecar (raises if none)
+        # read + param-check into locals first: a refused append (no
+        # sidecar, param mismatch) leaves the in-memory quantizers as they were
+        self.coarse, self.codebooks = self._read_sidecar()
         self._encode_write(df, vec_col, id_col, mode="append")
         return self
 
@@ -532,8 +533,14 @@ class IvfPqIndex:
            .parquet(self.path))
 
     def _meta(self) -> tuple[list[list[float]], list[list[list[float]]]]:
-        if self.coarse is not None and self.codebooks is not None:
-            return self.coarse, self.codebooks
+        if self.coarse is None or self.codebooks is None:
+            self.coarse, self.codebooks = self._read_sidecar()
+        return self.coarse, self.codebooks
+
+    def _read_sidecar(self) -> tuple[list[list[float]],
+                                     list[list[list[float]]]]:
+        """The committed quantizers from disk, param-checked; raises
+        without a sidecar or on a param mismatch. Never mutates self."""
         import json
         import os
 
@@ -551,8 +558,7 @@ class IvfPqIndex:
                 f"IVF-PQ index params {on_disk} != requested {mine}: codes "
                 "are incomparable. Rebuild or reopen with the on-disk "
                 "parameters.")
-        self.coarse, self.codebooks = meta["coarse"], meta["codebooks"]
-        return self.coarse, self.codebooks
+        return meta["coarse"], meta["codebooks"]
 
     def ann_topk(self, query_vec: list[float], k: int = 10,
                  n_probe: int = 1, exclude_id=None,

@@ -402,7 +402,7 @@ class IndexBuilder:
         either snapshot of an in-flight commit, and encoding them would
         bake that ambiguity into committed blocks."""
         from ..config import committer_v2
-        from ..operators.postings import build_blocks, one_task_per_file
+        from ..operators.postings import build_blocks, large_arrow_batches
         from ..streaming.incremental import has_pending_delta
 
         if has_pending_delta(self.io):
@@ -437,7 +437,7 @@ class IndexBuilder:
                 if not presorted:
                     blocks = blocks.repartition(cfg.term_buckets,
                                                 "term_bucket")
-                with one_task_per_file(self.spark, presorted):
+                with large_arrow_batches(self.spark):
                     res = self.io.overwrite_partitions(
                         blocks, "blocks", "term_bucket",
                         list(range(cfg.term_buckets)),
@@ -463,7 +463,7 @@ class IndexBuilder:
         """Compressed posting blocks (operators/postings.py): delta+varint,
         block-max metadata, range-sharded head terms. Runs after stats so
         avgdl is available for the idf-independent block-max factor."""
-        from ..operators.postings import build_blocks, one_task_per_file
+        from ..operators.postings import build_blocks, large_arrow_batches
 
         cfg = self.cfg
         postings = self.io.read("postings")
@@ -487,10 +487,13 @@ class IndexBuilder:
         # monotonic in doc_id within a term, so the encoder can consume
         # the scan directly — the build's THIRD postings-sized shuffle
         # (repartition by (term, shard)) disappears; only the tiny
-        # encoded-blocks frame is ever sorted. Scale notes: a bucket file
-        # larger than maxPartitionBytes splits across tasks mid-run —
-        # blocks stay disjoint/valid (each split encodes its rows as
-        # fresh runs), you just get one short block per split, so raise
+        # encoded-blocks frame is ever sorted. Encode parallelism is the
+        # scan's default file packing (~one task per core): a task may
+        # read several bucket files, which never share a term, so runs
+        # stay whole (build_blocks). Scale notes: a bucket file larger
+        # than maxPartitionBytes splits across tasks mid-run — blocks
+        # stay disjoint/valid (each split encodes its rows as fresh
+        # runs), you just get one short block per split, so raise
         # term_buckets with corpus size. Legacy tables without the flag
         # keep the repartition path.
         pex = (self.io.read_manifest("postings") or {}).get("extra", {})
@@ -502,12 +505,7 @@ class IndexBuilder:
         if not presorted:
             blocks = blocks.repartition(cfg.term_buckets, "term_bucket")
 
-        # presorted: encode parallelism = scan task count, and the default
-        # file packing would bin all the small bucket files into a few
-        # tasks — one_task_per_file scopes a large open cost around the
-        # write action so each bucket file is its own encode task (the
-        # same parallelism the repartition path had).
-        with one_task_per_file(self.spark, presorted):
+        with large_arrow_batches(self.spark):
             return self.io.write_stage(
                 blocks, "blocks", partition_by=["term_bucket"],
                 sort_by=["term", "shard", "doc_min"],

@@ -297,8 +297,9 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
         # contract (the newp sort above leads with term_bucket), so the
         # exchange-free encoder applies here exactly as in the full
         # build's _stage_blocks — the rewritten buckets' postings are
-        # scanned straight into the encoder, never shuffled.
-        from ..operators.postings import build_blocks, one_task_per_file
+        # scanned straight into the encoder, never shuffled (default file
+        # packing; see build_blocks for why packed bucket files are safe).
+        from ..operators.postings import build_blocks, large_arrow_batches
 
         terms_tbl = io.read("terms")
         head = [r["term"] for r in
@@ -315,7 +316,7 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
             "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
         if not presorted:
             newb = newb.repartition(len(buckets), "term_bucket")
-        with one_task_per_file(spark, presorted):
+        with large_arrow_batches(spark):
             report["blocks"] = io.overwrite_partitions(
                 newb, "blocks", "term_bucket", buckets,
                 sort_by=["term", "shard", "doc_min"],

@@ -492,3 +492,20 @@ def test_ivfpq_append_refuses_uncommitted_or_mismatched(spark, emb,
     assert built.coarse is not None
     with pytest.raises(ValueError, match="sidecar"):
         built.append(emb)
+
+
+def test_ivfpq_refused_append_keeps_quantizers(spark, emb, tmp_path_factory):
+    """A refused append (no committed sidecar) must leave the object's
+    in-memory quantizers intact, so a caller can still retry a failed
+    build with build(df, coarse=obj.coarse, codebooks=obj.codebooks)."""
+    import os
+
+    from searchengine_spark.operators.similarity import IvfPqIndex
+
+    path = str(tmp_path_factory.mktemp("ann") / "pq_keep")
+    built = IvfPqIndex(spark, path, dim=64, m=16).build(emb, train_iter=2)
+    coarse, books = built.coarse, built.codebooks
+    os.remove(os.path.join(path, "_pq_meta.json"))
+    with pytest.raises(ValueError, match="sidecar"):
+        built.append(emb)
+    assert built.coarse == coarse and built.codebooks == books

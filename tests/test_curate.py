@@ -231,3 +231,25 @@ def test_percentile_routes_agree_randomized(spark, rows, top_frac):
     w = _pct_rows(spark, data, top_frac, "window")
     h = _pct_rows(spark, data, top_frac, "histogram")
     assert h == w, (top_frac, rows)
+
+
+def test_percentile_histogram_integer_strata_under_ansi(spark):
+    """Integer strata (e.g. lang ids, NULL for failed lang-id) work on the
+    histogram route under ANSI mode and agree with the window route."""
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        rows = [(i, "w " * (i % 5 + 1), i % 3 if i % 7 else None)
+                for i in range(40)]
+        data = spark.createDataFrame(rows,
+                                     "doc_id long, text string, lang int")
+        from searchengine_spark.operators.curate import \
+            quality_percentile_filter
+        got = {m: sorted((r["doc_id"], r["n_tokens"]) for r in
+                         quality_percentile_filter(data, top_frac=0.5,
+                                                   method=m).collect())
+               for m in ("window", "histogram")}
+    finally:
+        spark.conf.set(key, old)
+    assert got["histogram"] == got["window"] and got["window"]

@@ -8,6 +8,7 @@ config — an index built with term_buckets=8 queried under a cfg that says
 """
 
 import shutil
+from contextlib import contextmanager
 
 import pytest
 
@@ -266,3 +267,203 @@ def test_overwrite_partitions_crash_safety(spark, tmp_path):
     assert got.filter(F.col("pk") == 1).count() == 5
     # directory agrees after the commit's trailing vacuum
     assert spark.read.parquet(io.path("t")).count() == 80
+
+
+BLOCKS_GROUP = "blocks-stage-packing"
+
+
+@contextmanager
+def _job_group(sc, group: str):
+    """Run the block's Spark jobs (on this thread) in a job group, so
+    statusTracker can count them."""
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture(scope="module")
+def packed_build(spark, tmp_path_factory):
+    """A small default-layout (64 term buckets) build whose blocks stage
+    runs in its own Spark job group. Never warmed: a cached postings
+    table would hide the scan's file packing from the tests below."""
+    from searchengine_spark.plans.build import IndexBuilder
+
+    sc = spark.sparkContext
+    stage_blocks = IndexBuilder._stage_blocks
+
+    def in_group(self):
+        with _job_group(sc, BLOCKS_GROUP):
+            return stage_blocks(self)
+
+    work = str(tmp_path_factory.mktemp("packed_work"))
+    eng = SearchEngine(spark, work)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(IndexBuilder, "_stage_blocks", in_group)
+        eng.build_index(gen_pages_spark(spark, 60, partitions=4))
+    yield eng
+    shutil.rmtree(work, ignore_errors=True)
+
+
+def test_blocks_write_packs_bucket_files(spark, packed_build):
+    """The blocks stage of a build runs its write with fewer tasks than
+    there are postings bucket files (default file packing, ~one task per
+    core, instead of one task per file)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tasks = [tracker.getStageInfo(s).numTasks
+             for j in tracker.getJobIdsForGroup(BLOCKS_GROUP)
+             for s in tracker.getJobInfo(j).stageIds]
+    n_files = len(packed_build.io.read_manifest("postings")["files"])
+    assert n_files > sc.defaultParallelism and tasks
+    assert max(tasks) < n_files, (tasks, n_files)
+
+
+def test_packed_blocks_match_one_file_per_task(spark, packed_build):
+    """The exchange-free encoder reads the postings scan with Spark's
+    default file packing, several bucket files to a task. Bucket files
+    never share a term, so every file boundary is a run boundary and the
+    blocks equal a one-file-per-task encoding on every column but
+    block_id."""
+    from searchengine_spark.operators.postings import (build_blocks,
+                                                       large_arrow_batches)
+
+    eng = packed_build
+    stats = eng.io.read_meta("stats")
+    head = eng.io.read_manifest("blocks")["extra"]["head_terms"]
+    n_files = len(eng.io.read_manifest("postings")["files"])
+
+    def encode():
+        blocks = build_blocks(eng.io.read("postings"), head, stats["avgdl"],
+                              eng.cfg, presorted=True)
+        with large_arrow_batches(spark):
+            rows = blocks.drop("block_id").collect()
+            return (blocks.rdd.getNumPartitions(),
+                    sorted(tuple(r) for r in rows))
+
+    packed_tasks, packed = encode()
+    # a huge per-file open cost makes every bucket file its own scan task
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    try:
+        single_tasks, single = encode()
+    finally:
+        spark.conf.set(key, old)
+    assert single_tasks == n_files
+    assert packed_tasks < n_files
+    assert packed == single
+    # and the stage the build committed is that same packed encoding
+    table = eng.io.read("blocks").drop("term_bucket", "block_id")
+    assert sorted(tuple(r) for r in table.collect()) == packed
+
+
+DISCOVERY_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _wide_table(spark, work) -> TableIO:
+    """A 40-file table: more files than Spark's parallel-listing
+    threshold (32)."""
+    from pyspark.sql import functions as F
+
+    io = TableIO(spark, work)
+    df = spark.range(0, 400).select(
+        F.col("id").alias("v"), (F.col("id") % 40).cast("int").alias("pk"))
+    io.write_stage(df.repartition(40, "pk"), "t", partition_by=["pk"])
+    assert len(io.read_manifest("t")["files"]) == 40
+    return io
+
+
+def test_read_lists_pinned_files_on_driver(spark, tmp_path):
+    """A manifest-pinned read of a table with more files than the
+    parallel-listing threshold starts at most one Spark job (the schema
+    read, no distributed listing job) and leaves the session's threshold
+    as it found it — on success and on every failure path."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    key = DISCOVERY_KEY
+    sc = spark.sparkContext
+    io = _wide_table(spark, str(tmp_path / "wide"))
+
+    before = spark.conf.get(key, None)
+    group = "tableio-read-listing"
+    with _job_group(sc, group):
+        t = io.read("t")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert spark.conf.get(key, None) == before
+    assert t.count() == 400
+    assert t.filter(F.col("pk") == 3).count() == 10
+
+    # an explicit session value survives too
+    spark.conf.set(key, "7")
+    try:
+        io.read("t")
+        assert spark.conf.get(key) == "7"
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+    mpath = io._manifest_path("t")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    files = manifest["files"]
+    # a listed file that is not parquet: the read raises inside Spark
+    bogus = os.path.join(io.path("t"), "pk=0", "not-parquet.parquet")
+    with open(bogus, "w") as f:
+        f.write("garbage")
+    manifest["files"] = [{"path": os.path.relpath(bogus, io.work_dir),
+                          "rows": 0, "bytes": 7}]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(Exception):
+        io.read("t")
+    assert spark.conf.get(key, None) == before
+
+    # a listed file missing on disk: the strictness check raises
+    os.remove(bogus)
+    manifest["files"] = files + manifest["files"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(RuntimeError, match="missing"):
+        io.read("t")
+    assert spark.conf.get(key, None) == before
+
+
+def test_concurrent_reads_restore_discovery_threshold(spark, tmp_path):
+    """Reads from several threads at once (the build's concurrent
+    branches do this) must not leave another reader's raised threshold
+    behind in the session."""
+    import sys
+    import threading
+
+    io = _wide_table(spark, str(tmp_path / "wide"))
+    before = spark.conf.get(DISCOVERY_KEY, None)
+    errors: list[BaseException] = []
+
+    def reader():
+        try:
+            for _ in range(3):
+                io.read("t")
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert spark.conf.get(DISCOVERY_KEY, None) == before
