@@ -42,10 +42,8 @@ def make_spark(cpus: int):
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("searchengine-spark-bench")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        # SPARK_GRAFT_AQE controls the QUERY-side session setting here;
-        # builds ignore the session value (IndexBuilder scopes AQE to
-        # cfg.build_adaptive), so engine_config() below must wire the
-        # same env var into build_adaptive or the A/B's build arm is inert
+        # SPARK_GRAFT_AQE controls the QUERY-side session setting only;
+        # builds always run with AQE off (IndexBuilder.build)
         .config("spark.sql.adaptive.enabled",
                 os.environ.get("SPARK_GRAFT_AQE", "true"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -54,20 +52,6 @@ def make_spark(cpus: int):
     for k, v in recommended_spark_conf().items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def engine_config():
-    """EngineConfig for bench builds. SPARK_GRAFT_AQE also drives the
-    build-scoped AQE toggle — IndexBuilder force-sets
-    spark.sql.adaptive.enabled to cfg.build_adaptive around every build,
-    so setting only the session conf would leave the A/B's build arm
-    always-off (the measured 13-17% delta would be unreproducible)."""
-    from searchengine_spark.config import EngineConfig
-
-    aqe = os.environ.get("SPARK_GRAFT_AQE")
-    if aqe is None:
-        return EngineConfig()
-    return EngineConfig(build_adaptive=aqe.strip().lower() == "true")
 
 
 HEADLINE = [
@@ -146,6 +130,7 @@ def bench_index_build(spark, tmp: str,
                       n_docs: int = int(os.environ.get(
                           "SPARK_GRAFT_BENCH_DOCS", "20000"))) -> dict:
     """End-to-end: synthetic corpus -> build index -> query p95."""
+    from searchengine_spark.config import EngineConfig
     from searchengine_spark.plans.build import IndexBuilder
     from searchengine_spark.plans.query import QueryEngine
     from searchengine_spark.sources.corpus import gen_pages_spark
@@ -156,7 +141,7 @@ def bench_index_build(spark, tmp: str,
     gen_pages_spark(spark, n_docs=n_docs, seed=42).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     io = TableIO(spark, tmp)
-    cfg = engine_config()
+    cfg = EngineConfig()
     t0 = time.monotonic()
     IndexBuilder(spark, io, cfg).build(pages)
     build_s = time.monotonic() - t0

@@ -60,7 +60,7 @@ def _cpu_stat() -> tuple[int, int]:
 def run_level(cpus: int, n_docs: int) -> dict:
     import tempfile
 
-    from bench import engine_config, make_spark
+    from bench import make_spark
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from searchengine_spark.plans.api import SearchEngine
@@ -70,9 +70,7 @@ def run_level(cpus: int, n_docs: int) -> dict:
     spark = make_spark(cpus)
     try:
         with tempfile.TemporaryDirectory(prefix=f"sescale{cpus}_") as work:
-            # engine_config wires SPARK_GRAFT_AQE into cfg.build_adaptive
-            # (builds ignore the session AQE value)
-            eng = SearchEngine(spark, work, engine_config())
+            eng = SearchEngine(spark, work)
             # materialize the input table first (per input_hint the engine's
             # input IS a table of pages); only the index build is timed
             pages_path = os.path.join(work, "pages")

@@ -60,16 +60,16 @@ def main() -> None:
          "shuffle (names join back post-aggregation on the tiny frame)",
          plan(spark, IndexBuilder(spark, eng.io, eng.cfg)._site_stats_frame(
              eng.io.read("docs"), eng.io.read("postings")))),
-        ("Blocks stage (presorted fast path) — the encoder consumes the "
-         "file-sorted, bucket-partitioned postings scan directly: scan -> "
+        ("Blocks stage — the encoder consumes the file-sorted, "
+         "bucket-partitioned postings scan directly: scan -> "
          "mapInArrow, ZERO Exchange; posting rows are never shuffled or "
-         "re-sorted (postings files are (term, doc_id)-ordered by the "
-         "file_sorted write contract)",
+         "re-sorted (every postings writer keeps files (term, doc_id)-"
+         "ordered)",
          plan(spark, build_blocks(
              eng.io.read("postings"),
              eng.io.read_manifest("blocks")["extra"]["head_terms"],
              eng.io.read_meta("stats")["avgdl"] or 1.0,
-             eng.cfg, presorted=True))),
+             eng.cfg))),
         ("IVF-PQ ADC probe — partition-pruned scan of the probed "
          "centroid lists (PartitionFilters on centroid), score = "
          "Catalyst-only lookup-table adds over the tinyint codes "

@@ -22,10 +22,8 @@ b = (
     SparkSession.builder.master(f"local[{CPUS}]")
     .appName("searchengine-spark-prof")
     .config("spark.sql.shuffle.partitions", str(CPUS))
-    # session AQE only affects the (unprofiled) query side — the build
-    # scopes AQE to cfg.build_adaptive; control it via SPARK_GRAFT_AQE
-    # (wired through bench.engine_config below) so the job census is
-    # labeled truthfully
+    # session AQE only affects the (unprofiled) query side — builds always
+    # run with AQE off (IndexBuilder.build)
     .config("spark.sql.adaptive.enabled",
             os.environ.get("SPARK_GRAFT_AQE", "true"))
     .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -37,10 +35,8 @@ for k, v in recommended_spark_conf().items():
 spark = b.getOrCreate()
 sc = spark.sparkContext
 
-from bench import engine_config  # noqa: E402
-
 with tempfile.TemporaryDirectory(prefix=f"seprof{CPUS}_") as work:
-    eng = SearchEngine(spark, work, engine_config())
+    eng = SearchEngine(spark, work)
     pages_path = os.path.join(work, "pages")
     gen_pages_spark(spark, N_DOCS, partitions=CPUS * 2).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)

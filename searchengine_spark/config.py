@@ -27,26 +27,6 @@ class EngineConfig:
     # postings layout: term-hash buckets (partition pruning at query time);
     # also the write parallelism of the postings/blocks stages
     term_buckets: int = 64
-    # tokenize+lemmatize stage implementation. "python" = vectorized
-    # mapInArrow calling the oracle's code (bit-for-bit reference
-    # semantics): ONE fused pass per batch emitting pre-aggregated
-    # (doc, term, tf) — measured 2-3x faster than the Catalyst variant.
-    # "sql" = pure Catalyst (regexp split + explode + broadcast lexicon
-    # join): zero Python, but the token-level explode must be shuffled and
-    # aggregated where the Arrow path pre-combines in place — measured
-    # slower at every parallelism level (see BENCH/BASELINE.md); kept as
-    # the no-Python-runtime option. Row-identical (test-enforced).
-    tokenizer: str = "python"
-    # AQE during INDEX BUILDS only (queries keep the session's setting).
-    # The build's exchanges are explicit bucket repartitions AQE cannot
-    # coalesce or re-plan, so its only effect there is extra query-stage
-    # job boundaries — each one width-independent driver wall (job
-    # scheduling + re-plan gap) that the N→4N scaling criterion pays in
-    # full. Measured (240k docs, local[32], interleaved same-window A/B,
-    # near-zero steal): AQE on 28.4/31.0 s vs off 24.6/25.7 s — off is
-    # 13–17% faster. Flip to True for builds whose LEGACY fallback join
-    # (pre-site_id postings in _site_stats_frame) meets skewed sites.
-    build_adaptive: bool = False
     # strategy="auto" routing: serve from the driver (pyarrow, no Spark
     # job) while every query term's posting list fits one process
     # (plans/serve.py scale caveat); above it, distributed block-max WAND
@@ -86,7 +66,7 @@ def committer_v2(spark):
     is NOT picked up by newHadoopConf() in this Spark build (verified),
     so the knob is set on sc.hadoopConfiguration and restored on exit.
 
-    Cross-talk caveat (same class as the build-scoped AQE toggle in
+    Cross-talk caveat (same class as the build-scoped AQE setting in
     plans/build.py): hadoopConfiguration is context-global — a NON-engine
     write whose job starts inside this window also commits v2. The v2
     trade-off is safe for engine tables (manifest-pinned readers, vacuum;

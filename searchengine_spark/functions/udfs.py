@@ -165,11 +165,13 @@ def lexicon_df(spark) -> DataFrame:
 def tokens_from_docs_sql(docs: DataFrame) -> DataFrame:
     """docs(doc_id, text[, site]) -> (doc_id, term, tf, dl[, site_id]):
     the all-Catalyst twin of tokens_from_docs — zero Python in the hot
-    path. site_id (when `site` is present) is the same Spark-side
-    xxhash64, so the twins stay row-identical; here it rides the one
-    doc_id exchange at token grain (+8 B/occurrence — the Arrow twin
-    pays it only at (doc, term) grain, one reason it stays the
-    measurement-pinned default).
+    path. No engine path calls it: the build and the upsert both use
+    tokens_from_docs, measured 2–4.5× faster (the token-level explode is
+    shuffled and aggregated where the Arrow pass pre-combines per
+    document; BENCH/BASELINE.md). It stays as the relational form of the
+    tokenizer behind the driver contract's q_ru_lemma_df. site_id (when
+    `site` is present) is the same Spark-side xxhash64, so the twins stay
+    row-identical; here it rides the one doc_id exchange at token grain.
 
     Tokenization is the reference regex (LemmaSearch.java:35-36) as native
     expressions: lower -> regexp_replace('[^а-я\\s]','') -> trim -> split

@@ -25,9 +25,9 @@ a full stopword posting list. Because sharding is by doc RANGE (not hash
 salt), per-shard block streams are disjoint and ordered — global posting
 order needs zero merge pass, and shard boundaries align with the WAND
 range partitioning (range = shard width). block_id is sequential within
-a (term, shard) run PER ENCODE TASK only: on the presorted path a bucket
-file larger than maxPartitionBytes splits mid-run and each split restarts
-the counter, so (term, shard, block_id) is NOT a global key — no engine
+a (term, shard) run PER ENCODE TASK only: a bucket file larger than
+maxPartitionBytes splits mid-run and each split restarts the counter,
+so (term, shard, block_id) is NOT a global key — no engine
 path uses it as one (WAND and serving order blocks by (shard, doc_min);
 block ranges stay disjoint either way). Consumers must never rely on
 block_id beyond per-task ordering.
@@ -41,10 +41,11 @@ two are byte-identical by construction and test.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
@@ -135,6 +136,11 @@ def bm25_tfpart(tf: float, dl: float, avgdl: float,
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
+def bm25_idf(n_docs: int, df: int) -> float:
+    """The engine's BM25 idf: ln(1 + (N - df + 0.5) / (df + 0.5))."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
 # --- vectorized (numpy) decode — the query-path hot kernels ------------------
 #
 # The per-row Python loops these replace were the documented slow path of
@@ -210,12 +216,24 @@ def np_decode_posting_block(docs_bin: bytes, tfs_bin: bytes, dls_bin: bytes):
 
 
 def np_bm25_tfpart(tf, dl, avgdl: float, k1: float = 1.2, b: float = 0.75):
-    """Vectorized idf-independent BM25 factor over posting arrays.
-    Operation order mirrors the scalar bm25_tfpart exactly ((b·dl)/avgdl,
-    not b·(dl/avgdl)) so both paths produce bit-identical doubles."""
-    t = tf.astype("float64")
-    d = dl.astype("float64")
+    """Vectorized idf-independent BM25 factor over posting arrays (or
+    scalars). Operation order mirrors the scalar bm25_tfpart exactly
+    ((b·dl)/avgdl, not b·(dl/avgdl)) so both paths produce bit-identical
+    doubles."""
+    import numpy as np
+
+    t = np.asarray(tf, dtype="float64")
+    d = np.asarray(dl, dtype="float64")
     return t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * d / avgdl))
+
+
+def bm25_tfpart_col(tf: Column, dl: Column, avgdl: float,
+                    k1: float, b: float) -> Column:
+    """np_bm25_tfpart as a Catalyst expression, same operation order —
+    the Spark paths' BM25 term factor (times idf for the term score)."""
+    return (tf * F.lit(k1 + 1.0)
+            / (tf + F.lit(k1) * (F.lit(1.0 - b)
+                                 + F.lit(b) * dl / F.lit(avgdl))))
 
 
 def np_intersect_score_blocks(per_term_blocks, term_order, idf,
@@ -301,35 +319,29 @@ BLOCKS_SCHEMA = StructType([
 
 
 def build_blocks(postings: DataFrame, head_terms: list[str], avgdl: float,
-                 cfg: EngineConfig, n_partitions: int | None = None,
-                 presorted: bool = False) -> DataFrame:
+                 cfg: EngineConfig) -> DataFrame:
     """postings(term, doc_id, tf, dl) -> compressed block rows.
 
     head_terms: terms with df > cfg.salt_df_threshold (collected driver-side
     from the `terms` stage — a handful of stopwords even at web scale; goes
     out as a broadcast-able isin literal).
 
-    Physical plan, presorted=False: ONE sort-shuffle on (term, shard)
-    co-locates and orders each posting run, then a streaming `mapInArrow`
-    encoder cuts blocks at run boundaries — no per-group pandas
-    materialization (an early applyInPandas version spent more time
-    building per-term DataFrames than encoding).
-
-    presorted=True (the full-build fast path, gated on the postings
-    manifest's file_sorted flag): the input is a scan of the postings
-    table whose every FILE is already (term, doc_id)-ordered and
+    The input must arrive in (term, doc_id) order within each task, with
+    every term's postings in one task — a scan of the postings table
+    gives exactly that: every FILE is (term, doc_id)-ordered and
     bucket-partitioned by term — and shard = doc_id // salt_shard_docs is
     monotonic in doc_id within a term, so file order IS (term, shard,
-    doc_id) order. The encoder consumes the scan directly: ZERO exchange,
-    zero sort of posting rows. The scan keeps Spark's default file
-    packing (about one task per core): a task that reads several bucket
-    files back to back still sees whole (term, shard) runs, because
-    term → bucket is a function — runs from different files never share
-    a term, so every file boundary is also a run boundary. A run split
-    across Arrow batches (or file splits of oversized buckets) yields an
-    extra smaller block; the block counter carries across batches within
-    a task, so (term, shard, block_id) stays unique per task. (WAND
-    orders by (shard, doc_min), never block_id.)
+    doc_id) order. The streaming `mapInArrow` encoder consumes the scan
+    directly and cuts blocks at run boundaries: ZERO exchange, zero sort
+    of posting rows. The scan keeps Spark's default file packing (about
+    one task per core): a task that reads several bucket files back to
+    back still sees whole (term, shard) runs, because term → bucket is a
+    function — runs from different files never share a term, so every
+    file boundary is also a run boundary. A run split across Arrow
+    batches (or file splits of oversized buckets) yields an extra smaller
+    block; the block counter carries across batches within a task, so
+    (term, shard, block_id) stays unique per task. (WAND orders by
+    (shard, doc_min), never block_id.)
     """
     block_size = cfg.block_size
     shard_docs = cfg.salt_shard_docs
@@ -344,12 +356,9 @@ def build_blocks(postings: DataFrame, head_terms: list[str], avgdl: float,
     def encode_stream(batches):
         yield from encode_block_batches(batches, block_size, avgdl, k1, b)
 
-    src = postings.select("term", "doc_id", "tf", "dl").withColumn("shard", shard)
-    if not presorted:
-        n_parts = n_partitions or cfg.term_buckets
-        src = (src.repartition(n_parts, "term", "shard")
-               .sortWithinPartitions("term", "shard", "doc_id"))
-    return src.mapInArrow(encode_stream, schema=BLOCKS_SCHEMA)
+    return (postings.select("term", "doc_id", "tf", "dl")
+            .withColumn("shard", shard)
+            .mapInArrow(encode_stream, schema=BLOCKS_SCHEMA))
 
 
 @contextmanager

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .postings import bm25_idf, bm25_tfpart_col
 from .textstats import doc_frequencies, term_frequencies, tokens
 
 BM25_K1 = 1.2
@@ -103,8 +104,6 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
         than a (doc_id, term)-wide shuffle), AND filter, BM25 as a pure
         column expression, orderBy+limit => TakeOrderedAndProject.
     N (all docs, incl. token-less) is a column-pruned count of `docs`."""
-    import math
-
     # dedupe while preserving order: a duplicated query term must count
     # once (the old count_distinct==|Q| AND filter returned no rows for
     # dup lists; the per-term column form would double-count its score) —
@@ -128,8 +127,7 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
                       for i in range(len(query_terms))])
                .collect()[0])
     avgdl = float(scal["avgdl"] or 1.0)
-    idf = [math.log(1.0 + (n - float(scal[f"df{i}"] or 0.0) + 0.5)
-                    / (float(scal[f"df{i}"] or 0.0) + 0.5))
+    idf = [bm25_idf(n, float(scal[f"df{i}"] or 0.0))
            for i in range(len(query_terms))]
 
     per_doc = (tok.groupBy("doc_id")
@@ -147,11 +145,10 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
             c = F.col(f"tf{i}") > 0
             present = c if present is None else present | c
         matched = matched.filter(present)
-    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
     score = None
     for i in range(len(query_terms)):
-        part = (F.lit(idf[i]) * F.col(f"tf{i}") * F.lit(k1 + 1.0)
-                / (F.col(f"tf{i}") + norm))
+        part = F.lit(idf[i]) * bm25_tfpart_col(F.col(f"tf{i}"), F.col("dl"),
+                                               avgdl, k1, b)
         score = part if score is None else score + part
     return (matched.select("doc_id", score.alias("score"))
                    .orderBy(F.col("score").desc(), F.col("doc_id").asc())

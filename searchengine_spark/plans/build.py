@@ -33,10 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
-from ..functions.udfs import (extract_docs, tokens_from_docs,
-                              tokens_from_docs_sql, url_bucket_col)
+from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import attach_doc_ids, compute_bucket_offsets
-from ..sources.tableio import TableIO
+from ..sources.tableio import TableIO, check_format_version
 
 STAGES = ["docs", "postings", "terms", "stats", "site_stats", "blocks"]
 
@@ -45,6 +44,12 @@ def term_bucket_col(term_col, n_buckets: int):
     """Partition key for the postings layout — same md5 spec as doc buckets
     so the oracle/tests can reproduce it."""
     return url_bucket_col(term_col, n_buckets)
+
+
+def term_bucket(term: str, n_buckets: int) -> int:
+    """term_bucket_col for one term, driver-side (query-time pruning)."""
+    import hashlib
+    return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % n_buckets
 
 
 class IndexBuilder:
@@ -70,19 +75,26 @@ class IndexBuilder:
         success, FAILED + error on abort/exception — and the interrupted
         stage gets an `aborted` manifest so resume knows where to restart."""
         report: dict[str, dict] = {}
-        if not resume:
+        if resume:
+            check_format_version(self.io)
+        else:
             self.io.invalidate_from(STAGES, STAGES[0])
 
-        # build-scoped AQE setting (cfg.build_adaptive — see config.py for
-        # the measurement); session value restored on every exit path.
-        # Conf is session-wide, so a query racing an async build sees the
-        # build's setting — plans stay correct either way, only stage
-        # boundaries differ.
+        # AQE is off during builds (queries keep the session's setting).
+        # The build's exchanges are explicit bucket repartitions AQE cannot
+        # coalesce or re-plan, so its only effect here is extra query-stage
+        # job boundaries — each one width-independent driver wall (job
+        # scheduling + re-plan gap). Measured (240k docs, local[32],
+        # interleaved same-window A/B, near-zero steal): AQE on 28.4/31.0 s
+        # vs off 24.6/25.7 s — off is 13–17% faster. The session value is
+        # restored on every exit path; conf is session-wide, so a query
+        # racing an async build sees the build's setting — plans stay
+        # correct either way, only stage boundaries differ.
         from ..config import committer_v2
 
         aqe_key = "spark.sql.adaptive.enabled"
         aqe_old = self.spark.conf.get(aqe_key, "true")
-        self.spark.conf.set(aqe_key, str(self.cfg.build_adaptive).lower())
+        self.spark.conf.set(aqe_key, "false")
         try:
             # committer v2 scoped the same way (engine-owned write phase;
             # measured −14% build wall — see config.committer_v2)
@@ -215,16 +227,13 @@ class IndexBuilder:
                            "url_bucket")
         return self.io.write_stage(
             docs, "docs", partition_by=["url_bucket"], sort_by=["doc_id"],
-            extra={"doc_id_buckets": n_b, "url_bucket_partitioned": True},
+            extra={"doc_id_buckets": n_b},
         )
 
     def _stage_postings(self):
-        docs = self.io.read("docs")
         cfg = self.cfg
-        tokens = (tokens_from_docs_sql(docs) if cfg.tokenizer == "sql"
-                  else tokens_from_docs(docs))
         postings = (
-            tokens
+            tokens_from_docs(self.io.read("docs"))
             .withColumn("term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
             # co-locate each term's postings; sort_by lays files out as
             # (term, doc_id)-ordered runs for the exchange-free block
@@ -235,11 +244,7 @@ class IndexBuilder:
         return self.io.write_stage(
             postings, "postings", partition_by=["term_bucket"],
             sort_by=["term", "doc_id"],
-            # file_sorted: every file of this table is internally ordered
-            # by (term, doc_id) — the blocks stage reads it exchange-free
-            # (encoder consumes file-ordered runs directly). Writers that
-            # do not maintain the discipline must null the flag.
-            extra={"term_buckets": cfg.term_buckets, "file_sorted": True},
+            extra={"term_buckets": cfg.term_buckets},
         )
 
     def _stage_terms(self):
@@ -291,10 +296,10 @@ class IndexBuilder:
         t0 = time.monotonic()
         # row counts already recorded in the stage manifests (parquet
         # footers) — no extra count job; corpus totals were observed on the
-        # terms write job (zero extra jobs). Fallback for a resume from a
-        # terms manifest predating the observed totals (or a crash between
-        # the terms write and its manifest re-commit): one small agg over
-        # the tiny terms table — never a re-scan of the postings fact table.
+        # terms write job (zero extra jobs). Fallback for terms rewritten by
+        # an upsert (which nulls the totals) or a crash between the terms
+        # write and its manifest re-commit: one small agg over the tiny
+        # terms table — never a re-scan of the postings fact table.
         n_docs = self.io.read_manifest("docs")["rows"]
         tex = (self.io.read_manifest("terms") or {}).get("extra", {})
         # totals are nulled (not removed) by incremental terms rewrites —
@@ -332,36 +337,22 @@ class IndexBuilder:
         the -1 pages rows) — the same partition-overwrite discipline as
         postings/terms. buckets=None computes every bucket (full build).
 
-        Plan shape: postings built by this code carry site_id =
-        xxhash64(site) (an 8-byte int attached BEFORE the wide shuffle,
-        functions/udfs.py — 64-bit collisions over even 10^8 sites are
-        ~birthday 2^-16, and a collision only merges two sites' counts),
-        so the lemma counts are ONE aggregation over a column-pruned
-        (site_id, term) scan of postings — no postings-sized join, no
-        docs scan, and the site STRING never rides any shuffle: names
-        join back AFTER aggregation on the tiny (site_id, bucket) frame.
-
-        Legacy fallback (postings written before site_id existed): the
-        old postings⋈doc_sites join, hinted shuffle-hash (int keys, no
-        sort-merge sort of the posting rows — measured 2.5× at 480k docs
-        where AQE's broadcast cutoff tips the unhinted plan into SMJ)."""
+        Plan shape: postings carry site_id = xxhash64(site) (an 8-byte
+        int attached BEFORE the wide shuffle, functions/udfs.py — 64-bit
+        collisions over even 10^8 sites are ~birthday 2^-16, and a
+        collision only merges two sites' counts), so the lemma counts are
+        ONE aggregation over a column-pruned (site_id, term) scan of
+        postings — no postings-sized join, no docs scan, and the site
+        STRING never rides any shuffle: names join back AFTER aggregation
+        on the tiny (site_id, bucket) frame."""
         site_names = (docs.select("site").distinct()
                       .withColumn("site_id", F.xxhash64("site")))
         if buckets is not None:
             postings = postings.filter(F.col("term_bucket").isin(buckets))
-        if "site_id" in postings.columns:
-            lem_ids = (postings.select("site_id", "term_bucket", "term")
-                       .groupBy("site_id", "term_bucket")
-                       .agg(F.count_distinct("term").cast("long")
-                            .alias("lemmas")))
-        else:
-            doc_sites = docs.select("doc_id",
-                                    F.xxhash64("site").alias("site_id"))
-            lem_ids = (postings.select("doc_id", "term_bucket", "term")
-                       .join(doc_sites.hint("shuffle_hash"), "doc_id")
-                       .groupBy("site_id", "term_bucket")
-                       .agg(F.count_distinct("term").cast("long")
-                            .alias("lemmas")))
+        lem_ids = (postings.select("site_id", "term_bucket", "term")
+                   .groupBy("site_id", "term_bucket")
+                   .agg(F.count_distinct("term").cast("long")
+                        .alias("lemmas")))
         lem = (lem_ids.join(site_names, "site_id")
                .select("site", "term_bucket",
                        F.lit(0).cast("long").alias("pages"), "lemmas"))
@@ -374,10 +365,9 @@ class IndexBuilder:
     def _stage_site_stats(self):
         """A4/C5 precompute: per-site page + distinct-lemma counts, built
         once here so statistics() reads a tiny table instead of scanning
-        postings per call. Default plan is join-free: postings carry
-        site_id, so this is one column-pruned (site_id, term) aggregation
-        (see _site_stats_frame; the postings⋈docs join survives only as
-        the legacy fallback for pre-site_id tables)."""
+        postings per call. The plan is join-free: postings carry site_id,
+        so this is one column-pruned (site_id, term) aggregation (see
+        _site_stats_frame)."""
         frame = (self._site_stats_frame(self.io.read("docs"),
                                         self.io.read("postings"))
                  .repartition(self.cfg.term_buckets + 1, "term_bucket"))
@@ -402,7 +392,7 @@ class IndexBuilder:
         either snapshot of an in-flight commit, and encoding them would
         bake that ambiguity into committed blocks."""
         from ..config import committer_v2
-        from ..operators.postings import build_blocks, large_arrow_batches
+        from ..operators.postings import large_arrow_batches
         from ..streaming.incremental import has_pending_delta
 
         if has_pending_delta(self.io):
@@ -419,24 +409,8 @@ class IndexBuilder:
         self.write_status("INDEXING", stage="blocks_refresh")
         try:
             with committer_v2(self.spark):
-                postings = self.io.read("postings")
-                stats = self.io.read_meta("stats")
-                avgdl = float(stats["avgdl"]) or 1.0
-                head = [r["term"] for r in
-                        self.io.read("terms")
-                            .filter(F.col("df") > cfg.salt_df_threshold)
-                            .select("term").collect()]
-                pex = (self.io.read_manifest("postings") or {}) \
-                    .get("extra", {})
-                presorted = bool(pex.get("file_sorted"))
-                blocks = build_blocks(postings, head, avgdl, cfg,
-                                      presorted=presorted)
-                blocks = blocks.withColumn(
-                    "term_bucket",
-                    term_bucket_col(F.col("term"), cfg.term_buckets))
-                if not presorted:
-                    blocks = blocks.repartition(cfg.term_buckets,
-                                                "term_bucket")
+                blocks, head, avgdl = self._blocks_frame(
+                    self.io.read("postings"))
                 with large_arrow_batches(self.spark):
                     res = self.io.overwrite_partitions(
                         blocks, "blocks", "term_bucket",
@@ -459,20 +433,33 @@ class IndexBuilder:
         self.write_status("INDEXED")
         return res
 
-    def _stage_blocks(self):
-        """Compressed posting blocks (operators/postings.py): delta+varint,
-        block-max metadata, range-sharded head terms. Runs after stats so
-        avgdl is available for the idf-independent block-max factor."""
-        from ..operators.postings import build_blocks, large_arrow_batches
+    def _blocks_frame(self, postings: DataFrame
+                     ) -> tuple[DataFrame, list[str], float]:
+        """Encode a scan of (some buckets of) the postings table into block
+        rows with their term_bucket column, under the current corpus avgdl
+        and head-term set. Returns (blocks, head terms, avgdl); the callers
+        record both in the blocks manifest.
+
+        Exchange-free: postings files are (term, doc_id)-ordered (every
+        writer sorts them so) and shard is monotonic in doc_id within a
+        term, so the encoder consumes the scan directly — only the tiny
+        encoded-blocks frame is ever sorted. Encode parallelism is the
+        scan's default file packing (~one task per core): a task may read
+        several bucket files, which never share a term, so runs stay whole
+        (build_blocks). Scale notes: a bucket file larger than
+        maxPartitionBytes splits across tasks mid-run — blocks stay
+        disjoint/valid (each split encodes its rows as fresh runs), you
+        just get one short block per split, so raise term_buckets with
+        corpus size."""
+        from ..operators.postings import build_blocks
 
         cfg = self.cfg
-        postings = self.io.read("postings")
-        stats = self.io.read_meta("stats")
+        avgdl = float(self.io.read_meta("stats")["avgdl"]) or 1.0
         # head terms (df above salting threshold) are few even at web scale —
         # a bounded driver-side list, observed on the terms write job when
-        # this build produced it. Fallback (resume from a pre-observation
-        # terms manifest, or a threshold change between build and resume):
-        # one small collect over the tiny terms table.
+        # a full build produced it. Fallback (terms rewritten by an upsert,
+        # or a threshold change between build and resume): one small
+        # collect over the tiny terms table.
         tex = (self.io.read_manifest("terms") or {}).get("extra", {})
         if tex.get("head_terms") is not None \
                 and tex.get("head_df_threshold") == cfg.salt_df_threshold:
@@ -482,29 +469,18 @@ class IndexBuilder:
                     self.io.read("terms")
                         .filter(F.col("df") > cfg.salt_df_threshold)
                         .select("term").collect()]
-        # exchange-free path: postings files are already (term, doc_id)-
-        # ordered (file_sorted flag, _stage_postings) and shard is
-        # monotonic in doc_id within a term, so the encoder can consume
-        # the scan directly — the build's THIRD postings-sized shuffle
-        # (repartition by (term, shard)) disappears; only the tiny
-        # encoded-blocks frame is ever sorted. Encode parallelism is the
-        # scan's default file packing (~one task per core): a task may
-        # read several bucket files, which never share a term, so runs
-        # stay whole (build_blocks). Scale notes: a bucket file larger
-        # than maxPartitionBytes splits across tasks mid-run — blocks
-        # stay disjoint/valid (each split encodes its rows as fresh
-        # runs), you just get one short block per split, so raise
-        # term_buckets with corpus size. Legacy tables without the flag
-        # keep the repartition path.
-        pex = (self.io.read_manifest("postings") or {}).get("extra", {})
-        presorted = bool(pex.get("file_sorted"))
-        blocks = build_blocks(postings, head, float(stats["avgdl"]) or 1.0,
-                              cfg, presorted=presorted)
-        blocks = blocks.withColumn(
+        blocks = build_blocks(postings, head, avgdl, cfg).withColumn(
             "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
-        if not presorted:
-            blocks = blocks.repartition(cfg.term_buckets, "term_bucket")
+        return blocks, head, avgdl
 
+    def _stage_blocks(self):
+        """Compressed posting blocks (operators/postings.py): delta+varint,
+        block-max metadata, range-sharded head terms. Runs after stats so
+        avgdl is available for the idf-independent block-max factor."""
+        from ..operators.postings import large_arrow_batches
+
+        cfg = self.cfg
+        blocks, head, avgdl = self._blocks_frame(self.io.read("postings"))
         with large_arrow_batches(self.spark):
             return self.io.write_stage(
                 blocks, "blocks", partition_by=["term_bucket"],
@@ -516,5 +492,5 @@ class IndexBuilder:
                 # max_tf bound
                 extra={"head_terms": head, "block_size": cfg.block_size,
                        "salt_shard_docs": cfg.salt_shard_docs,
-                       "avgdl": float(stats["avgdl"]) or 1.0},
+                       "avgdl": avgdl},
             )

@@ -22,16 +22,16 @@ WAND path (plans/wand.py): both must return identical rows.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions.text_core import is_query_valid, split_to_lemmas
+from ..operators.postings import bm25_tfpart_col
 from ..oracle import build_snippet
 from ..sources.tableio import TableIO
-from .build import term_bucket_col
+from .build import term_bucket
+from .serve import rank_query_terms
 
 ERR_EMPTY = "Задан пустой поисковый запрос"
 ERR_NOT_RUSSIAN = "Запрос должен быть на русском языке"
@@ -110,25 +110,15 @@ class QueryEngine:
         lemmas = list(split_to_lemmas(query))
         if not lemmas:
             return []
-        buckets = sorted({self._bucket(t) for t in lemmas})
+        buckets = sorted({term_bucket(t, self.cfg.term_buckets)
+                          for t in lemmas})
         terms = self._table("terms")
         rows = (terms
                 .filter(F.col("term_bucket").isin(buckets))  # partition prune
                 .filter(F.col("term").isin(lemmas))
                 .select("term", "df").collect())
-        n = self.stats["n_docs"]
-        kept = [
-            {"term": r["term"], "df": r["df"],
-             "idf": math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))}
-            for r in rows
-            if not (n and r["df"] / n > self.cfg.stopword_df_ratio)
-        ]
-        kept.sort(key=lambda d: (d["df"], d["term"]))
-        return kept
-
-    def _bucket(self, term: str) -> int:
-        import hashlib
-        return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % self.cfg.term_buckets
+        return rank_query_terms([(r["term"], r["df"]) for r in rows],
+                                self.stats["n_docs"], self.cfg)
 
     # --- scoring ---------------------------------------------------------
 
@@ -137,7 +127,8 @@ class QueryEngine:
         """(doc_id, score) for docs containing ALL query terms."""
         cfg = self.cfg
         avgdl = float(self.stats["avgdl"]) or 1.0
-        buckets = sorted({self._bucket(t["term"]) for t in terms})
+        buckets = sorted({term_bucket(t["term"], cfg.term_buckets)
+                          for t in terms})
         qt = self.spark.createDataFrame(
             [(t["term"], t["idf"]) for t in terms], "term string, idf double")
 
@@ -147,10 +138,8 @@ class QueryEngine:
              .filter(F.col("term").isin([t["term"] for t in terms]))
              .join(F.broadcast(qt), "term"))
         if relevance_mode == "bm25":
-            k1, b = cfg.bm25_k1, cfg.bm25_b
-            score = (F.col("idf") * F.col("tf") * F.lit(k1 + 1.0)
-                     / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
-                        + F.lit(b) * F.col("dl") / F.lit(avgdl))))
+            score = F.col("idf") * bm25_tfpart_col(
+                F.col("tf"), F.col("dl"), avgdl, cfg.bm25_k1, cfg.bm25_b)
         else:  # reference Σtf mode (normalized later)
             score = F.col("tf").cast("double")
         agg = (q.withColumn("s", score)

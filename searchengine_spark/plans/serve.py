@@ -25,13 +25,11 @@ automatically via cfg/df thresholds when strategy="auto".
 from __future__ import annotations
 
 import heapq
-import math
-import os
 
 from ..config import EngineConfig
-from ..operators.postings import (np_intersect_score_blocks,
+from ..operators.postings import (bm25_idf, np_intersect_score_blocks,
                                   np_varint_decode)
-from .wand import term_bucket_col_val
+from .build import term_bucket
 
 
 def _dataset(path: str):
@@ -40,27 +38,32 @@ def _dataset(path: str):
     return ds.dataset(path, format="parquet", partitioning="hive")
 
 
+def rank_query_terms(rows, n_docs: int, cfg: EngineConfig) -> list[dict]:
+    """(term, df) dictionary rows of a query's lemmas -> the query terms
+    [{term, df, idf}]: stopword prune (df/N above cfg.stopword_df_ratio,
+    reference SearchServiceImpl.java:161), BM25 idf, rarest-first with
+    ties by term asc (getLemmaList, SearchServiceImpl.java:153-168)."""
+    out = [{"term": term, "df": int(df), "idf": bm25_idf(n_docs, df)}
+           for term, df in rows
+           if not (n_docs and df / n_docs > cfg.stopword_df_ratio)]
+    out.sort(key=lambda t: (t["df"], t["term"]))
+    return out
+
+
 def lookup_terms(io, cfg: EngineConfig, lemmas: list[str],
                  n_docs: int) -> list[dict]:
-    """Dictionary lookup + stopword prune + rarest-first, like
-    QueryEngine.analyze, but via a pruned pyarrow read (no Spark job)."""
+    """QueryEngine.analyze's dictionary lookup via a pruned pyarrow read
+    (no Spark job), ranked by the same rank_query_terms."""
     import pyarrow.dataset as ds
 
-    buckets = sorted({term_bucket_col_val(t, cfg.term_buckets)
-                      for t in lemmas})
+    buckets = sorted({term_bucket(t, cfg.term_buckets) for t in lemmas})
     d = _dataset(io.path("terms"))
     tbl = d.to_table(
         filter=(ds.field("term_bucket").isin(buckets)
                 & ds.field("term").isin(lemmas)),
         columns=["term", "df"])
-    out = []
-    for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-        if n_docs and df / n_docs > cfg.stopword_df_ratio:
-            continue
-        out.append({"term": term, "df": int(df),
-                    "idf": math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))})
-    out.sort(key=lambda t: (t["df"], t["term"]))
-    return out
+    return rank_query_terms(
+        zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()), n_docs, cfg)
 
 
 def driver_topk(io, cfg: EngineConfig, terms: list[dict], k: int,
@@ -78,8 +81,7 @@ def driver_topk(io, cfg: EngineConfig, terms: list[dict], k: int,
     term_order = [t["term"] for t in terms]
     idf = {t["term"]: t["idf"] for t in terms}
 
-    buckets = sorted({term_bucket_col_val(t, cfg.term_buckets)
-                      for t in term_order})
+    buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
     d = _dataset(io.path("blocks"))
     tbl = d.to_table(
         filter=(ds.field("term_bucket").isin(buckets)
@@ -130,8 +132,7 @@ def driver_count_candidates(io, cfg: EngineConfig, terms: list[dict]) -> int:
     import pyarrow.dataset as ds
 
     term_order = [t["term"] for t in terms]
-    buckets = sorted({term_bucket_col_val(t, cfg.term_buckets)
-                      for t in term_order})
+    buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
     d = _dataset(io.path("blocks"))
     tbl = d.to_table(
         filter=(ds.field("term_bucket").isin(buckets)

@@ -36,31 +36,18 @@ def statistics(io: TableIO) -> dict:
         postings = io.read("postings")
         pages = {r["site"]: r["pages"] for r in
                  docs.groupBy("site").agg(F.count("*").alias("pages")).collect()}
-        if "site_id" in postings.columns:
-            # postings built by current code carry site_id — the same
-            # join-free column-pruned aggregation the build stage uses
-            # (plans/build.py::_site_stats_frame); only the tiny
-            # post-aggregation frame joins the site-name map
-            site_names = (docs.select("site").distinct()
-                          .withColumn("site_id", F.xxhash64("site")))
-            lemmas = {r["site"]: r["lemmas"] for r in
-                      postings.select("site_id", "term")
-                      .groupBy("site_id")
-                      .agg(F.count_distinct("term").alias("lemmas"))
-                      .join(site_names, "site_id").collect()}
-        else:
-            # legacy postings without site_id — join the compact
-            # (doc_id, site) projection of docs to attribute terms
-            doc_sites = docs.select("doc_id", "site")
-            lemmas = {r["site"]: r["lemmas"] for r in
-                      postings.join(doc_sites, "doc_id")
-                      .groupBy("site")
-                      .agg(F.count_distinct("term").alias("lemmas")).collect()}
+        # the same join-free column-pruned aggregation the build stage
+        # uses (plans/build.py::_site_stats_frame); only the tiny
+        # post-aggregation frame joins the site-name map
+        site_names = (docs.select("site").distinct()
+                      .withColumn("site_id", F.xxhash64("site")))
+        lemmas = {r["site"]: r["lemmas"] for r in
+                  postings.select("site_id", "term")
+                  .groupBy("site_id")
+                  .agg(F.count_distinct("term").alias("lemmas"))
+                  .join(site_names, "site_id").collect()}
 
-    try:
-        status = io.read_meta("build_status")
-    except FileNotFoundError:  # pre-status index (built by older code)
-        status = {"status": "INDEXED", "error": None, "status_time": None}
+    status = io.read_meta("build_status")
 
     detailed = [
         {"site": s, "name": s, "pages": pages[s],

@@ -36,9 +36,10 @@ postings. A range is skipped only when its bound is STRICTLY below the
 current k'-th score, so score-ties (broken by doc_id asc) stay exact.
 
 On a multi-executor cluster the local θ per task converges from that task's
-own ranges; cross-task θ sharing would be an iterative refinement (run hot
-ranges first, broadcast θ, rerun) — unnecessary at current scales and noted
-as the known trade-off.
+own ranges. Cross-task θ sharing (score the hot ranges first, broadcast θ,
+rerun) measured ~2× slower than this single phase on a skew-heavy 60k-doc
+index: the extra driver round-trip costs more than the pruning saves
+(BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -50,8 +51,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
 from ..config import EngineConfig
-from ..operators.postings import np_intersect_score_blocks, np_varint_decode
-from .build import term_bucket_col
+from ..operators.postings import (np_bm25_tfpart, np_intersect_score_blocks,
+                                  np_varint_decode)
+from .build import term_bucket
 
 # minimum doc-range count before wand_topk spends a driver job deriving
 # the rare-term range bound (below this, the unrestricted explode is
@@ -66,8 +68,7 @@ TOPK_SCHEMA = StructType([
 
 def _wand_task(pdf, *, term_order: list[str], idf: dict[str, float],
                avgdl: float, k1: float, b: float, kprime: int,
-               range_w: int, tf_bounds: bool = False,
-               theta0: float = 0.0):
+               range_w: int, tf_bounds: bool = False):
     """One task: blocks of several doc-ranges -> ≤ kprime (doc_id, score).
 
     Each doc belongs to exactly one range (doc_id // range_w); postings
@@ -97,12 +98,12 @@ def _wand_task(pdf, *, term_order: list[str], idf: dict[str, float],
     # range upper bound = Σ_t idf_t · max tfpart_t within the range.
     # tf_bounds: the stored max_tfpart baked in a different avgdl (index
     # incrementally updated since the blocks were encoded) — use the sound
-    # avgdl-free cap tfpart <= tf·(k1+1)/(tf + k1·(1-b)) from max_tf
-    # instead (looser, still exact results; tightens again on full rebuild)
+    # avgdl-free cap instead: tfpart falls with dl, so tfpart(max_tf, dl=0)
+    # bounds every posting of the block (looser, still exact results;
+    # tightens again on refresh_blocks or a full rebuild)
     def term_bound(gg) -> float:
         if tf_bounds:
-            mt = float(gg["max_tf"].max())
-            return mt * (k1 + 1.0) / (mt + k1 * (1.0 - b))
+            return float(np_bm25_tfpart(gg["max_tf"].max(), 0, avgdl, k1, b))
         return float(gg["max_tfpart"].max())
 
     uppers: list[tuple[float, int]] = []
@@ -113,9 +114,7 @@ def _wand_task(pdf, *, term_order: list[str], idf: dict[str, float],
 
     for ub, rid in uppers:
         th = theta()
-        # theta0: a broadcast lower bound on the global k'-th score from a
-        # two-phase run's hot ranges — strictly-below skip keeps ties exact
-        if (th is not None and ub < th[0]) or ub < theta0:
+        if th is not None and ub < th[0]:
             break  # ranges are sorted: nothing below can beat θ either
         g = by_range[rid]
         w_lo, w_hi = rid * range_w, (rid + 1) * range_w
@@ -151,28 +150,14 @@ def _wand_task(pdf, *, term_order: list[str], idf: dict[str, float],
 
 def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
               k: int, offset: int = 0,
-              n_tasks: int | None = None,
-              blocks_df: DataFrame | None = None,
-              two_phase: bool = False,
-              hot_ranges: int = 8) -> DataFrame:
+              blocks_df: DataFrame | None = None) -> DataFrame:
     """terms: analyze() output [{term, df, idf}] rarest-first.
     Returns DataFrame(doc_id, score) of the global top-(offset+k).
-    blocks_df: optionally a pre-warmed (cached) blocks frame.
-
-    two_phase: cross-task θ sharing — phase 1 scores only the `hot_ranges`
-    ranges with the highest upper bounds (one task) to obtain θ0, phase 2
-    broadcasts θ0 so every task starts with a non-trivial pruning bar
-    instead of converging its own θ from scratch. Exactness is preserved:
-    θ0 is a true lower bound on the global k'-th score (phase-1 results
-    are genuine scores) and ranges are only skipped strictly below it.
-    Measured on this sandbox's corpus sizes the extra driver round-trip
-    costs more than the pruning saves (see BENCH/BASELINE.md), so the
-    default stays single-phase; the knob exists for genuinely distributed
-    skewed corpora where per-task θ convergence dominates."""
+    blocks_df: optionally a pre-warmed (cached) blocks frame."""
     stats = io.read_meta("stats")
     avgdl = float(stats["avgdl"]) or 1.0
     kprime = offset + k
-    n_tasks = n_tasks or spark.sparkContext.defaultParallelism
+    n_tasks = spark.sparkContext.defaultParallelism
     # range width must match the shard width the index was BUILT with (the
     # alignment guarantee) — prefer the blocks manifest over current cfg
     manifest = io.read_manifest("blocks") or {}
@@ -187,8 +172,7 @@ def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
 
     term_order = [t["term"] for t in terms]
     idf = {t["term"]: t["idf"] for t in terms}
-    buckets = sorted({term_bucket_col_val(t, cfg.term_buckets)
-                      for t in term_order})
+    buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
 
     blocks = (
         (blocks_df if blocks_df is not None else io.read("blocks"))
@@ -206,56 +190,13 @@ def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
                     if n_ranges > RANGE_BOUND_MIN_RANGES else None)
     exploded = explode_coverage(blocks, range_w, n_tasks, range_filter)
 
-    theta0 = 0.0
-    phase1 = None
-    if two_phase:
-        k1c, bc = cfg.bm25_k1, cfg.bm25_b
-        # per-(range, term) bound from block METADATA only (no decode),
-        # AND-filtered to ranges containing every query term, top-R by
-        # Σ idf·bound — a TakeOrdered over a tiny metadata aggregate
-        tb = (F.col("mt") * F.lit(k1c + 1.0)
-              / (F.col("mt") + F.lit(k1c * (1.0 - bc)))
-              if tf_bounds else F.col("mtp"))
-        idf_map = F.create_map(*[x for t in terms
-                                 for x in (F.lit(t["term"]),
-                                           F.lit(float(t["idf"])))])
-        rb = (exploded.groupBy("range_id", "term")
-              .agg(F.max("max_tfpart").alias("mtp"),
-                   F.max("max_tf").alias("mt"))
-              .withColumn("contrib", idf_map[F.col("term")] * tb)
-              .groupBy("range_id")
-              .agg(F.count("*").alias("nt"), F.sum("contrib").alias("ub"))
-              .filter(F.col("nt") == F.lit(len(term_order)))
-              .orderBy(F.col("ub").desc()).limit(hot_ranges))
-        hot = [r["range_id"] for r in rb.collect()]
-        if hot:
-            p1 = (exploded.filter(F.col("range_id").isin(hot))
-                  .withColumn("wand_group", F.lit(0)))
-
-            def task1(pdf):
-                return _wand_task(pdf, term_order=term_order, idf=idf,
-                                  avgdl=avgdl, k1=cfg.bm25_k1, b=cfg.bm25_b,
-                                  kprime=kprime, range_w=range_w,
-                                  tf_bounds=tf_bounds)
-
-            phase1 = p1.groupBy("wand_group").applyInPandas(
-                task1, schema=TOPK_SCHEMA).collect()
-            if len(phase1) >= kprime:
-                theta0 = min(r["score"] for r in phase1)
-            exploded = exploded.filter(~F.col("range_id").isin(hot))
-
-    t0 = theta0
-
     def task(pdf):
         return _wand_task(pdf, term_order=term_order, idf=idf, avgdl=avgdl,
                           k1=cfg.bm25_k1, b=cfg.bm25_b, kprime=kprime,
-                          range_w=range_w, tf_bounds=tf_bounds, theta0=t0)
+                          range_w=range_w, tf_bounds=tf_bounds)
 
     partial = exploded.groupBy("wand_group").applyInPandas(
         task, schema=TOPK_SCHEMA)
-    if phase1:
-        partial = partial.unionByName(
-            spark.createDataFrame(phase1, TOPK_SCHEMA))
     # NB: a doc whose postings land in one range can still be emitted by two
     # tasks only if a block spans ranges AND both copies see it — dedup by
     # doc_id keeping max (scores are identical; max is a safe dedup)
@@ -319,7 +260,3 @@ def explode_coverage(blocks: DataFrame, range_w: int, n_tasks: int,
         exploded = exploded.filter(F.col("range_id").isin(range_filter))
     return exploded
 
-
-def term_bucket_col_val(term: str, n_buckets: int) -> int:
-    import hashlib
-    return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % n_buckets

@@ -10,13 +10,19 @@ Manifest model (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics"): one JSON per completed stage under <work>/_manifest/:
 
     {stage, status, rows, bytes, wall_ms, files: [{path, rows, bytes}, ...],
-     extra: {...}}
+     extra: {...}, format_version}
 
 `files` is the per-partition lineage — one entry per parquet part file,
 row counts read from parquet footers (no extra Spark job). A stage is
 resumable iff its manifest says status=complete and the data dir exists;
 the reference's analog is the site status row lifecycle
 (services/IndexingServiceImpl.java:80-108,165-171).
+
+`format_version` is the on-disk index format the manifest was written
+under (FORMAT_VERSION). The engine reads exactly one format: an index
+whose manifests carry another version, or none, is refused with a
+rebuild instruction (check_format_version) instead of being read through
+per-layout fallbacks.
 """
 
 from __future__ import annotations
@@ -38,6 +44,12 @@ _DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 # save/set/restore in read() must not interleave, or a reader could
 # "restore" another reader's raised value
 _DISCOVERY_LOCK = threading.Lock()
+
+# The on-disk index format this code writes and reads. Bump it with any
+# change that makes tables written by older code unreadable (a column, a
+# file-ordering contract, a partition layout); such indexes must be
+# rebuilt.
+FORMAT_VERSION = 1
 
 
 @dataclass
@@ -103,7 +115,8 @@ class TableIO:
         p = self._manifest_path(result.stage)
         tmp = p + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(result.to_json(), f, ensure_ascii=False, indent=1)
+            json.dump({**result.to_json(), "format_version": FORMAT_VERSION},
+                      f, ensure_ascii=False, indent=1)
         os.replace(tmp, p)
 
     def invalidate_from(self, stages: list[str], first_dirty: str) -> None:
@@ -364,58 +377,6 @@ class TableIO:
                     removed += 1
         return removed
 
-    def replace_table(self, df: DataFrame, stage: str,
-                      table: str | None = None,
-                      extra: dict | None = None) -> StageResult:
-        """Atomic FULL-table overwrite — the unpartitioned analog of
-        overwrite_partitions: write the replacement to a side directory
-        (safe for a df whose lineage reads the target table), move the
-        files into the live directory under generation-unique names (old
-        files untouched), atomically swap the manifest to list only the
-        new files, vacuum the superseded ones. A crash at any step leaves
-        the old snapshot fully readable — unlike write_stage, whose
-        Spark-side mode("overwrite") deletes the live directory first."""
-        import uuid
-
-        table = table or stage
-        target = self.path(table)
-        tmp = os.path.join(self.work_dir, f"_tmp_{table}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        t0 = time.monotonic()
-        df.write.mode("overwrite").parquet(tmp)
-        self._acquire_commit_lock(blocking=True)
-        try:
-            self._vacuum_locked(table)
-            gen = uuid.uuid4().hex[:12]
-            os.makedirs(target, exist_ok=True)
-            fresh = []
-            for root, _, fs in os.walk(tmp):
-                self._touch_commit_lock()  # heartbeat: long moves stay fresh
-                for fn in sorted(fs):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    fp = os.path.join(root, fn)
-                    out = os.path.join(target, f"gen-{gen}-{fn}")
-                    meta = pq.read_metadata(fp)
-                    shutil.move(fp, out)
-                    fresh.append({
-                        "path": os.path.relpath(out, self.work_dir),
-                        "rows": meta.num_rows,
-                        "bytes": os.path.getsize(out),
-                    })
-            shutil.rmtree(tmp, ignore_errors=True)
-            result = StageResult(
-                stage=stage, status="complete",
-                rows=sum(f["rows"] for f in fresh),
-                bytes=sum(f["bytes"] for f in fresh),
-                wall_ms=int((time.monotonic() - t0) * 1000),
-                files=fresh, extra=extra or {})
-            self.write_manifest(result)  # atomic commit point
-            self._vacuum_locked(table)
-            return result
-        finally:
-            self._release_commit_lock()
-
     def overwrite_partitions(self, df: DataFrame, stage: str,
                              partition_col: str, values: list,
                              table: str | None = None,
@@ -520,10 +481,27 @@ class TableIO:
             return json.load(f)
 
 
+def check_format_version(io: TableIO) -> None:
+    """Refuse an existing index written in another on-disk format: every
+    stage manifest must carry FORMAT_VERSION. A work dir without
+    manifests (nothing built yet) passes."""
+    for fn in sorted(os.listdir(io.manifest_dir)):
+        if not fn.endswith(".json"):
+            continue
+        with open(os.path.join(io.manifest_dir, fn)) as f:
+            found = json.load(f).get("format_version")
+        if found != FORMAT_VERSION:
+            raise RuntimeError(
+                f"index at {io.work_dir} has on-disk format {found!r} "
+                f"(stage manifest {fn}); this engine reads format "
+                f"{FORMAT_VERSION} — rebuild this index with build_index")
+
+
 def resolve_layout(io: TableIO, cfg):
     """Return cfg overridden with the layout parameters the index was
     actually BUILT with, read from the stage manifests (postings: term
-    bucket count; blocks: head-term shard width and block size).
+    bucket count; blocks: head-term shard width and block size), after
+    check_format_version refuses an index in another on-disk format.
 
     Every query path must derive partition-prune buckets from the on-disk
     layout, not from live config: an index built with term_buckets=16 read
@@ -532,6 +510,7 @@ def resolve_layout(io: TableIO, cfg):
     manifest exists (fresh build)."""
     import dataclasses
 
+    check_format_version(io)
     over = {}
     dm = io.read_manifest("docs")
     if dm and "doc_id_buckets" in dm.get("extra", {}):

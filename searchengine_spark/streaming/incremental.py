@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
-from ..functions.udfs import extract_docs, tokens_from_docs_sql, url_bucket_col
+from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import assign_doc_ids
 from ..plans.build import IndexBuilder, term_bucket_col
 from ..sources.tableio import TableIO
@@ -205,9 +205,9 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
 
     # --- affected term buckets (old lemmas ∪ new lemmas of touched docs)
     delta_tokens = None
-    term_frames = [tokens_from_docs_sql(old_touched).select("term")]
+    term_frames = [tokens_from_docs(old_touched).select("term")]
     if delta_docs is not None:
-        delta_tokens = tokens_from_docs_sql(delta_docs).withColumn(
+        delta_tokens = tokens_from_docs(delta_docs).withColumn(
             "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
         term_frames.append(delta_tokens.select("term"))
     affected = term_frames[0]
@@ -227,20 +227,14 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
 
     if buckets:
         # --- postings: old bucket rows minus touched docs, plus the delta
-        old_postings = io.read("postings")
-        newp = (old_postings
+        newp = (io.read("postings")
                 .filter(F.col("term_bucket").isin(buckets))
                 .join(touched_ids, "doc_id", "left_anti"))
         if delta_tokens is not None:
-            add = delta_tokens.filter(F.col("term_bucket").isin(buckets))
-            if "site_id" not in old_postings.columns:
-                # legacy table built before postings carried site_id —
-                # keep the bucket schema uniform (site_stats falls back
-                # to its join path for this index)
-                add = add.drop("site_id")
-            newp = newp.unionByName(add)
+            newp = newp.unionByName(
+                delta_tokens.filter(F.col("term_bucket").isin(buckets)))
         # sort_by keeps rewritten bucket files (term, doc_id)-ordered —
-        # the table's file_sorted contract for the exchange-free blocks
+        # the table's file-order contract for the exchange-free blocks
         # encoder (TableIO prepends the partition-column prefix the
         # writer requires; the EliminateSorts discipline lives there)
         newp = newp.repartition(len(buckets), "term_bucket")
@@ -277,8 +271,9 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
     report["stats"] = builder._stage_stats().to_json()
 
     # site_stats: lemma rows of the affected term buckets + the -1 pages
-    # rows (docs changed) — same partition-overwrite discipline; a legacy
-    # index without the stage gets a full rebuild of the tiny table
+    # rows (docs changed) — same partition-overwrite discipline; an index
+    # whose site_stats stage never completed gets a full rebuild of the
+    # tiny table
     if io.stage_complete("site_stats"):
         ss = builder._site_stats_frame(io.read("docs"), io.read("postings"),
                                        buckets)
@@ -293,29 +288,15 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
         # --- blocks: re-encode the rewritten buckets; mark block-max
         # bounds stale (max_tfpart of untouched buckets bakes the OLD
         # avgdl — WAND switches to the avgdl-free max_tf bound).
-        # The rewritten bucket files keep the (term, doc_id) file-sorted
-        # contract (the newp sort above leads with term_bucket), so the
+        # The rewritten bucket files keep the (term, doc_id) file order
+        # (the newp sort above leads with term_bucket), so the
         # exchange-free encoder applies here exactly as in the full
         # build's _stage_blocks — the rewritten buckets' postings are
-        # scanned straight into the encoder, never shuffled (default file
-        # packing; see build_blocks for why packed bucket files are safe).
-        from ..operators.postings import build_blocks, large_arrow_batches
+        # scanned straight into the encoder, never shuffled.
+        from ..operators.postings import large_arrow_batches
 
-        terms_tbl = io.read("terms")
-        head = [r["term"] for r in
-                terms_tbl.filter(F.col("df") > cfg.salt_df_threshold)
-                         .select("term").collect()]
-        stats = io.read_meta("stats")
-        pex = (io.read_manifest("postings") or {}).get("extra", {})
-        presorted = bool(pex.get("file_sorted"))
-        newb = build_blocks(
-            io.read("postings").filter(F.col("term_bucket").isin(buckets)),
-            head, float(stats["avgdl"]) or 1.0, cfg,
-            n_partitions=len(buckets), presorted=presorted)
-        newb = newb.withColumn(
-            "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
-        if not presorted:
-            newb = newb.repartition(len(buckets), "term_bucket")
+        newb, head, _ = builder._blocks_frame(
+            io.read("postings").filter(F.col("term_bucket").isin(buckets)))
         with large_arrow_batches(spark):
             report["blocks"] = io.overwrite_partitions(
                 newb, "blocks", "term_bucket", buckets,
@@ -330,23 +311,9 @@ def _commit_docs(spark, io: TableIO, cfg: EngineConfig,
                  touched_urls: DataFrame) -> dict:
     """Partition-scoped docs commit: replacement rows for each affected
     url_bucket = current bucket rows minus touched urls plus the staged
-    changed rows — idempotent under replay. Falls back to a staged full
-    rewrite for indexes built before the url_bucket layout."""
-    docs_extra = (io.read_manifest("docs") or {}).get("extra", {})
-    n_b = int(docs_extra.get("doc_id_buckets", cfg.doc_id_buckets))
-
-    if not docs_extra.get("url_bucket_partitioned"):
-        # legacy unpartitioned docs table: full rewrite via the atomic
-        # replace protocol (side-dir write + generation move + manifest
-        # swap) — the old snapshot stays readable through any crash, so
-        # resume_delta can always replay
-        kept = io.read("docs").join(touched_urls, "url", "left_anti")
-        new_docs = kept.select(*DOC_COLS)
-        if delta_docs is not None:
-            new_docs = new_docs.unionByName(delta_docs.select(*DOC_COLS))
-        return io.replace_table(new_docs, "docs", extra=docs_extra).to_json()
-
-    bucket_of_url = url_bucket_col(F.col("url"), n_b)
+    changed rows — idempotent under replay. cfg carries the index's own
+    doc_id_buckets (resolve_layout)."""
+    bucket_of_url = url_bucket_col(F.col("url"), cfg.doc_id_buckets)
     url_frames = [touched_urls]
     if delta_docs is not None:
         url_frames.append(delta_docs.select("url"))

@@ -16,7 +16,8 @@ from searchengine_spark.config import EngineConfig
 from searchengine_spark.plans.api import SearchEngine
 from searchengine_spark.plans.query import QueryEngine
 from searchengine_spark.sources.corpus import gen_pages_spark
-from searchengine_spark.sources.tableio import TableIO, resolve_layout
+from searchengine_spark.sources.tableio import (FORMAT_VERSION, TableIO,
+                                                resolve_layout)
 
 N_DOCS = 120
 
@@ -135,7 +136,7 @@ def test_postings_files_are_term_doc_sorted(small_bucket_engine):
     import pyarrow.parquet as pq
 
     eng, work = small_bucket_engine
-    assert eng.io.read_manifest("postings")["extra"]["file_sorted"] is True
+    assert eng.io.read_manifest("postings")["format_version"] == FORMAT_VERSION
     files = glob.glob(f"{work}/postings/term_bucket=*/*.parquet")
     assert files
     for f in files:
@@ -148,7 +149,8 @@ def test_postings_files_are_term_doc_sorted(small_bucket_engine):
 def test_presorted_blocks_match_repartition_path(small_bucket_engine):
     """The exchange-free blocks path (file-ordered scan straight into the
     encoder) must produce the exact block set — including block_id — that
-    the repartition+sort path produces."""
+    encoding an explicitly shuffled and sorted postings frame produces
+    (every term's postings in one partition, (term, doc_id)-ordered)."""
     from searchengine_spark.operators.postings import build_blocks
 
     eng, _ = small_bucket_engine
@@ -158,8 +160,10 @@ def test_presorted_blocks_match_repartition_path(small_bucket_engine):
     def snap(df):
         return sorted(tuple(r) for r in df.collect())
 
-    alt = build_blocks(eng.io.read("postings"), head, stats["avgdl"],
-                       eng.cfg, presorted=False)
+    shuffled = (eng.io.read("postings")
+                .repartition(eng.cfg.term_buckets, "term")
+                .sortWithinPartitions("term", "doc_id"))
+    alt = build_blocks(shuffled, head, stats["avgdl"], eng.cfg)
     table = eng.io.read("blocks").drop("term_bucket")
     assert snap(table) == snap(alt.select(*table.columns))
 
@@ -173,7 +177,7 @@ def test_presorted_blocks_plan_has_no_exchange(small_bucket_engine):
     stats = eng.io.read_meta("stats")
     head = eng.io.read_manifest("blocks")["extra"]["head_terms"]
     plan = (build_blocks(eng.io.read("postings"), head, stats["avgdl"],
-                         eng.cfg, presorted=True)
+                         eng.cfg)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan, plan
 
@@ -182,10 +186,11 @@ def test_incremental_rewrite_keeps_file_sorted_contract(spark, tmp_path):
     """An upsert rewrites touched postings/docs buckets via partition
     overwrite; the rewritten files must keep the layout contracts the
     exchange-free encoder and the serving point-reads rely on:
-    postings files stay (term, doc_id)-ordered (file_sorted flag intact),
-    docs files stay doc_id-ascending. Regression: the partitionBy writer
-    inserts its own partition-column sort when the task ordering doesn't
-    lead with it, and EliminateSorts then deletes ours."""
+    postings files stay (term, doc_id)-ordered (the manifest keeps the
+    current format version), docs files stay doc_id-ascending.
+    Regression: the partitionBy writer inserts its own partition-column
+    sort when the task ordering doesn't lead with it, and EliminateSorts
+    then deletes ours."""
     import glob
 
     import pyarrow.parquet as pq
@@ -206,7 +211,7 @@ def test_incremental_rewrite_keeps_file_sorted_contract(spark, tmp_path):
     eng.upsert_docs(pdf)
 
     m = eng.io.read_manifest("postings")
-    assert m["extra"]["file_sorted"] is True
+    assert m["format_version"] == FORMAT_VERSION
     live = {f["path"] for f in m["files"]}
     gen_files = [p for p in glob.glob(f"{work}/postings/term_bucket=*/*.parquet")
                  if p.replace(f"{work}/", "", 1) in live
@@ -225,6 +230,51 @@ def test_incremental_rewrite_keeps_file_sorted_contract(spark, tmp_path):
         ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
         assert ids == sorted(ids), \
             f"rewritten docs file {f} not doc_id-ascending"
+
+
+def test_index_in_another_format_is_refused(spark, small_bucket_engine,
+                                            tmp_path):
+    """An index whose manifests lack the current FORMAT_VERSION (written
+    by older code) or carry another one is refused with a rebuild
+    instruction wherever it would be read or extended: the query engine,
+    an upsert (before it stages anything) and a resumed build."""
+    import json
+    import os
+
+    _, work = small_bucket_engine
+    old = str(tmp_path / "old_format")
+    shutil.copytree(work, old)
+    mdir = os.path.join(old, "_manifest")
+
+    def set_version(v):
+        for fn in os.listdir(mdir):
+            with open(os.path.join(mdir, fn)) as f:
+                m = json.load(f)
+            m.pop("format_version", None)
+            if v is not None:
+                m["format_version"] = v
+            with open(os.path.join(mdir, fn), "w") as f:
+                json.dump(m, f)
+
+    set_version(None)
+    refusal = "rebuild this index with build_index"
+    with pytest.raises(RuntimeError, match=refusal):
+        QueryEngine(spark, TableIO(spark, old))
+
+    eng = SearchEngine(spark, old)
+    pages = gen_pages_spark(spark, 2, partitions=1)
+    with pytest.raises(RuntimeError, match=refusal):
+        eng.upsert_docs(pages)
+    assert not os.path.exists(os.path.join(old, "_delta"))
+    assert not os.path.exists(os.path.join(old, "_staged_incoming"))
+
+    with pytest.raises(RuntimeError, match=refusal):
+        eng.build_index(pages, resume=True)
+    assert eng.io.stage_complete("docs")  # nothing was invalidated
+
+    set_version(FORMAT_VERSION + 1)
+    with pytest.raises(RuntimeError, match=refusal):
+        resolve_layout(TableIO(spark, old), EngineConfig())
 
 
 def test_overwrite_partitions_crash_safety(spark, tmp_path):
@@ -337,7 +387,7 @@ def test_packed_blocks_match_one_file_per_task(spark, packed_build):
 
     def encode():
         blocks = build_blocks(eng.io.read("postings"), head, stats["avgdl"],
-                              eng.cfg, presorted=True)
+                              eng.cfg)
         with large_arrow_batches(spark):
             rows = blocks.drop("block_id").collect()
             return (blocks.rdd.getNumPartitions(),

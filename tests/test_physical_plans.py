@@ -21,7 +21,10 @@ def test_query_postings_scan_partition_pruned(built_engine):
     plan = _plan(qe.candidates_df(terms))
     # the parquet scan carries the bucket filter as a partition filter
     assert "term_bucket" in plan
-    buckets = sorted({qe._bucket(t["term"]) for t in terms})
+    from searchengine_spark.plans.build import term_bucket
+
+    buckets = sorted({term_bucket(t["term"], qe.cfg.term_buckets)
+                      for t in terms})
     n_buckets = built_engine.cfg.term_buckets
     assert len(buckets) < n_buckets  # pruning is actually selective
     # pruned input: fewer partition dirs than the full layout would give

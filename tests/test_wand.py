@@ -57,37 +57,6 @@ def test_wand_matches_exact_on_queryset(built_engine):
     assert checked >= 15
 
 
-def test_wand_two_phase_matches_single_phase(built_engine):
-    """Two-phase θ sharing must be exact: identical (doc, score) rows to
-    the single-phase run for every reference query (θ0 is a true lower
-    bound; ranges are skipped only strictly below it)."""
-    from searchengine_spark.plans.wand import wand_topk
-    from searchengine_spark.sources.queryset import reference_queries
-
-    eng = built_engine
-    checked = 0
-    for q in reference_queries():
-        if q["site"] is not None or not q["query"]:
-            continue
-        terms = _analyze(eng, q["query"])
-        if not terms:
-            continue
-        one = [(r["doc_id"], r["score"])
-               for r in wand_topk(eng.spark, eng.io, eng.cfg, terms,
-                                  k=q["k"], offset=q["offset"]).collect()]
-        two = [(r["doc_id"], r["score"])
-               for r in wand_topk(eng.spark, eng.io, eng.cfg, terms,
-                                  k=q["k"], offset=q["offset"],
-                                  two_phase=True, hot_ranges=2).collect()]
-        assert [d for d, _ in two] == [d for d, _ in one], q["query"]
-        for (_, s2), (_, s1) in zip(two, one):
-            assert s2 == pytest.approx(s1, abs=1e-9)
-        checked += 1
-        if checked >= 8:  # exactness, not coverage — bound the runtime
-            break
-    assert checked >= 5
-
-
 def test_wand_search_response_matches_oracle(built_engine, oracle_index):
     from searchengine_spark import oracle as O
 
@@ -166,9 +135,9 @@ def test_rare_term_range_explode_is_bounded(salted_engine):
     range becomes a task (the 100x-scale failure mode)."""
     import pyspark.sql.functions as F
 
+    from searchengine_spark.plans.build import term_bucket
     from searchengine_spark.plans.wand import (candidate_ranges,
-                                               explode_coverage,
-                                               term_bucket_col_val)
+                                               explode_coverage)
 
     eng = salted_engine
     cfg = eng.cfg
@@ -182,8 +151,7 @@ def test_rare_term_range_explode_is_bounded(salted_engine):
 
     range_w = cfg.salt_shard_docs
     names = [t["term"] for t in terms]
-    buckets = sorted({term_bucket_col_val(t, cfg.term_buckets)
-                      for t in names})
+    buckets = sorted({term_bucket(t, cfg.term_buckets) for t in names})
     blocks = (eng.io.read("blocks")
               .filter(F.col("term_bucket").isin(buckets))
               .filter(F.col("term").isin(names)))
@@ -219,8 +187,8 @@ def test_sharded_rarest_term_skips_range_derivation(salted_engine):
     instead of decoding a potentially huge term."""
     import pyspark.sql.functions as F
 
-    from searchengine_spark.plans.wand import (candidate_ranges,
-                                               term_bucket_col_val)
+    from searchengine_spark.plans.build import term_bucket
+    from searchengine_spark.plans.wand import candidate_ranges
 
     eng = salted_engine
     cfg = eng.cfg
@@ -231,6 +199,6 @@ def test_sharded_rarest_term_skips_range_derivation(salted_engine):
     terms = [{"term": row["term"], "df": row["df"], "idf": 1.0}]
     blocks = (eng.io.read("blocks")
               .filter(F.col("term_bucket").isin(
-                  [term_bucket_col_val(row["term"], cfg.term_buckets)]))
+                  [term_bucket(row["term"], cfg.term_buckets)]))
               .filter(F.col("term") == row["term"]))
     assert candidate_ranges(blocks, terms, cfg, cfg.salt_shard_docs) is None
