@@ -399,20 +399,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # partitioned layout (16× smaller than raw float32); probes score
         # with Catalyst-only ADC lookup tables and re-rank the top
         # k·rerank_factor candidates exactly against the raw table.
-        # EXACT-EQUIVALENCE configuration: probe all lists AND size the
-        # rerank pool to cover the whole table (r = k·⌈n/k⌉ ≥ n), so the
-        # exact-rerank stage re-scores every vector and the output equals
-        # brute-force kNN row-for-row — the knn_cosine oracle SQL applies
-        # verbatim even though the trained codebooks are data-dependent.
+        # EXACT-EQUIVALENCE configuration: probe all lists AND re-rank
+        # every probed candidate (rerank_factor=None), so the exact-rerank
+        # stage re-scores every vector and the output equals brute-force
+        # kNN row-for-row — the knn_cosine oracle SQL applies verbatim
+        # even though the trained codebooks are data-dependent.
         # Partial-probe/partial-rerank recall floors, determinism, the
         # sidecar commit marker, compression layout, and partition pruning
         # are pinned in tests/test_ann_index.py.
         qv = _query_vec(spark, sf)
         idx = _ann_index(spark, sf, "ivfpq")
-        n = _emb(spark, sf).count()
         return idx.ann_topk(qv, k=KNN_K, n_probe=idx.n_centroids,
                             exclude_id=0, rerank_df=_emb(spark, sf),
-                            rerank_factor=-(-n // KNN_K))
+                            rerank_factor=None)
 
     def q_emb_neardup(spark, sf):
         # fixture has no planted near-dup vectors (max pairwise cos ≈ 0.48);

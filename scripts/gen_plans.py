@@ -8,16 +8,41 @@ TakeOrderedAndProject for top-k. Run: `python scripts/gen_plans.py`."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# tokens that change from run to run without the plan changing: the
+# scratch directory, parquet part-file names and the per-session
+# expression / exchange-plan / RDD ids
+_TMP_DIR = re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+")
+_PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}[\w.]*?\.parquet")
+_IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+
+
+def normalise(text: str) -> str:
+    """Replace the volatile tokens of an explain string: the scratch dir
+    becomes <tmp>, part files part-<n>.parquet, and every id its rank of
+    first appearance in this plan, so an unchanged plan prints the same
+    text in every run."""
+    text = _PART_FILE.sub("part-<n>.parquet", _TMP_DIR.sub("<tmp>", text))
+    ids: dict[tuple[str, str], int] = {}
+
+    def renumber(m):
+        key = (m.group(1), m.group(2))
+        if key not in ids:
+            ids[key] = sum(k[0] == key[0] for k in ids) + 1
+        return f"{m.group(1)}{ids[key]}"
+
+    return _IDS.sub(renumber, text)
+
 
 def plan(spark, df) -> str:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    return normalise(df._jdf.queryExecution().explainString(mode))
 
 
 def main() -> None:

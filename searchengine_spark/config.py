@@ -24,8 +24,7 @@ class EngineConfig:
     # doc_id so no single build task materializes a full stopword posting list
     salt_df_threshold: int = 50_000
     salt_shard_docs: int = 25_000  # docs per range shard for head terms
-    # postings layout: term-hash buckets (partition pruning at query time);
-    # also the write parallelism of the postings/blocks stages
+    # postings layout: term-hash buckets (partition pruning at query time)
     term_buckets: int = 64
     # strategy="auto" routing: serve from the driver (pyarrow, no Spark
     # job) while every query term's posting list fits one process

@@ -563,11 +563,13 @@ class IvfPqIndex:
     def ann_topk(self, query_vec: list[float], k: int = 10,
                  n_probe: int = 1, exclude_id=None,
                  rerank_df: DataFrame | None = None,
-                 rerank_factor: int = 4, vec_col: str = "embedding",
+                 rerank_factor: int | None = 4, vec_col: str = "embedding",
                  id_col: str = "vec_id") -> DataFrame:
         """ADC top-k over the probed lists; with rerank_df (the raw vector
         table) the top k·rerank_factor ADC candidates are re-scored with
-        exact cosine and the top k of those returned."""
+        exact cosine and the top k of those returned. rerank_factor=None
+        re-scores every probed candidate: with all lists probed the
+        result is brute-force kNN."""
         import math
 
         coarse, books = self._meta()
@@ -593,9 +595,12 @@ class IvfPqIndex:
             "vec_id", (adc / (F.col("norm") * F.lit(qnorm))).alias("cos"))
         if exclude_id is not None:
             cand = cand.filter(F.col("vec_id") != F.lit(exclude_id))
-        r = k * rerank_factor if rerank_df is not None else k
-        topr = (cand.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-                .limit(r))
+        if rerank_df is not None and rerank_factor is None:
+            topr = cand
+        else:
+            r = k * rerank_factor if rerank_df is not None else k
+            topr = (cand.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+                    .limit(r))
         if rerank_df is None:
             return topr.select("vec_id", F.round("cos", 6).alias("cos"))
         ids = topr.select(F.col("vec_id").alias("_pq_cand"))

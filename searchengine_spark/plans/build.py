@@ -19,6 +19,9 @@ Scale notes (100 TB / 10^12 docs):
   downstream ever shuffles raw html
 - tokens are pre-aggregated per document inside the Arrow batch (map-side
   combine), so the only wide exchange is the term_bucket repartition
+- bucketed writes run min(buckets, cores) tasks (TableIO.cluster), each
+  bucket wholly in one task and one file: the bucket count sets the
+  layout and query-time pruning, not the write parallelism
 - doc-id assignment is one hash-bucket shuffle + per-bucket sort; bucket
   count is config (raise to thousands of buckets on a real cluster)
 - head-term skew is handled at the block-build stage (operators/postings.py)
@@ -35,7 +38,7 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import attach_doc_ids, compute_bucket_offsets
-from ..sources.tableio import TableIO, check_format_version
+from ..sources.tableio import TableIO, check_format_version, in_buckets
 
 STAGES = ["docs", "postings", "terms", "stats", "site_stats", "blocks"]
 
@@ -232,17 +235,15 @@ class IndexBuilder:
 
     def _stage_postings(self):
         cfg = self.cfg
-        postings = (
-            tokens_from_docs(self.io.read("docs"))
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
-            # co-locate each term's postings; sort_by lays files out as
-            # (term, doc_id)-ordered runs for the exchange-free block
-            # encoder and parquet min/max skipping (TableIO prepends the
-            # term_bucket prefix the partitioned writer requires)
-            .repartition(cfg.term_buckets, "term_bucket")
-        )
+        postings = tokens_from_docs(self.io.read("docs")).withColumn(
+            "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
+        # one task per core, each bucket wholly in one task; sort_by lays
+        # files out as (term, doc_id)-ordered runs for the exchange-free
+        # block encoder and parquet min/max skipping (TableIO prepends the
+        # term_bucket prefix the partitioned writer requires)
         return self.io.write_stage(
-            postings, "postings", partition_by=["term_bucket"],
+            self.io.cluster(postings, "term_bucket", cfg.term_buckets),
+            "postings", partition_by=["term_bucket"],
             sort_by=["term", "doc_id"],
             extra={"term_buckets": cfg.term_buckets},
         )
@@ -272,11 +273,12 @@ class IndexBuilder:
                          F.when(F.col("df") > self.cfg.salt_df_threshold,
                                 F.col("term"))).alias("head_terms"))
             .withColumn("term_bucket", term_bucket_col(F.col("term"), self.cfg.term_buckets))
-            # co-locate each bucket in one task so the partitioned write
-            # emits one file per bucket, not tasks×buckets small files
-            .repartition(self.cfg.term_buckets, "term_bucket")
         )
-        res = self.io.write_stage(terms, "terms", partition_by=["term_bucket"])
+        # each bucket wholly in one task, so the partitioned write emits
+        # one file per bucket, not tasks×buckets small files
+        res = self.io.write_stage(
+            self.io.cluster(terms, "term_bucket", self.cfg.term_buckets),
+            "terms", partition_by=["term_bucket"])
         # re-commit the manifest with the observed totals (atomic replace;
         # a crash in between leaves a valid manifest and _stage_stats
         # falls back to its own aggregation)
@@ -348,7 +350,8 @@ class IndexBuilder:
         site_names = (docs.select("site").distinct()
                       .withColumn("site_id", F.xxhash64("site")))
         if buckets is not None:
-            postings = postings.filter(F.col("term_bucket").isin(buckets))
+            postings = in_buckets(postings, "term_bucket", buckets,
+                                  self.cfg.term_buckets)
         lem_ids = (postings.select("site_id", "term_bucket", "term")
                    .groupBy("site_id", "term_bucket")
                    .agg(F.count_distinct("term").cast("long")
@@ -368,11 +371,12 @@ class IndexBuilder:
         postings per call. The plan is join-free: postings carry site_id,
         so this is one column-pruned (site_id, term) aggregation (see
         _site_stats_frame)."""
-        frame = (self._site_stats_frame(self.io.read("docs"),
-                                        self.io.read("postings"))
-                 .repartition(self.cfg.term_buckets + 1, "term_bucket"))
-        return self.io.write_stage(frame, "site_stats",
-                                   partition_by=["term_bucket"])
+        frame = self._site_stats_frame(self.io.read("docs"),
+                                       self.io.read("postings"))
+        # term buckets plus the -1 pages bucket
+        return self.io.write_stage(
+            self.io.cluster(frame, "term_bucket", self.cfg.term_buckets + 1),
+            "site_stats", partition_by=["term_bucket"])
 
     def refresh_blocks(self):
         """Blocks-only maintenance rebuild: re-encode every posting block

@@ -10,12 +10,15 @@ Manifest model (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics"): one JSON per completed stage under <work>/_manifest/:
 
     {stage, status, rows, bytes, wall_ms, files: [{path, rows, bytes}, ...],
-     extra: {...}, format_version}
+     schema, extra: {...}, format_version}
 
 `files` is the per-partition lineage — one entry per parquet part file,
-row counts read from parquet footers (no extra Spark job). A stage is
-resumable iff its manifest says status=complete and the data dir exists;
-the reference's analog is the site status row lifecycle
+row counts read from parquet footers (no extra Spark job). `schema` is
+the table's read schema (Spark StructType JSON: data columns, then the
+partition columns), taken from the frame the writer wrote, so a pinned
+read never starts a schema-inference job. A stage is resumable iff its
+manifest says status=complete and the data dir exists; the reference's
+analog is the site status row lifecycle
 (services/IndexingServiceImpl.java:80-108,165-171).
 
 `format_version` is the on-disk index format the manifest was written
@@ -37,6 +40,8 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 # the threshold is session-wide, and the build's concurrent branches read
@@ -48,8 +53,8 @@ _DISCOVERY_LOCK = threading.Lock()
 # The on-disk index format this code writes and reads. Bump it with any
 # change that makes tables written by older code unreadable (a column, a
 # file-ordering contract, a partition layout); such indexes must be
-# rebuilt.
-FORMAT_VERSION = 1
+# rebuilt. Version 2: table manifests carry their read schema.
+FORMAT_VERSION = 2
 
 
 @dataclass
@@ -61,13 +66,34 @@ class StageResult:
     wall_ms: int
     files: list[dict] = field(default_factory=list)
     extra: dict[str, Any] = field(default_factory=dict)
+    schema: dict | None = None  # read schema (StructType JSON) of a table
 
     def to_json(self) -> dict:
         return {
             "stage": self.stage, "status": self.status, "rows": self.rows,
             "bytes": self.bytes, "wall_ms": self.wall_ms, "files": self.files,
-            "extra": self.extra,
+            "schema": self.schema, "extra": self.extra,
         }
+
+
+def read_schema(df: DataFrame, partition_by: list[str] | None) -> dict:
+    """The schema a parquet read of df's partitioned write yields: data
+    columns in df order, then the partition columns — StructType JSON
+    for the manifest."""
+    parts = partition_by or []
+    fields = ([f for f in df.schema.fields if f.name not in parts]
+              + [df.schema[c] for c in parts])
+    return StructType(fields).jsonValue()
+
+
+def in_buckets(df: DataFrame, col: str, values: list,
+               n_buckets: int) -> DataFrame:
+    """df's rows whose bucket column is in values. values are distinct
+    buckets of range(n_buckets): when they cover every bucket the filter
+    would keep every row, so none is applied."""
+    if len(values) >= n_buckets:
+        return df
+    return df.filter(F.col(col).isin(values))
 
 
 class TableIO:
@@ -133,6 +159,16 @@ class TableIO:
 
     # --- write/read ----------------------------------------------------
 
+    def cluster(self, df: DataFrame, col: str, n_values: int) -> DataFrame:
+        """Hash-repartition df by col into min(n_values, cores) tasks for a
+        partitionBy(col) write. Each value of col lands wholly in one task,
+        so with the _sorted_for_write prefix every partition directory
+        gets exactly one file in the requested order (the exchange-free
+        blocks encoder needs that: a term never spans two files) — while
+        the write's task count follows the cores, not the bucket count."""
+        n = min(n_values, self.spark.sparkContext.defaultParallelism)
+        return df.repartition(n, col)
+
     @staticmethod
     def _sorted_for_write(df: DataFrame, partition_by: list[str] | None,
                           sort_by: list[str] | None) -> DataFrame:
@@ -167,11 +203,11 @@ class TableIO:
         writer.parquet(target)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        paths = []
-        for root, _, fs in os.walk(target):
-            for fn in sorted(fs):
-                if fn.endswith(".parquet"):
-                    paths.append(os.path.join(root, fn))
+        # sorted: the lineage (and so the pinned reads' file order) must
+        # not depend on the directory listing order
+        paths = sorted(os.path.join(root, fn)
+                       for root, _, fs in os.walk(target)
+                       for fn in fs if fn.endswith(".parquet"))
         # footer reads are I/O-bound and independent — a thread pool keeps
         # this driver-side lineage pass off the build's critical path
         # (serial walks were a fixed per-stage cost that parallelism can't
@@ -193,7 +229,8 @@ class TableIO:
             nbytes += sz
         result = StageResult(stage=stage, status="complete", rows=rows,
                              bytes=nbytes, wall_ms=wall_ms, files=files,
-                             extra=extra or {})
+                             extra=extra or {},
+                             schema=read_schema(df, partition_by))
         self.write_manifest(result)
         return result
 
@@ -203,14 +240,16 @@ class TableIO:
         the directory currently holds — so an interrupted partition
         overwrite (which adds new-generation files before the manifest
         swap) can never surface duplicate or partial data to the Spark
-        paths. basePath keeps hive partition columns + pruning.
+        paths. basePath keeps hive partition columns + pruning; the
+        manifest's schema spares Spark its schema-inference job.
 
         Strictness: a COMPLETE manifest whose listed files are missing on
         disk is corruption (someone deleted committed data) — raise rather
         than silently serving a partial snapshot. A non-complete (aborted)
         manifest likewise raises: readers must resume/rebuild the stage,
-        never consume a half-written table. Only a manifest-less directory
-        (fresh build in progress, pre-manifest layout) gets the raw read."""
+        never consume a half-written table; so does a manifest of another
+        format_version. Only a manifest-less directory (fresh build in
+        progress) gets the raw read."""
         base = self.path(table)
         m = self.read_manifest(table)
         if m is None:
@@ -220,6 +259,8 @@ class TableIO:
                 f"table '{table}' manifest status is "
                 f"{m.get('status')!r} — stage aborted/incomplete; resume "
                 "the build instead of reading it")
+        _check_version(m, self.work_dir, f"{table}.json")
+        schema = StructType.fromJson(m["schema"])
         files = [os.path.join(self.work_dir, f["path"])
                  for f in m.get("files", [])]
         missing = [p for p in files if not os.path.exists(p)]
@@ -229,7 +270,7 @@ class TableIO:
                 f"missing file(s) (first: {missing[0]}) — committed data "
                 "was deleted out-of-band; rebuild the stage")
         if not files:
-            return self.spark.read.parquet(base)
+            return self.spark.createDataFrame([], schema)
         # list the pinned files on the driver: above the threshold (32
         # paths) Spark lists them with a distributed job — one extra job
         # and ~0.4 s per read of a 64-bucket table on a 4-core host, for
@@ -240,8 +281,8 @@ class TableIO:
             old = conf.get(_DISCOVERY_THRESHOLD, None)
             conf.set(_DISCOVERY_THRESHOLD, str(len(files)))
             try:
-                return (self.spark.read.option("basePath", base)
-                        .parquet(*files))
+                return (self.spark.read.schema(schema)
+                        .option("basePath", base).parquet(*files))
             finally:
                 if old is None:
                     conf.unset(_DISCOVERY_THRESHOLD)
@@ -465,7 +506,8 @@ class TableIO:
             rows=sum(f["rows"] for f in files),
             bytes=sum(f["bytes"] for f in files),
             wall_ms=old.get("wall_ms", 0) + wall_ms,
-            files=files, extra=extra)
+            files=files, extra=extra,
+            schema=read_schema(df, [partition_col]))
         self.write_manifest(result)  # atomic commit point
         self._vacuum_locked(table)
         return result
@@ -481,6 +523,15 @@ class TableIO:
             return json.load(f)
 
 
+def _check_version(manifest: dict, work_dir: str, fn: str) -> None:
+    found = manifest.get("format_version")
+    if found != FORMAT_VERSION:
+        raise RuntimeError(
+            f"index at {work_dir} has on-disk format {found!r} "
+            f"(stage manifest {fn}); this engine reads format "
+            f"{FORMAT_VERSION} — rebuild this index with build_index")
+
+
 def check_format_version(io: TableIO) -> None:
     """Refuse an existing index written in another on-disk format: every
     stage manifest must carry FORMAT_VERSION. A work dir without
@@ -489,12 +540,7 @@ def check_format_version(io: TableIO) -> None:
         if not fn.endswith(".json"):
             continue
         with open(os.path.join(io.manifest_dir, fn)) as f:
-            found = json.load(f).get("format_version")
-        if found != FORMAT_VERSION:
-            raise RuntimeError(
-                f"index at {io.work_dir} has on-disk format {found!r} "
-                f"(stage manifest {fn}); this engine reads format "
-                f"{FORMAT_VERSION} — rebuild this index with build_index")
+            _check_version(json.load(f), io.work_dir, fn)
 
 
 def resolve_layout(io: TableIO, cfg):

@@ -19,6 +19,9 @@ scale; here maintenance is declarative AND partition-scoped:
      TableIO.overwrite_partitions (the Iceberg dynamic-partition-overwrite
      / MERGE seam): new bucket content = old rows minus touched doc_ids
      plus the delta. One changed page costs O(its buckets), not O(corpus).
+     Each rewrite runs min(buckets, cores) write tasks (TableIO.cluster),
+     one file per bucket; when every bucket is affected the scans carry
+     no bucket filter at all.
   4. stats are recomputed from the small terms table; the blocks
      manifest's avgdl is marked stale so WAND switches to avgdl-free
      max_tf bounds (results stay exact; bounds re-tighten on the next full
@@ -28,10 +31,11 @@ Crash-safety (the C1 build's INDEXING/FAILED lifecycle extended to C3/S7/
 S8, per plans/build.py:87-110): the computed delta — the old rows of
 touched docs (whose lemmas locate the buckets to purge) and the new doc
 rows (with ids already assigned) — is staged DURABLY under <work>/_delta/
-plus an atomically-written pending.json marker BEFORE any table is
-touched. Each table commit is an atomic manifest swap (old snapshot
-readable until the swap), applied in an order where every step is
-idempotent given the staged delta, so:
+plus an atomically-written pending.json marker (which also records the
+staged frames' schemas) BEFORE any table is touched. Each table commit
+is an atomic manifest swap (old snapshot readable until the swap),
+applied in an order where every step is idempotent given the staged
+delta, so:
 
   - a crash before pending.json exists: nothing changed; re-run the upsert;
   - a crash mid-apply: build_status is INDEXING/FAILED (never INDEXED),
@@ -54,12 +58,13 @@ import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import EngineConfig
 from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import assign_doc_ids
 from ..plans.build import IndexBuilder, term_bucket_col
-from ..sources.tableio import TableIO
+from ..sources.tableio import TableIO, in_buckets
 
 DOC_COLS = ["doc_id", "url", "site", "title", "text"]
 DELTA_DIR = "_delta"
@@ -80,9 +85,10 @@ def upsert_docs(spark, io: TableIO, cfg: EngineConfig,
     incoming = extract_docs(changed_pages)
 
     # stage the (small) incoming batch once; everything below reuses it
+    # (read back with the written frame's schema: no inference job)
     inc_path = os.path.join(io.work_dir, "_staged_incoming")
     incoming.write.mode("overwrite").parquet(inc_path)
-    incoming = spark.read.parquet(inc_path)
+    incoming = spark.read.schema(incoming.schema).parquet(inc_path)
 
     old_ids = old_docs.select("doc_id", "url")
     updated = incoming.join(old_ids, "url")  # keeps old doc_id
@@ -133,12 +139,15 @@ def _stage_delta(spark, io: TableIO, changed: DataFrame | None,
     root = _delta_path(io)
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root, exist_ok=True)
-    touched.select(*DOC_COLS).write.mode("overwrite").parquet(
-        _delta_path(io, "touched"))
-    if changed is not None:
-        changed.select(*DOC_COLS).write.mode("overwrite").parquet(
-            _delta_path(io, "changed"))
-    marker = {"has_changed": changed is not None}
+    # the marker records each staged frame's schema, so the apply (or a
+    # replay in another process) reads them back without inference jobs
+    schemas = {}
+    for name, frame in (("touched", touched), ("changed", changed)):
+        if frame is not None:
+            frame = frame.select(*DOC_COLS)
+            frame.write.mode("overwrite").parquet(_delta_path(io, name))
+            schemas[name] = frame.schema.jsonValue()
+    marker = {"schemas": schemas}
     tmp = _delta_path(io, "pending.json.tmp")
     with open(tmp, "w") as f:
         json.dump(marker, f)
@@ -167,9 +176,13 @@ def apply_staged_delta(spark, io: TableIO, cfg: EngineConfig) -> dict:
         raise RuntimeError("no staged delta to apply")
     with open(_delta_path(io, "pending.json")) as f:
         marker = json.load(f)
-    touched = spark.read.parquet(_delta_path(io, "touched"))
-    changed = (spark.read.parquet(_delta_path(io, "changed"))
-               if marker["has_changed"] else None)
+
+    def staged(name):
+        schema = StructType.fromJson(marker["schemas"][name])
+        return spark.read.schema(schema).parquet(_delta_path(io, name))
+
+    touched = staged("touched")
+    changed = staged("changed") if "changed" in marker["schemas"] else None
 
     builder = IndexBuilder(spark, io, cfg)
     builder.write_status("INDEXING", stage="delta")
@@ -225,33 +238,34 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
         touched_ids = touched_ids.unionByName(delta_docs.select("doc_id"))
         touched_urls = touched_urls.unionByName(delta_docs.select("url"))
 
+    def affected_postings():
+        return in_buckets(io.read("postings"), "term_bucket", buckets,
+                          cfg.term_buckets)
+
     if buckets:
         # --- postings: old bucket rows minus touched docs, plus the delta
-        newp = (io.read("postings")
-                .filter(F.col("term_bucket").isin(buckets))
-                .join(touched_ids, "doc_id", "left_anti"))
+        # (every delta term is in an affected bucket by construction)
+        newp = affected_postings().join(touched_ids, "doc_id", "left_anti")
         if delta_tokens is not None:
-            newp = newp.unionByName(
-                delta_tokens.filter(F.col("term_bucket").isin(buckets)))
+            newp = newp.unionByName(delta_tokens)
         # sort_by keeps rewritten bucket files (term, doc_id)-ordered —
         # the table's file-order contract for the exchange-free blocks
         # encoder (TableIO prepends the partition-column prefix the
         # writer requires; the EliminateSorts discipline lives there)
-        newp = newp.repartition(len(buckets), "term_bucket")
         report["postings"] = io.overwrite_partitions(
-            newp, "postings", "term_bucket", buckets,
+            io.cluster(newp, "term_bucket", len(buckets)),
+            "postings", "term_bucket", buckets,
             sort_by=["term", "doc_id"]).to_json()
 
         # --- terms: recompute df/cf for the rewritten buckets only
-        newt = (io.read("postings")
-                .filter(F.col("term_bucket").isin(buckets))
+        newt = (affected_postings()
                 .groupBy("term")
                 .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
                 .withColumn("term_bucket",
-                            term_bucket_col(F.col("term"), cfg.term_buckets))
-                .repartition(len(buckets), "term_bucket"))
+                            term_bucket_col(F.col("term"), cfg.term_buckets)))
         report["terms"] = io.overwrite_partitions(
-            newt, "terms", "term_bucket", buckets,
+            io.cluster(newt, "term_bucket", len(buckets)),
+            "terms", "term_bucket", buckets,
             # the full build's observed corpus totals (Σcf/Σdf on the terms
             # write job) and head-term list are stale once any bucket is
             # rewritten — null them so _stage_stats/_stage_blocks
@@ -278,9 +292,9 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
         ss = builder._site_stats_frame(io.read("docs"), io.read("postings"),
                                        buckets)
         ss_buckets = [*buckets, -1]
-        ss = ss.repartition(len(ss_buckets), "term_bucket")
         report["site_stats"] = io.overwrite_partitions(
-            ss, "site_stats", "term_bucket", ss_buckets).to_json()
+            io.cluster(ss, "term_bucket", len(ss_buckets)),
+            "site_stats", "term_bucket", ss_buckets).to_json()
     else:
         report["site_stats"] = builder._stage_site_stats().to_json()
 
@@ -295,8 +309,7 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
         # scanned straight into the encoder, never shuffled.
         from ..operators.postings import large_arrow_batches
 
-        newb, head, _ = builder._blocks_frame(
-            io.read("postings").filter(F.col("term_bucket").isin(buckets)))
+        newb, head, _ = builder._blocks_frame(affected_postings())
         with large_arrow_batches(spark):
             report["blocks"] = io.overwrite_partitions(
                 newb, "blocks", "term_bucket", buckets,
@@ -326,20 +339,19 @@ def _commit_docs(spark, io: TableIO, cfg: EngineConfig,
     if not doc_buckets:
         return (io.read_manifest("docs") or {})
 
-    cur = (io.read("docs")
-           .filter(F.col("url_bucket").isin(doc_buckets))
-           .join(all_urls.distinct(), "url", "left_anti")
-           .select(*DOC_COLS, "url_bucket"))
-    repl = cur
+    repl = (in_buckets(io.read("docs"), "url_bucket", doc_buckets,
+                       cfg.doc_id_buckets)
+            .join(all_urls.distinct(), "url", "left_anti")
+            .select(*DOC_COLS, "url_bucket"))
     if delta_docs is not None:
+        # every delta url is in doc_buckets by construction
         repl = repl.unionByName(
             delta_docs.select(*DOC_COLS)
-            .withColumn("url_bucket", bucket_of_url)
-            .filter(F.col("url_bucket").isin(doc_buckets)))
+            .withColumn("url_bucket", bucket_of_url))
     # sort_by keeps rewritten bucket files doc_id-ascending for the
     # serving path's point reads, same discipline as the full build
     # (TableIO prepends the url_bucket prefix the writer requires)
-    repl = repl.repartition(len(doc_buckets), "url_bucket")
     return io.overwrite_partitions(
-        repl, "docs", "url_bucket", doc_buckets,
+        io.cluster(repl, "url_bucket", len(doc_buckets)),
+        "docs", "url_bucket", doc_buckets,
         sort_by=["doc_id"]).to_json()

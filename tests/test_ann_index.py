@@ -375,6 +375,42 @@ def test_ivfpq_fixture_recall_floor(pq_index, emb, query_vec):
             assert abs(r["cos"] - brute_cos[r["vec_id"]]) < 1e-9
 
 
+def test_ivfpq_full_rerank_needs_no_count(spark, pq_index, emb, query_vec):
+    """rerank_factor=None re-ranks every probed candidate: with all lists
+    probed the result is brute-force kNN, and it needs no count job to
+    size a whole-table rerank pool (k·⌈n/k⌉) first."""
+    from searchengine_spark.operators.similarity import cosine_topk
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(group, query):
+        sc.setJobGroup(group, group)
+        try:
+            rows = query().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return (sorted((r["vec_id"], r["cos"]) for r in rows),
+                len(tracker.getJobIdsForGroup(group)))
+
+    def probe(rerank_factor):
+        return pq_index.ann_topk(query_vec, k=10,
+                                 n_probe=pq_index.n_centroids, exclude_id=0,
+                                 rerank_df=emb, rerank_factor=rerank_factor)
+
+    def sized_pool():
+        n = emb.count()
+        return probe(-(-n // 10))
+
+    full, full_jobs = run("ivfpq-full-rerank", lambda: probe(None))
+    sized, sized_jobs = run("ivfpq-sized-rerank", sized_pool)
+    brute, _ = run("ivfpq-brute",
+                   lambda: cosine_topk(emb, query_vec, 10, exclude_id=0))
+    assert full == brute == sized
+    assert full_jobs <= sized_jobs - 1, (full_jobs, sized_jobs)
+
+
 def test_ivfpq_planted_recall(spark, planted, tmp_path_factory):
     """Planted >0.99-cosine near-dups must surface in the PQ index's top-3
     (measured 12/12; floor 0.9) — the regime PQ exists for, where true

@@ -272,9 +272,39 @@ def test_index_in_another_format_is_refused(spark, small_bucket_engine,
         eng.build_index(pages, resume=True)
     assert eng.io.stage_complete("docs")  # nothing was invalidated
 
-    set_version(FORMAT_VERSION + 1)
-    with pytest.raises(RuntimeError, match=refusal):
-        resolve_layout(TableIO(spark, old), EngineConfig())
+    # format 1 (manifests without a read schema) and a newer format are
+    # refused too, by the layout resolution and by a pinned table read
+    for version in (1, FORMAT_VERSION + 1):
+        set_version(version)
+        with pytest.raises(RuntimeError, match=refusal):
+            resolve_layout(TableIO(spark, old), EngineConfig())
+        with pytest.raises(RuntimeError, match=refusal):
+            TableIO(spark, old).read("docs")
+
+
+def test_manifest_schema_read_equals_inferred_read(spark,
+                                                   small_bucket_engine):
+    """Every table of a built index read with its manifest's schema (no
+    inference job) has the same columns, in the same order and of the
+    same types, and the same rows as a schema-inferring read of the same
+    pinned files."""
+    import os
+
+    _, work = small_bucket_engine
+    io = TableIO(spark, work)
+    sc = spark.sparkContext
+    for table in ("docs", "postings", "terms", "site_stats", "blocks"):
+        files = [os.path.join(work, f["path"])
+                 for f in io.read_manifest(table)["files"]]
+        inferred = (spark.read.option("basePath", io.path(table))
+                    .parquet(*files))
+        group = f"schema-read-{table}"
+        with _job_group(sc, group):
+            pinned = io.read(table)
+        assert not sc.statusTracker().getJobIdsForGroup(group), table
+        assert pinned.schema == inferred.schema, table
+        assert (sorted(pinned.collect(), key=repr)
+                == sorted(inferred.collect(), key=repr)), table
 
 
 def test_overwrite_partitions_crash_safety(spark, tmp_path):
@@ -319,9 +349,6 @@ def test_overwrite_partitions_crash_safety(spark, tmp_path):
     assert spark.read.parquet(io.path("t")).count() == 80
 
 
-BLOCKS_GROUP = "blocks-stage-packing"
-
-
 @contextmanager
 def _job_group(sc, group: str):
     """Run the block's Spark jobs (on this thread) in a job group, so
@@ -334,26 +361,65 @@ def _job_group(sc, group: str):
         sc.setLocalProperty("spark.job.description", None)
 
 
+@contextmanager
+def _stage_writes_grouped(sc, op: str):
+    """Run every stage write (TableIO.write_stage / overwrite_partitions)
+    in its own Spark job group "<op>:<stage>"."""
+    patched = {}
+    for name in ("write_stage", "overwrite_partitions"):
+        def grouped(self, df, stage, *a, _fn=getattr(TableIO, name), **kw):
+            with _job_group(sc, f"{op}:{stage}"):
+                return _fn(self, df, stage, *a, **kw)
+        patched[name] = grouped
+    with pytest.MonkeyPatch.context() as mp:
+        for name, fn in patched.items():
+            mp.setattr(TableIO, name, fn)
+        yield
+
+
+def _write_tasks(sc, group: str) -> int:
+    """Task count of the write stage: the last stage of the group's last
+    job (earlier jobs and stages are scans and shuffles)."""
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(group))
+    return tracker.getStageInfo(
+        max(tracker.getJobInfo(last_job).stageIds)).numTasks
+
+
 @pytest.fixture(scope="module")
 def packed_build(spark, tmp_path_factory):
-    """A small default-layout (64 term buckets) build whose blocks stage
-    runs in its own Spark job group. Never warmed: a cached postings
-    table would hide the scan's file packing from the tests below."""
-    from searchengine_spark.plans.build import IndexBuilder
-
-    sc = spark.sparkContext
-    stage_blocks = IndexBuilder._stage_blocks
-
-    def in_group(self):
-        with _job_group(sc, BLOCKS_GROUP):
-            return stage_blocks(self)
-
+    """A small default-layout (64 term buckets) build whose stage writes
+    each run in their own Spark job group ("build:<stage>"). Never warmed:
+    a cached postings table would hide the scan's file packing from the
+    tests below."""
     work = str(tmp_path_factory.mktemp("packed_work"))
     eng = SearchEngine(spark, work)
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(IndexBuilder, "_stage_blocks", in_group)
+    with _stage_writes_grouped(spark.sparkContext, "build"):
         eng.build_index(gen_pages_spark(spark, 60, partitions=4))
     yield eng
+    shutil.rmtree(work, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def packed_upsert(spark, packed_build, tmp_path_factory):
+    """A copy of packed_build's index with one upsert batch (updated and
+    new urls) applied, its stage writes grouped "upsert:<stage>"."""
+    from searchengine_spark.sources.corpus import gen_pages_local
+
+    work = str(tmp_path_factory.mktemp("packed_upsert") / "w")
+    shutil.copytree(packed_build.io.work_dir, work)
+    eng = SearchEngine(spark, work)
+    base = gen_pages_local(60)
+    changed = [dict(base[i], html=base[i + 30]["html"],
+                    text=base[i + 30]["text"]) for i in range(3)]
+    changed += gen_pages_local(63)[-3:]
+    pdf = spark.createDataFrame(
+        [(c["url"], c["warc_ts"], c["html"], c["text"], c["lang"])
+         for c in changed],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    with _stage_writes_grouped(spark.sparkContext, "upsert"):
+        report = eng.upsert_docs(pdf)
+    yield eng, report
     shutil.rmtree(work, ignore_errors=True)
 
 
@@ -364,11 +430,62 @@ def test_blocks_write_packs_bucket_files(spark, packed_build):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     tasks = [tracker.getStageInfo(s).numTasks
-             for j in tracker.getJobIdsForGroup(BLOCKS_GROUP)
+             for j in tracker.getJobIdsForGroup("build:blocks")
              for s in tracker.getJobInfo(j).stageIds]
     n_files = len(packed_build.io.read_manifest("postings")["files"])
     assert n_files > sc.defaultParallelism and tasks
     assert max(tasks) < n_files, (tasks, n_files)
+
+
+def test_bucketed_writes_run_one_task_per_core(spark, packed_build,
+                                               packed_upsert):
+    """Every term-bucketed write of a build and of an upsert runs fewer
+    tasks than the buckets it writes, and at least one per core (each
+    bucket stays wholly in one task, so it is still written as one
+    file)."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n_buckets = packed_build.cfg.term_buckets
+    affected = len(packed_upsert[1]["affected_buckets"])
+    assert affected > cores
+    written = {"postings": affected, "terms": affected,
+               "site_stats": affected + 1}  # + the -1 pages bucket
+    for op, stage, buckets in [
+            ("build", "postings", n_buckets), ("build", "terms", n_buckets),
+            ("build", "site_stats", n_buckets + 1),
+            *(("upsert", s, b) for s, b in written.items())]:
+        tasks = _write_tasks(sc, f"{op}:{stage}")
+        assert min(buckets, cores) <= tasks < buckets, (op, stage, tasks)
+
+
+def test_bucketed_writes_keep_one_ordered_file_per_bucket(packed_build,
+                                                          packed_upsert):
+    """After the build and after the upsert's rewrites, every live bucket
+    directory of every table holds exactly one file; postings files stay
+    (term, doc_id)-ordered and docs files doc_id-ascending."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    for eng in (packed_build, packed_upsert[0]):
+        for table in ("docs", "postings", "terms", "site_stats", "blocks"):
+            files = [f["path"] for f in eng.io.read_manifest(table)["files"]]
+            dirs = [os.path.dirname(p) for p in files]
+            assert len(set(dirs)) == len(dirs), (table, len(dirs))
+            for rel in files:
+                path = os.path.join(eng.io.work_dir, rel)
+                if table == "postings":
+                    t = pq.read_table(path, columns=["term", "doc_id"])
+                    rows = list(zip(t["term"].to_pylist(),
+                                    t["doc_id"].to_pylist()))
+                    assert all(a < b for a, b in zip(rows, rows[1:])), rel
+                elif table == "docs":
+                    ids = pq.read_table(path, columns=["doc_id"])[
+                        "doc_id"].to_pylist()
+                    assert ids == sorted(ids), rel
+    rewritten = [f for f in packed_upsert[0].io.read_manifest("postings")
+                 ["files"] if "gen-" in f["path"]]
+    assert rewritten
 
 
 def test_packed_blocks_match_one_file_per_task(spark, packed_build):
@@ -428,9 +545,10 @@ def _wide_table(spark, work) -> TableIO:
 
 def test_read_lists_pinned_files_on_driver(spark, tmp_path):
     """A manifest-pinned read of a table with more files than the
-    parallel-listing threshold starts at most one Spark job (the schema
-    read, no distributed listing job) and leaves the session's threshold
-    as it found it — on success and on every failure path."""
+    parallel-listing threshold starts no Spark job (no distributed
+    listing job; the manifest's schema spares the inference job) and
+    leaves the session's threshold as it found it — on success and on
+    every failure path."""
     import json
     import os
 
@@ -444,7 +562,7 @@ def test_read_lists_pinned_files_on_driver(spark, tmp_path):
     group = "tableio-read-listing"
     with _job_group(sc, group):
         t = io.read("t")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
     assert spark.conf.get(key, None) == before
     assert t.count() == 400
     assert t.filter(F.col("pk") == 3).count() == 10
@@ -464,15 +582,15 @@ def test_read_lists_pinned_files_on_driver(spark, tmp_path):
     with open(mpath) as f:
         manifest = json.load(f)
     files = manifest["files"]
-    # a listed file that is not parquet: the read raises inside Spark
-    bogus = os.path.join(io.path("t"), "pk=0", "not-parquet.parquet")
-    with open(bogus, "w") as f:
-        f.write("garbage")
+    # a listed file outside the table's directory: the read raises inside
+    # Spark (wrong basePath for that root path)
+    bogus = os.path.join(io.work_dir, "elsewhere.parquet")
+    shutil.copy(os.path.join(io.work_dir, files[0]["path"]), bogus)
     manifest["files"] = [{"path": os.path.relpath(bogus, io.work_dir),
                           "rows": 0, "bytes": 7}]
     with open(mpath, "w") as f:
         json.dump(manifest, f)
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="basePath"):
         io.read("t")
     assert spark.conf.get(key, None) == before
 

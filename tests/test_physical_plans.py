@@ -3,7 +3,7 @@
 SURVEY.md §4: pushdown/pruning are Catalyst built-ins we must actually hit;
 these tests read executedPlan to prove the scan shapes hold (the 100 TB
 argument: a query touches only its terms' buckets, scans never drag html,
-top-k plans as TakeOrderedAndProject, no stage caps parallelism)."""
+top-k plans as TakeOrderedAndProject)."""
 
 import pyspark.sql.functions as F
 
@@ -68,12 +68,6 @@ def test_docs_scan_never_reads_text_for_stats(built_engine):
     agg = docs.groupBy("site").agg(F.count("*").alias("pages"))
     schema_lines = [ln for ln in _plan(agg).splitlines() if "ReadSchema" in ln]
     assert schema_lines and "text" not in schema_lines[0]
-
-
-def test_no_stage_caps_parallelism_below_cores(built_engine):
-    cfg = built_engine.cfg
-    assert cfg.doc_id_buckets >= 32
-    assert cfg.term_buckets >= 32
 
 
 def test_site_stats_frame_is_join_free_on_sited_postings(built_engine):
