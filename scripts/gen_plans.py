@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate docs/PLANS.md — `.explain("formatted")` evidence for the
-engine's headline physical plans: partition pruning + filter pushdown on
-the postings scan, broadcast joins for query terms and the lexicon, the
+engine's headline physical plans: manifest file pruning + filter pushdown
+on the postings scan, broadcast joins for query terms and the lexicon, the
 narrow per-doc aggregation of the relational BM25 path, and
 TakeOrderedAndProject for top-k. Run: `python scripts/gen_plans.py`."""
 
@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # scratch directory, parquet part-file names and the per-session
 # expression / exchange-plan / RDD ids
 _TMP_DIR = re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+")
-_PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}[\w.]*?\.parquet")
+_PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}[\w.-]*?\.parquet")
 _IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
 
 
@@ -70,8 +70,9 @@ def main() -> None:
         "/root/testdata/sf0.001/documents.parquet"))
 
     sections = [
-        ("Exact BM25 candidates — partition-pruned postings scan "
-         "(PartitionFilters on term_bucket, PushedFilters on term), "
+        ("Exact BM25 candidates — file-pruned postings scan (only the "
+         "files whose manifest bucket set holds the query terms' "
+         "term_buckets; PushedFilters on term), "
          "broadcast query terms, single hash-agg for AND+Σscore",
          plan(spark, qe.candidates_df(terms))),
         ("Relational BM25 top-k — one token scan, narrow per-doc "
@@ -86,10 +87,10 @@ def main() -> None:
          plan(spark, IndexBuilder(spark, eng.io, eng.cfg)._site_stats_frame(
              eng.io.read("docs"), eng.io.read("postings")))),
         ("Blocks stage — the encoder consumes the file-sorted, "
-         "bucket-partitioned postings scan directly: scan -> "
+         "bucket-clustered postings scan directly: scan -> "
          "mapInArrow, ZERO Exchange; posting rows are never shuffled or "
-         "re-sorted (every postings writer keeps files (term, doc_id)-"
-         "ordered)",
+         "re-sorted (every postings writer keeps files (term_bucket, "
+         "term, doc_id)-ordered)",
          plan(spark, build_blocks(
              eng.io.read("postings"),
              eng.io.read_manifest("blocks")["extra"]["head_terms"],

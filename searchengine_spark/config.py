@@ -14,9 +14,11 @@ class EngineConfig:
     # query analysis: prune lemma if df/N > threshold
     # (reference SearchServiceImpl.java:161)
     stopword_df_ratio: float = 0.95
-    # deterministic doc-id assignment buckets (shuffle width of the
-    # assignment stage; raise to thousands on a real cluster). Must never
-    # cap parallelism below the core count — 64 covers local[32].
+    # deterministic doc-id assignment buckets: the logical url_bucket
+    # layout of the docs table (raise to thousands on a real cluster).
+    # Buckets are not files: the table is min(buckets, cores) files, each
+    # holding whole buckets, so the count must never cap parallelism
+    # below the core count — 64 covers local[32].
     doc_id_buckets: int = 64
     # posting-block codec
     block_size: int = 128
@@ -24,7 +26,9 @@ class EngineConfig:
     # doc_id so no single build task materializes a full stopword posting list
     salt_df_threshold: int = 50_000
     salt_shard_docs: int = 25_000  # docs per range shard for head terms
-    # postings layout: term-hash buckets (partition pruning at query time)
+    # postings/terms/site_stats/blocks layout: term-hash buckets, the unit
+    # of query-time file pruning (the manifest records each file's bucket
+    # set; a table is min(buckets, cores) files)
     term_buckets: int = 64
     # strategy="auto" routing: serve from the driver (pyarrow, no Spark
     # job) while every query term's posting list fits one process
@@ -40,9 +44,9 @@ def recommended_spark_conf() -> dict[str, str]:
 
     FileOutputCommitter v2 commits task output into the destination as
     each task finishes instead of a serial driver-side rename pass at job
-    commit — on a 65-directory partitioned stage write that rename pass
-    is pure width-independent driver wall (measured: 240k-doc build at
-    local[32] 17.9 s → 15.3 s, −14%). The v2 trade-off (a failed JOB can
+    commit — that rename pass is pure width-independent driver wall
+    (measured on the former 65-directory partitioned stage writes:
+    240k-doc build at local[32] 17.9 s → 15.3 s, −14%). The v2 trade-off (a failed JOB can
     leave partial files in the destination) is fully covered by this
     engine's own commit protocol: readers are manifest-pinned
     (sources/tableio.py::TableIO.read — only files listed by a COMPLETE
@@ -83,3 +87,26 @@ def committer_v2(spark):
         yield
     finally:
         hconf.set(key, old) if old is not None else hconf.unset(key)
+
+
+@contextmanager
+def aqe_off(spark):
+    """Scope adaptive query execution off around an engine write phase
+    (build, upsert/remove apply); queries keep the session's setting.
+    The write phases' exchanges are explicit bucket repartitions AQE
+    cannot coalesce or re-plan, so its only effect there is extra
+    query-stage job boundaries — each one width-independent driver wall
+    (job scheduling + re-plan gap). Measured: a 240k-doc build at
+    local[32], AQE on 28.4/31.0 s vs off 24.6/25.7 s (13–17% faster off);
+    a 50-page upsert into 2,000 pages at local[4], 37 → 21 Spark jobs and
+    median docs_per_s 5.25 → 5.76 over five alternating pairs. The
+    session value is restored on every exit path; conf is session-wide,
+    so a query racing a write phase sees its setting — plans stay
+    correct either way, only stage boundaries differ."""
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)

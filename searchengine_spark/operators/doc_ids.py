@@ -54,7 +54,7 @@ def attach_doc_ids(df: DataFrame, offsets: dict[int, int], n_buckets: int,
 
     keep_bucket_as: keep the bucket column under that name instead of
     dropping it. The window already hash-partitions the frame by the
-    bucket, so a downstream partitionBy(bucket) write needs NO further
+    bucket, so a downstream bucket-clustered write needs NO further
     exchange — recomputing the same value into a fresh column would cost
     the build a third full shuffle of the docs table."""
     mapping = F.create_map(*[x for b in range(n_buckets)

@@ -25,7 +25,7 @@ a full stopword posting list. Because sharding is by doc RANGE (not hash
 salt), per-shard block streams are disjoint and ordered — global posting
 order needs zero merge pass, and shard boundaries align with the WAND
 range partitioning (range = shard width). block_id is sequential within
-a (term, shard) run PER ENCODE TASK only: a bucket file larger than
+a (term, shard) run PER ENCODE TASK only: a postings file larger than
 maxPartitionBytes splits mid-run and each split restarts the counter,
 so (term, shard, block_id) is NOT a global key — no engine
 path uses it as one (WAND and serving order blocks by (shard, doc_min);
@@ -328,17 +328,18 @@ def build_blocks(postings: DataFrame, head_terms: list[str], avgdl: float,
 
     The input must arrive in (term, doc_id) order within each task, with
     every term's postings in one task — a scan of the postings table
-    gives exactly that: every FILE is (term, doc_id)-ordered and
-    bucket-partitioned by term — and shard = doc_id // salt_shard_docs is
-    monotonic in doc_id within a term, so file order IS (term, shard,
-    doc_id) order. The streaming `mapInArrow` encoder consumes the scan
+    gives exactly that: every FILE holds whole term buckets, each a
+    (term, doc_id)-ordered run (files are (term_bucket, term, doc_id)-
+    ordered) — and shard = doc_id // salt_shard_docs is monotonic in
+    doc_id within a term, so every term's rows are one contiguous
+    (shard, doc_id)-ordered run. The streaming `mapInArrow` encoder consumes the scan
     directly and cuts blocks at run boundaries: ZERO exchange, zero sort
     of posting rows. The scan keeps Spark's default file packing (about
-    one task per core): a task that reads several bucket files back to
+    one task per core): a task that reads several postings files back to
     back still sees whole (term, shard) runs, because term → bucket is a
     function — runs from different files never share a term, so every
     file boundary is also a run boundary. A run split across Arrow
-    batches (or file splits of oversized buckets) yields an extra smaller
+    batches (or file splits of oversized files) yields an extra smaller
     block; the block counter carries across batches within a task, so
     (term, shard, block_id) stays unique per task. (WAND orders by
     (shard, doc_min), never block_id.)

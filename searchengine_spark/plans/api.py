@@ -52,8 +52,16 @@ class SearchEngine:
 
     def build_index(self, pages: DataFrame, resume: bool = False) -> dict:
         report = IndexBuilder(self.spark, self.io, self.cfg).build(pages, resume=resume)
-        self._query_engine = None  # stats changed; rebuild lazily
+        self._drop_query_engine()  # stats changed; rebuild lazily
         return report
+
+    def _drop_query_engine(self) -> None:
+        """Forget the query engine after the index changed (a new one is
+        built lazily on the next query), unpersisting the tables its
+        warm() pinned — they cache the old snapshot."""
+        qe, self._query_engine = self._query_engine, None
+        if qe is not None:
+            qe.release()
 
     def is_indexing(self) -> bool:
         return self._build_thread is not None and self._build_thread.is_alive()
@@ -75,7 +83,7 @@ class SearchEngine:
                            interruptOnCancel=True)
             try:
                 builder.build(pages, resume=resume)
-                self._query_engine = None  # stats changed; rebuild lazily
+                self._drop_query_engine()  # stats changed; rebuild lazily
             except BaseException as exc:
                 self._build_error = exc
 
@@ -144,32 +152,32 @@ class SearchEngine:
     def upsert_docs(self, changed_pages: DataFrame) -> dict:
         from ..streaming.incremental import upsert_docs
         report = upsert_docs(self.spark, self.io, self.cfg, changed_pages)
-        self._query_engine = None
+        self._drop_query_engine()
         return report
 
     def remove_site(self, site: str) -> dict:
         from ..streaming.incremental import remove_docs
         report = remove_docs(self.spark, self.io, self.cfg, site=site)
-        self._query_engine = None
+        self._drop_query_engine()
         return report
 
     def remove_page(self, url: str) -> dict:
         from ..streaming.incremental import remove_docs
         report = remove_docs(self.spark, self.io, self.cfg, url=url)
-        self._query_engine = None
+        self._drop_query_engine()
         return report
 
     def refresh_blocks(self) -> dict:
         """Blocks-only maintenance rebuild: restore tight block-max bounds
         (and head-term sharding) after incremental deltas marked the blocks
         manifest's avgdl stale — one postings scan, no docs/postings
-        rewrite, crash-safe partition-overwrite commit. The Iceberg analog
+        rewrite, crash-safe file-replacement commit. The Iceberg analog
         is a metadata-refreshing table OPTIMIZE."""
         from ..sources.tableio import resolve_layout
 
         cfg = resolve_layout(self.io, self.cfg)
         report = IndexBuilder(self.spark, self.io, cfg).refresh_blocks()
-        self._query_engine = None  # block bounds changed; rebuild lazily
+        self._drop_query_engine()  # block bounds changed; rebuild lazily
         return report.to_json()
 
     def resume_upsert(self) -> dict | None:
@@ -178,5 +186,5 @@ class SearchEngine:
         nothing is pending."""
         from ..streaming.incremental import resume_delta
         report = resume_delta(self.spark, self.io, self.cfg)
-        self._query_engine = None
+        self._drop_query_engine()
         return report

@@ -6,11 +6,11 @@ crawl's output is our input table; every MySQL read-modify-write counter
 (df increment, RecursiveSearch.java:150-161) becomes a declarative
 aggregation; each stage commit is a checkpoint (manifest + parquet dir).
 
-Stage graph (each stage resumable, per-partition lineage in _manifest/):
+Stage graph (each stage resumable, per-file lineage in _manifest/):
 
   docs      pages --extract(mapInPandas)--> +deterministic doc_id
   postings  docs --tokenize+tf(mapInPandas)--> (term, doc_id, tf, dl, site)
-            partitioned by term_bucket, sorted by (term, doc_id) within files
+            clustered by term_bucket, sorted (term_bucket, term, doc_id)
   terms     postings groupBy(term) -> df, cf   (A2; exact, not incremental)
   stats     scalar corpus stats: n_docs, total_tokens, avgdl  (A3)
 
@@ -19,9 +19,11 @@ Scale notes (100 TB / 10^12 docs):
   downstream ever shuffles raw html
 - tokens are pre-aggregated per document inside the Arrow batch (map-side
   combine), so the only wide exchange is the term_bucket repartition
-- bucketed writes run min(buckets, cores) tasks (TableIO.cluster), each
-  bucket wholly in one task and one file: the bucket count sets the
-  layout and query-time pruning, not the write parallelism
+- every bucketed table is min(buckets, cores) files, one per write task
+  (TableIO.cluster), each holding whole buckets; the manifest records
+  each file's bucket set and readers prune files through it. The bucket
+  count sets doc ids and query-time pruning granularity, not the file
+  count or the write parallelism
 - doc-id assignment is one hash-bucket shuffle + per-bucket sort; bucket
   count is config (raise to thousands of buckets on a real cluster)
 - head-term skew is handled at the block-build stage (operators/postings.py)
@@ -83,28 +85,12 @@ class IndexBuilder:
         else:
             self.io.invalidate_from(STAGES, STAGES[0])
 
-        # AQE is off during builds (queries keep the session's setting).
-        # The build's exchanges are explicit bucket repartitions AQE cannot
-        # coalesce or re-plan, so its only effect here is extra query-stage
-        # job boundaries — each one width-independent driver wall (job
-        # scheduling + re-plan gap). Measured (240k docs, local[32],
-        # interleaved same-window A/B, near-zero steal): AQE on 28.4/31.0 s
-        # vs off 24.6/25.7 s — off is 13–17% faster. The session value is
-        # restored on every exit path; conf is session-wide, so a query
-        # racing an async build sees the build's setting — plans stay
-        # correct either way, only stage boundaries differ.
-        from ..config import committer_v2
+        # AQE off and committer v2, both scoped to the build (engine-owned
+        # write phase; see config.aqe_off and config.committer_v2)
+        from ..config import aqe_off, committer_v2
 
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_old = self.spark.conf.get(aqe_key, "true")
-        self.spark.conf.set(aqe_key, "false")
-        try:
-            # committer v2 scoped the same way (engine-owned write phase;
-            # measured −14% build wall — see config.committer_v2)
-            with committer_v2(self.spark):
-                return self._build_stages(pages, resume, report)
-        finally:
-            self.spark.conf.set(aqe_key, aqe_old)
+        with aqe_off(self.spark), committer_v2(self.spark):
+            return self._build_stages(pages, resume, report)
 
     def _build_stages(self, pages: DataFrame, resume: bool,
                       report: dict) -> dict:
@@ -208,28 +194,28 @@ class IndexBuilder:
         # loads), then the extract UDF runs exactly once and the id window
         # shuffles the html-free extracted frame.
         #
-        # The table is PARTITIONED by url_bucket (the same md5 bucket that
-        # orders doc_id assignment, so each partition holds a contiguous
-        # doc_id range — parquet row-group stats stay tight for the
-        # serving path's doc_id point reads) and incremental upserts
-        # rewrite only the touched buckets via overwrite_partitions
+        # The table is BUCKETED by url_bucket (the same md5 bucket that
+        # orders doc_id assignment, so each bucket is a contiguous doc_id
+        # range — parquet row-group stats stay tight for the serving
+        # path's doc_id point reads) and incremental upserts rewrite only
+        # the files holding touched buckets via replace_buckets
         # (streaming/incremental.py) instead of the whole table.
         n_b = self.cfg.doc_id_buckets
         offsets = compute_bucket_offsets(pages, n_b)
         extracted = extract_docs(pages)
         # the id window already hash-partitions by the url bucket; keeping
-        # its column (instead of recomputing + repartitioning) makes the
-        # partitionBy write exchange-free — one task owns each bucket
+        # its column (instead of recomputing + repartitioning) keeps the
+        # write exchange-free — each bucket is wholly in one window task,
+        # and the narrow coalesce merges whole tasks down to one per core
         docs = attach_doc_ids(extracted, offsets, n_b,
                               keep_bucket_as="url_bucket")
-        # sort_by keeps files doc_id-ascending (tight row-group stats for
-        # the serving path's point reads); TableIO prepends the
-        # url_bucket prefix the partitioned writer requires
-        # (_sorted_for_write — the EliminateSorts discipline lives there)
+        # sort_by keeps each bucket doc_id-ascending (tight row-group
+        # stats for the serving path's point reads)
         docs = docs.select("doc_id", "url", "site", "title", "text",
                            "url_bucket")
         return self.io.write_stage(
-            docs, "docs", partition_by=["url_bucket"], sort_by=["doc_id"],
+            docs.coalesce(self.io.write_tasks(n_b)), "docs",
+            bucket_col="url_bucket", sort_by=["doc_id"],
             extra={"doc_id_buckets": n_b},
         )
 
@@ -237,13 +223,12 @@ class IndexBuilder:
         cfg = self.cfg
         postings = tokens_from_docs(self.io.read("docs")).withColumn(
             "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
-        # one task per core, each bucket wholly in one task; sort_by lays
-        # files out as (term, doc_id)-ordered runs for the exchange-free
-        # block encoder and parquet min/max skipping (TableIO prepends the
-        # term_bucket prefix the partitioned writer requires)
+        # one task (and file) per core, each bucket wholly in one task;
+        # sort_by lays each bucket out as a (term, doc_id)-ordered run for
+        # the exchange-free block encoder and parquet min/max skipping
         return self.io.write_stage(
             self.io.cluster(postings, "term_bucket", cfg.term_buckets),
-            "postings", partition_by=["term_bucket"],
+            "postings", bucket_col="term_bucket",
             sort_by=["term", "doc_id"],
             extra={"term_buckets": cfg.term_buckets},
         )
@@ -274,11 +259,10 @@ class IndexBuilder:
                                 F.col("term"))).alias("head_terms"))
             .withColumn("term_bucket", term_bucket_col(F.col("term"), self.cfg.term_buckets))
         )
-        # each bucket wholly in one task, so the partitioned write emits
-        # one file per bucket, not tasks×buckets small files
+        # one file per core, each bucket wholly in one file
         res = self.io.write_stage(
             self.io.cluster(terms, "term_bucket", self.cfg.term_buckets),
-            "terms", partition_by=["term_bucket"])
+            "terms", bucket_col="term_bucket")
         # re-commit the manifest with the observed totals (atomic replace;
         # a crash in between leaves a valid manifest and _stage_stats
         # falls back to its own aggregation)
@@ -336,8 +320,10 @@ class IndexBuilder:
           (site, term_bucket=-1, pages=<page count>, lemmas=0)
         Distinct (site, term) pairs partition cleanly by term_bucket, so
         incremental updates rewrite only the affected buckets' rows (plus
-        the -1 pages rows) — the same partition-overwrite discipline as
-        postings/terms. buckets=None computes every bucket (full build).
+        the -1 pages rows) — the same file-replacement discipline as
+        postings/terms. buckets=None computes every bucket (full build);
+        otherwise postings may hold other buckets too (a pinned read
+        keeps whole files) and only `buckets` are counted.
 
         Plan shape: postings carry site_id = xxhash64(site) (an 8-byte
         int attached BEFORE the wide shuffle, functions/udfs.py — 64-bit
@@ -376,7 +362,7 @@ class IndexBuilder:
         # term buckets plus the -1 pages bucket
         return self.io.write_stage(
             self.io.cluster(frame, "term_bucket", self.cfg.term_buckets + 1),
-            "site_stats", partition_by=["term_bucket"])
+            "site_stats", bucket_col="term_bucket")
 
     def refresh_blocks(self):
         """Blocks-only maintenance rebuild: re-encode every posting block
@@ -388,8 +374,8 @@ class IndexBuilder:
         rebuild; this costs O(one postings scan), touches neither docs nor
         postings, re-shards terms whose df crossed the salting threshold
         since the last full build, and commits via the crash-safe
-        partition-overwrite protocol (old blocks snapshot readable until
-        the manifest swap — safe against a live serving reader, unlike
+        file-replacement protocol (old blocks snapshot readable until the
+        manifest swap — safe against a live serving reader, unlike
         write_stage's destructive overwrite).
 
         Refuses while a staged delta is pending: postings could be at
@@ -416,7 +402,7 @@ class IndexBuilder:
                 blocks, head, avgdl = self._blocks_frame(
                     self.io.read("postings"))
                 with large_arrow_batches(self.spark):
-                    res = self.io.overwrite_partitions(
+                    res = self.io.replace_buckets(
                         blocks, "blocks", "term_bucket",
                         list(range(cfg.term_buckets)),
                         sort_by=["term", "shard", "doc_min"],
@@ -448,13 +434,14 @@ class IndexBuilder:
         writer sorts them so) and shard is monotonic in doc_id within a
         term, so the encoder consumes the scan directly — only the tiny
         encoded-blocks frame is ever sorted. Encode parallelism is the
-        scan's default file packing (~one task per core): a task may read
-        several bucket files, which never share a term, so runs stay whole
-        (build_blocks). Scale notes: a bucket file larger than
-        maxPartitionBytes splits across tasks mid-run — blocks stay
-        disjoint/valid (each split encodes its rows as fresh runs), you
-        just get one short block per split, so raise term_buckets with
-        corpus size."""
+        scan's default file packing (~one task per core): each postings
+        file holds whole buckets and a task may read several files, which
+        never share a term, so runs stay whole (build_blocks) and every
+        blocks file holds whole buckets too. Scale notes: a postings file
+        larger than maxPartitionBytes splits across tasks mid-run — blocks
+        stay disjoint/valid (each split encodes its rows as fresh runs)
+        and the manifest records the split bucket in both blocks files;
+        you just get one short block per split."""
         from ..operators.postings import build_blocks
 
         cfg = self.cfg
@@ -487,7 +474,7 @@ class IndexBuilder:
         blocks, head, avgdl = self._blocks_frame(self.io.read("postings"))
         with large_arrow_batches(self.spark):
             return self.io.write_stage(
-                blocks, "blocks", partition_by=["term_bucket"],
+                blocks, "blocks", bucket_col="term_bucket",
                 sort_by=["term", "shard", "doc_min"],
                 # avgdl is recorded because max_tfpart bakes it in: WAND's
                 # block-max bounds are only tight while the corpus avgdl

@@ -3,11 +3,12 @@
 Reference lifecycle replaced (SURVEY.md §3.1): the reference issues one SQL
 round-trip per lemma, per (lemma,page) pair, and re-fetches pages over HTTP
 for titles (services/SearchServiceImpl.java:96-131). Here a query is ONE
-Spark job over partition-pruned postings:
+Spark job over file-pruned postings:
 
   driver: lemmatize query -> look up query terms in `terms` (bucket-pruned
           scan of a tiny frame) -> stopword prune df/N>0.95 -> rarest-first
-  exec:   postings scan pruned to the query terms' term_buckets
+  exec:   postings scan pinned to the files holding the query terms'
+          term_buckets (file pruning through the manifest)
           ⋈ broadcast(query terms + idf)            [J1, broadcast hash join]
           -> per-posting BM25 term score             [pure column expr, codegen]
           -> groupBy(doc_id): nt=count, score=sum    [J3+A6 in ONE hash agg]
@@ -73,20 +74,25 @@ class QueryEngine:
                     f"table '{t}' exists but its stage is not complete "
                     "(aborted/interrupted build) — refusing to serve it; "
                     "resume the build first")
-            # serving reads directories via pyarrow (plans/serve.py) —
-            # clear any interrupted-commit debris so dir == snapshot.
-            # required=True: a skipped vacuum here would silently serve
-            # orphan generation files (duplicate postings, double-counted
-            # scores), so block until the cleanup actually ran
-            self.io.vacuum(t, required=True)
             df = self.io.read(t).persist(StorageLevel.MEMORY_AND_DISK)
             df.count()  # materialize now, not on first query
             self._warm[t] = df
             pinned.append(t)
         return pinned
 
-    def _table(self, name: str):
-        return self._warm.get(name) or self.io.read(name)
+    def release(self) -> None:
+        """Unpersist the frames warm() pinned. An engine is bound to the
+        snapshot it was built on; whoever replaces it (a build or an
+        upsert makes a new snapshot) calls this, or every warm() of a
+        later engine pins another copy of the tables."""
+        for df in self._warm.values():
+            df.unpersist()
+        self._warm.clear()
+
+    def _table(self, name: str, buckets=None):
+        """The warm frame of a table, or a read pinned to the files
+        holding `buckets`; callers keep the row filter they need."""
+        return self._warm.get(name) or self.io.read(name, buckets)
 
     def _assert_no_pending_delta(self) -> None:
         """An interrupted upsert/remove leaves tables at a MIX of pre- and
@@ -112,9 +118,7 @@ class QueryEngine:
             return []
         buckets = sorted({term_bucket(t, self.cfg.term_buckets)
                           for t in lemmas})
-        terms = self._table("terms")
-        rows = (terms
-                .filter(F.col("term_bucket").isin(buckets))  # partition prune
+        rows = (self._table("terms", buckets)
                 .filter(F.col("term").isin(lemmas))
                 .select("term", "df").collect())
         return rank_query_terms([(r["term"], r["df"]) for r in rows],
@@ -132,9 +136,7 @@ class QueryEngine:
         qt = self.spark.createDataFrame(
             [(t["term"], t["idf"]) for t in terms], "term string, idf double")
 
-        postings = self._table("postings")
-        q = (postings
-             .filter(F.col("term_bucket").isin(buckets))
+        q = (self._table("postings", buckets)
              .filter(F.col("term").isin([t["term"] for t in terms]))
              .join(F.broadcast(qt), "term"))
         if relevance_mode == "bm25":

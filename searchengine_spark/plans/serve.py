@@ -2,17 +2,21 @@
 index, no Spark job.
 
 The cluster (plans/build.py) writes a layout that is deliberately
-serveable by ANY single process: term-bucketed directories of compressed
-posting blocks with block-max metadata, a bucketed term dictionary, and a
-doc store whose files carry doc_id min/max stats. A query touches:
+serveable by ANY single process: term-bucketed files of compressed
+posting blocks with block-max metadata, a term-bucketed dictionary, and a
+doc store whose files carry doc_id min/max stats. Every read starts from
+the stage manifest (TableIO.pinned_files): the committed snapshot's file
+list, pruned to the files whose bucket set holds the query's buckets. A
+query touches:
 
-    terms/term_bucket=<b(q)>/      (dictionary rows for the query's buckets)
-    blocks/term_bucket=<b(q)>/     (posting blocks for the query terms)
-    docs/ row groups selected by doc_id stats   (k rows of metadata)
+    terms files holding b(q)     (dictionary rows for the query's terms)
+    blocks files holding b(q)    (posting blocks for the query terms)
+    docs row groups selected by doc_id stats   (k rows of metadata)
 
 all via pyarrow dataset filters — so interactive latency is file-read
 bound (milliseconds), while the SAME files remain the source for the
-distributed exact/WAND paths. This mirrors production engines: Spark
+distributed exact/WAND paths. Debris of an interrupted commit is never
+read: it is in no manifest. This mirrors production engines: Spark
 builds and maintains the index; a thin serving tier reads it.
 
 Scale caveat (documented, by design): the driver path loads the query
@@ -32,10 +36,17 @@ from ..operators.postings import (bm25_idf, np_intersect_score_blocks,
 from .build import term_bucket
 
 
-def _dataset(path: str):
+def _dataset(io, table: str, buckets=None):
+    """pyarrow dataset over the table's committed snapshot: the manifest's
+    files holding any of `buckets` (every file when None), read with the
+    manifest's schema — the files a Spark read pins, never a directory
+    listing."""
     import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return ds.dataset(path, format="parquet", partitioning="hive")
+    files, schema = io.pinned_files(table, buckets)
+    return ds.dataset(files, format="parquet",
+                      schema=to_arrow_schema(schema) if schema else None)
 
 
 def rank_query_terms(rows, n_docs: int, cfg: EngineConfig) -> list[dict]:
@@ -57,7 +68,7 @@ def lookup_terms(io, cfg: EngineConfig, lemmas: list[str],
     import pyarrow.dataset as ds
 
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in lemmas})
-    d = _dataset(io.path("terms"))
+    d = _dataset(io, "terms", buckets)
     tbl = d.to_table(
         filter=(ds.field("term_bucket").isin(buckets)
                 & ds.field("term").isin(lemmas)),
@@ -82,7 +93,7 @@ def driver_topk(io, cfg: EngineConfig, terms: list[dict], k: int,
     idf = {t["term"]: t["idf"] for t in terms}
 
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
-    d = _dataset(io.path("blocks"))
+    d = _dataset(io, "blocks", buckets)
     tbl = d.to_table(
         filter=(ds.field("term_bucket").isin(buckets)
                 & ds.field("term").isin(term_order)),
@@ -117,7 +128,7 @@ def fetch_docs(io, doc_ids: list[int],
 
     if not doc_ids:
         return {}
-    d = _dataset(io.path("docs"))
+    d = _dataset(io, "docs")
     tbl = d.to_table(filter=ds.field("doc_id").isin(doc_ids),
                      columns=list(columns))
     out = {}
@@ -133,7 +144,7 @@ def driver_count_candidates(io, cfg: EngineConfig, terms: list[dict]) -> int:
 
     term_order = [t["term"] for t in terms]
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
-    d = _dataset(io.path("blocks"))
+    d = _dataset(io, "blocks", buckets)
     tbl = d.to_table(
         filter=(ds.field("term_bucket").isin(buckets)
                 & ds.field("term").isin(term_order)),

@@ -9,7 +9,7 @@ hit.
 
 Physical plan:
 
-  blocks scan, pruned to the query terms' term_buckets (partition prune)
+  blocks scan pinned to the files holding the query terms' term_buckets
     -> filter term ∈ Q                                [tiny fraction of index]
     -> explode block -> covered range_ids             [head-term blocks span
                                                        exactly one range: the
@@ -174,9 +174,9 @@ def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
     idf = {t["term"]: t["idf"] for t in terms}
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
 
+    # a cold read pins only the files holding the query's buckets
     blocks = (
-        (blocks_df if blocks_df is not None else io.read("blocks"))
-        .filter(F.col("term_bucket").isin(buckets))   # partition prune
+        (blocks_df if blocks_df is not None else io.read("blocks", buckets))
         .filter(F.col("term").isin(term_order))
     )
     # the rare-term range bound costs one extra driver job (~100 ms of
@@ -218,7 +218,7 @@ def candidate_ranges(blocks: DataFrame, terms: list[dict],
     without a posting of the rarest term can never produce a hit, so when
     the rarest term is unsharded (df ≤ salt_df_threshold — a BOUNDED
     decode) its posting ranges are computed once driver-side from its
-    partition-pruned blocks (≤ df postings ⇒ ≤ df/block_size block rows,
+    file-pruned blocks (≤ df postings ⇒ ≤ df/block_size block rows,
     a few hundred KB) and every term's coverage is filtered to them:
     exploded rows become O(Σ_t blocks_t + df_rare) instead of
     O(n_ranges). When even the rarest term is sharded, every query term

@@ -1,4 +1,4 @@
-"""Table IO seam + build manifest (checkpoint/resume + per-partition lineage).
+"""Table IO seam + build manifest (checkpoint/resume + per-file lineage).
 
 The target deployment writes Iceberg tables (`df.writeTo(...).append()`,
 snapshot per stage). This sandbox has no Iceberg runtime jar, so the seam
@@ -6,19 +6,30 @@ writes plain parquet directories and emulates the snapshot/manifest layer
 with JSON files — the build plan only talks to this module, so swapping in
 Iceberg is a one-file change.
 
+Layout: a bucketed table (docs by url_bucket; postings, terms, site_stats
+and blocks by term_bucket) is ONE flat directory of parquet files, written
+with no partitionBy: one file per write task, min(buckets, cores) files,
+each holding whole buckets sorted (bucket, <the table's sort keys>) and
+storing the bucket as a plain column. The bucket count sets the logical
+layout (doc ids, pruning granularity); the core count sets the file count.
+
 Manifest model (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics"): one JSON per completed stage under <work>/_manifest/:
 
-    {stage, status, rows, bytes, wall_ms, files: [{path, rows, bytes}, ...],
+    {stage, status, rows, bytes, wall_ms,
+     files: [{path, rows, bytes, buckets}, ...],
      schema, extra: {...}, format_version}
 
-`files` is the per-partition lineage — one entry per parquet part file,
-row counts read from parquet footers (no extra Spark job). `schema` is
-the table's read schema (Spark StructType JSON: data columns, then the
-partition columns), taken from the frame the writer wrote, so a pinned
-read never starts a schema-inference job. A stage is resumable iff its
-manifest says status=complete and the data dir exists; the reference's
-analog is the site status row lifecycle
+`files` is the per-file lineage — one entry per parquet part file, row
+counts read from parquet footers and `buckets` (the sorted set of bucket
+values the file holds) from its bucket column, both on the driver (no
+Spark job). Readers prune through it: read(table, buckets) pins only the
+files whose bucket set meets the requested buckets, the Iceberg analog of
+manifest-level partition pruning. `schema` is the table's read schema
+(Spark StructType JSON), taken from the frame the writer wrote, so a
+pinned read never starts a schema-inference job. A stage is resumable iff
+its manifest says status=complete and the data dir exists; the
+reference's analog is the site status row lifecycle
 (services/IndexingServiceImpl.java:80-108,165-171).
 
 `format_version` is the on-disk index format the manifest was written
@@ -52,9 +63,11 @@ _DISCOVERY_LOCK = threading.Lock()
 
 # The on-disk index format this code writes and reads. Bump it with any
 # change that makes tables written by older code unreadable (a column, a
-# file-ordering contract, a partition layout); such indexes must be
-# rebuilt. Version 2: table manifests carry their read schema.
-FORMAT_VERSION = 2
+# file-ordering contract, a file layout); such indexes must be rebuilt.
+# Version 2: table manifests carry their read schema. Version 3: bucketed
+# tables are flat min(buckets, cores)-file directories whose manifest
+# entries carry each file's bucket set (no hive bucket directories).
+FORMAT_VERSION = 3
 
 
 @dataclass
@@ -74,16 +87,6 @@ class StageResult:
             "bytes": self.bytes, "wall_ms": self.wall_ms, "files": self.files,
             "schema": self.schema, "extra": self.extra,
         }
-
-
-def read_schema(df: DataFrame, partition_by: list[str] | None) -> dict:
-    """The schema a parquet read of df's partitioned write yields: data
-    columns in df order, then the partition columns — StructType JSON
-    for the manifest."""
-    parts = partition_by or []
-    fields = ([f for f in df.schema.fields if f.name not in parts]
-              + [df.schema[c] for c in parts])
-    return StructType(fields).jsonValue()
 
 
 def in_buckets(df: DataFrame, col: str, values: list,
@@ -159,88 +162,147 @@ class TableIO:
 
     # --- write/read ----------------------------------------------------
 
+    def write_tasks(self, n_values: int) -> int:
+        """Write tasks, hence files, for n_values bucket values:
+        min(n_values, cores), at least one."""
+        return max(1, min(n_values,
+                          self.spark.sparkContext.defaultParallelism))
+
     def cluster(self, df: DataFrame, col: str, n_values: int) -> DataFrame:
-        """Hash-repartition df by col into min(n_values, cores) tasks for a
-        partitionBy(col) write. Each value of col lands wholly in one task,
-        so with the _sorted_for_write prefix every partition directory
-        gets exactly one file in the requested order (the exchange-free
-        blocks encoder needs that: a term never spans two files) — while
-        the write's task count follows the cores, not the bucket count."""
-        n = min(n_values, self.spark.sparkContext.defaultParallelism)
-        return df.repartition(n, col)
+        """Hash-repartition df by col into write_tasks(n_values) tasks.
+        Each value of col lands wholly in one task, so the bucketed write
+        gives one file per task holding whole buckets in the requested
+        order (the exchange-free blocks encoder needs that: a term never
+        spans two files) — the file count follows the cores, not the
+        bucket count."""
+        return df.repartition(self.write_tasks(n_values), col)
 
     @staticmethod
-    def _sorted_for_write(df: DataFrame, partition_by: list[str] | None,
-                          sort_by: list[str] | None) -> DataFrame:
-        """Apply the partitioned-write sort DISCIPLINE in one place: the
-        task ordering must LEAD with the partition columns, or the
-        partitionBy writer inserts its own partition-column sort and
-        Catalyst's EliminateSorts deletes the caller's — files silently
-        land in raw generation order (caught live once; pinned by pyarrow
-        per-file tests). Callers pass only the DATA ordering they want
-        inside each partition (sort_by); the partition-column prefix is
-        prepended here so no write site can forget it."""
-        if not sort_by:
-            return df
-        keys = [*(partition_by or []), *sort_by]
-        return df.sortWithinPartitions(*keys)
+    def _bucketed(df: DataFrame, bucket_col: str | None,
+                  sort_by: list[str] | None) -> DataFrame:
+        """The one write layout of a bucketed table: the bucket column
+        last (the column order readers see), each task's rows sorted by
+        (bucket, *sort_by) — so every file holds its buckets as
+        contiguous runs in the table's data order, and parquet row-group
+        stats on the bucket column prune within a file."""
+        if bucket_col is None:
+            return df.sortWithinPartitions(*sort_by) if sort_by else df
+        df = df.select(*[c for c in df.columns if c != bucket_col],
+                       bucket_col)
+        return df.sortWithinPartitions(bucket_col, *(sort_by or []))
+
+    def _file_entries(self, paths: list[str], dests: list[str],
+                      bucket_col: str | None) -> list[dict]:
+        """Manifest entries {path, rows, bytes[, buckets]} of the parquet
+        files `paths`, recorded under their final locations `dests`. Row
+        counts come from the footers and the bucket set from the file's
+        bucket column. The reads are I/O-bound and independent — a thread
+        pool keeps this driver-side lineage pass off the critical path
+        (serial walks were a fixed per-stage cost that parallelism can't
+        amortize)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow.compute as pc
+
+        def _stat(fp, dest):
+            f = pq.ParquetFile(fp)
+            entry = {"path": os.path.relpath(dest, self.work_dir),
+                     "rows": f.metadata.num_rows,
+                     "bytes": os.path.getsize(fp)}
+            if bucket_col is not None:
+                col = f.read(columns=[bucket_col]).column(0)
+                entry["buckets"] = sorted(
+                    v for v in pc.unique(col).to_pylist() if v is not None)
+            return entry
+
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            return list(ex.map(_stat, paths, dests))
+
+    @staticmethod
+    def _parquet_files(d: str) -> list[str]:
+        # sorted: the lineage (and so the pinned reads' file order) must
+        # not depend on the directory listing order
+        return sorted(os.path.join(root, fn) for root, _, fs in os.walk(d)
+                      for fn in fs if fn.endswith(".parquet"))
 
     def write_stage(self, df: DataFrame, stage: str, table: str | None = None,
-                    partition_by: list[str] | None = None,
+                    bucket_col: str | None = None,
                     extra: dict | None = None,
                     sort_by: list[str] | None = None) -> StageResult:
-        """Write df as the stage output + manifest with per-file lineage.
-        sort_by: desired within-file data ordering — the partition-column
-        prefix the writer requires is prepended automatically
-        (_sorted_for_write)."""
+        """Write df as the stage output + manifest with per-file lineage:
+        one file per task of df (callers size the tasks with cluster()).
+        bucket_col: the table's bucket column — each file's bucket set is
+        recorded for pruned reads. sort_by: the data ordering within each
+        bucket (_bucketed)."""
         table = table or stage
         target = self.path(table)
         t0 = time.monotonic()
-        df = self._sorted_for_write(df, partition_by, sort_by)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
+        df = self._bucketed(df, bucket_col, sort_by)
+        df.write.mode("overwrite").parquet(target)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        # sorted: the lineage (and so the pinned reads' file order) must
-        # not depend on the directory listing order
-        paths = sorted(os.path.join(root, fn)
-                       for root, _, fs in os.walk(target)
-                       for fn in fs if fn.endswith(".parquet"))
-        # footer reads are I/O-bound and independent — a thread pool keeps
-        # this driver-side lineage pass off the build's critical path
-        # (serial walks were a fixed per-stage cost that parallelism can't
-        # amortize, directly taxing measured scaling efficiency)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stat(fp):
-            return fp, pq.read_metadata(fp).num_rows, os.path.getsize(fp)
-
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            stats = list(ex.map(_stat, paths))
-        files, rows, nbytes = [], 0, 0
-        for fp, nrows, sz in stats:
-            files.append({
-                "path": os.path.relpath(fp, self.work_dir),
-                "rows": nrows, "bytes": sz,
-            })
-            rows += nrows
-            nbytes += sz
-        result = StageResult(stage=stage, status="complete", rows=rows,
-                             bytes=nbytes, wall_ms=wall_ms, files=files,
+        paths = self._parquet_files(target)
+        files = []
+        for fp, entry in zip(paths, self._file_entries(paths, paths,
+                                                       bucket_col)):
+            if entry["rows"]:
+                files.append(entry)
+            else:  # task 0 writes a file even when it got no rows
+                os.remove(fp)
+        result = StageResult(stage=stage, status="complete",
+                             rows=sum(f["rows"] for f in files),
+                             bytes=sum(f["bytes"] for f in files),
+                             wall_ms=wall_ms, files=files,
                              extra=extra or {},
-                             schema=read_schema(df, partition_by))
+                             schema=df.schema.jsonValue())
         self.write_manifest(result)
         return result
 
-    def read(self, table: str) -> DataFrame:
+    def _pinned(self, table: str, m: dict, buckets) -> list[str]:
+        """Absolute paths of the manifest's files whose bucket set meets
+        buckets (every file when buckets is None; a file without a bucket
+        set is always kept), after the strictness checks read() documents."""
+        if m.get("status") != "complete":
+            raise RuntimeError(
+                f"table '{table}' manifest status is "
+                f"{m.get('status')!r} — stage aborted/incomplete; resume "
+                "the build instead of reading it")
+        _check_version(m, self.work_dir, f"{table}.json")
+        want = None if buckets is None else set(buckets)
+        files = [os.path.join(self.work_dir, f["path"])
+                 for f in m.get("files", [])
+                 if want is None or "buckets" not in f
+                 or not want.isdisjoint(f["buckets"])]
+        missing = [p for p in files if not os.path.exists(p)]
+        if missing:
+            raise RuntimeError(
+                f"table '{table}' manifest references {len(missing)} "
+                f"missing file(s) (first: {missing[0]}) — committed data "
+                "was deleted out-of-band; rebuild the stage")
+        return files
+
+    def pinned_files(self, table: str, buckets=None
+                     ) -> tuple[list[str], StructType | None]:
+        """(files, read schema) of the table's committed snapshot, pruned
+        to the files holding any of `buckets` — what read() scans, for
+        readers outside Spark (the pyarrow serving path). A manifest-less
+        directory (fresh build in progress) gives all its files and no
+        schema."""
+        m = self.read_manifest(table)
+        if m is None:
+            return self._parquet_files(self.path(table)), None
+        return (self._pinned(table, m, buckets),
+                StructType.fromJson(m["schema"]))
+
+    def read(self, table: str, buckets=None) -> DataFrame:
         """Manifest-pinned read (snapshot isolation, Iceberg-style): when a
         stage manifest exists, read exactly ITS file list — not whatever
-        the directory currently holds — so an interrupted partition
-        overwrite (which adds new-generation files before the manifest
-        swap) can never surface duplicate or partial data to the Spark
-        paths. basePath keeps hive partition columns + pruning; the
+        the directory currently holds — so an interrupted file replacement
+        (which adds new-generation files before the manifest swap) can
+        never surface duplicate or partial data. buckets: pin only the
+        files whose bucket set meets them (file pruning through the
+        manifest); the rows of those files' other buckets come along, so
+        callers that need exactly `buckets` keep a row filter. The
         manifest's schema spares Spark its schema-inference job.
 
         Strictness: a COMPLETE manifest whose listed files are missing on
@@ -254,28 +316,14 @@ class TableIO:
         m = self.read_manifest(table)
         if m is None:
             return self.spark.read.parquet(base)
-        if m.get("status") != "complete":
-            raise RuntimeError(
-                f"table '{table}' manifest status is "
-                f"{m.get('status')!r} — stage aborted/incomplete; resume "
-                "the build instead of reading it")
-        _check_version(m, self.work_dir, f"{table}.json")
+        files = self._pinned(table, m, buckets)
         schema = StructType.fromJson(m["schema"])
-        files = [os.path.join(self.work_dir, f["path"])
-                 for f in m.get("files", [])]
-        missing = [p for p in files if not os.path.exists(p)]
-        if missing:
-            raise RuntimeError(
-                f"table '{table}' manifest references {len(missing)} "
-                f"missing file(s) (first: {missing[0]}) — committed data "
-                "was deleted out-of-band; rebuild the stage")
         if not files:
             return self.spark.createDataFrame([], schema)
         # list the pinned files on the driver: above the threshold (32
         # paths) Spark lists them with a distributed job — one extra job
-        # and ~0.4 s per read of a 64-bucket table on a 4-core host, for
-        # a listing the os.path.exists pass above already did on the
-        # driver
+        # and ~0.4 s per read on a 4-core host, for a listing the
+        # os.path.exists pass above already did on the driver
         conf = self.spark.conf
         with _DISCOVERY_LOCK:
             old = conf.get(_DISCOVERY_THRESHOLD, None)
@@ -289,14 +337,33 @@ class TableIO:
                 else:
                     conf.set(_DISCOVERY_THRESHOLD, old)
 
+    def rewrite_set(self, table: str, buckets) -> tuple[list[int], int]:
+        """(R, k): the buckets a rewrite of `buckets` must replace in table
+        and the number of live files holding them. R is the union of the
+        bucket sets of the files holding any of `buckets`, closed so that
+        no other live file holds a bucket of R — the file is the smallest
+        unit a rewrite replaces, so read(table, R) gives exactly the rows
+        of the buckets in R and replace_buckets(..., R) drops exactly
+        those k files."""
+        files = [set(f["buckets"])
+                 for f in (self.read_manifest(table) or {}).get("files", [])
+                 if "buckets" in f]
+        want = set(buckets)
+        while True:
+            hit = [b for b in files if not want.isdisjoint(b)]
+            grown = want.union(*hit)
+            if grown == want:
+                return sorted(want), len(hit)
+            want = grown
+
     # --- commit lock ----------------------------------------------------
     #
     # Writers are SINGLE-WRITER by contract (one build/upsert/vacuum at a
     # time per work_dir — the Iceberg analog is optimistic-concurrency
     # commit conflict detection, which this parquet emulation does not
     # implement). The lock below guards the one race that would corrupt
-    # data even under honest single-writer use: vacuum() running while an
-    # overwrite_partitions commit is mid-flight (its fresh gen-* files are
+    # data even under honest single-writer use: vacuum() running while a
+    # replace_buckets commit is mid-flight (its fresh gen-* files are
     # on disk but not yet in the manifest, so an unguarded vacuum would
     # delete them and the subsequent manifest swap would commit references
     # to deleted files).
@@ -385,18 +452,17 @@ class TableIO:
         except FileNotFoundError:
             pass
 
-    def vacuum(self, table: str, required: bool = False) -> int:
+    def vacuum(self, table: str) -> int:
         """Delete data files not referenced by the table's manifest —
-        debris from an interrupted partition overwrite. Returns the number
+        debris from an interrupted file replacement. Returns the number
         of files removed. Takes the commit lock: if a LIVE commit is in
-        flight its uncommitted gen-* files must survive, so the default
+        flight its uncommitted gen-* files must survive, so the
         non-blocking acquire skips and the committer vacuums after its
         manifest swap. A dead holder's lock is taken over immediately
         (PID-liveness check), so a hard crash never blocks cleanup.
-        required=True (the serving path, where directory reads MUST equal
-        the snapshot) blocks until the lock is available instead of
-        skipping."""
-        if not self._acquire_commit_lock(blocking=required):
+        Readers never need it: every reader, the pyarrow serving path
+        included, reads the manifest's files only."""
+        if not self._acquire_commit_lock(blocking=False):
             return 0
         try:
             return self._vacuum_locked(table)
@@ -409,96 +475,93 @@ class TableIO:
             return 0
         live = {os.path.join(self.work_dir, f["path"]) for f in m["files"]}
         removed = 0
-        base = self.path(table)
-        for root, _, fs in os.walk(base):
-            for fn in fs:
-                fp = os.path.join(root, fn)
-                if fn.endswith(".parquet") and fp not in live:
-                    os.remove(fp)
-                    removed += 1
+        for fp in self._parquet_files(self.path(table)):
+            if fp not in live:
+                os.remove(fp)
+                removed += 1
         return removed
 
-    def overwrite_partitions(self, df: DataFrame, stage: str,
-                             partition_col: str, values: list,
-                             table: str | None = None,
-                             extra_update: dict | None = None,
-                             sort_by: list[str] | None = None) -> StageResult:
-        """Rewrite ONLY the listed partition directories of a partitioned
-        stage table and merge the stage manifest's per-file lineage — the
-        parquet-dir emulation of Iceberg dynamic partition overwrite
-        (spark.sql.sources.partitionOverwriteMode=dynamic / MERGE on
-        touched partitions). df must contain exactly the replacement rows
-        for those partitions (a partition with no rows is dropped).
+    def replace_buckets(self, df: DataFrame, stage: str, bucket_col: str,
+                        buckets: list, table: str | None = None,
+                        extra_update: dict | None = None,
+                        sort_by: list[str] | None = None) -> StageResult:
+        """Replace the live files holding any of `buckets` with df's files
+        and merge the stage manifest's lineage — the parquet-dir emulation
+        of an Iceberg file-level overwrite (MERGE rewriting the touched
+        data files). df must hold exactly the replacement rows for
+        `buckets`, and `buckets` must cover every bucket of the files it
+        replaces (rewrite_set gives that set): a replaced file's other
+        buckets would otherwise be lost, so that case raises before
+        anything moves. A bucket with no rows in df is dropped.
 
         Crash-safe commit protocol (snapshot emulation):
-          1. vacuum debris from any earlier interrupted commit;
-          2. write the replacement data to a side directory (a df whose
+          1. write the replacement data to a side directory (a df whose
              lineage reads the target table is therefore safe);
-          3. move the new files INTO the partition dirs under
-             generation-unique names — old files are NOT touched;
-          4. atomically swap the manifest (the commit point): Spark reads
-             are manifest-pinned (see read()), so before the swap they see
-             exactly the old snapshot, after it exactly the new;
+          2. vacuum debris from any earlier interrupted commit;
+          3. move the new files INTO the table dir under generation-
+             unique names — old files are NOT touched;
+          4. atomically swap the manifest (the commit point): every read
+             is manifest-pinned (see read(), pinned_files()), so before
+             the swap readers see exactly the old snapshot, after it
+             exactly the new;
           5. vacuum the superseded files.
         A crash at any step leaves a readable old snapshot plus orphan
-        files the next commit's vacuum removes. (The pyarrow serving path
-        reads directories, not manifests — run vacuum before serving after
-        a crash; real Iceberg closes this gap with metadata-file reads.)"""
-        import uuid
-
+        files the next commit's vacuum removes."""
         table = table or stage
-        target = self.path(table)
         tmp = os.path.join(self.work_dir, f"_tmp_{table}")
         shutil.rmtree(tmp, ignore_errors=True)
         t0 = time.monotonic()
-        # the Spark write (step 2, side dir) runs outside the lock — it
+        # the Spark write (step 1, side dir) runs outside the lock — it
         # touches no live files; the lock covers vacuum + move + swap
-        df = self._sorted_for_write(df, [partition_col], sort_by)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
+        df = self._bucketed(df, bucket_col, sort_by)
+        df.write.mode("overwrite").parquet(tmp)
         self._acquire_commit_lock(blocking=True)
         try:
-            return self._commit_partitions(
-                df, stage, partition_col, values, table, extra_update,
-                tmp, target, t0)
+            return self._commit_files(df, stage, bucket_col, buckets, table,
+                                      extra_update, tmp, t0)
         finally:
             self._release_commit_lock()
 
-    def _commit_partitions(self, df, stage, partition_col, values, table,
-                           extra_update, tmp, target, t0) -> StageResult:
+    def _commit_files(self, df, stage, bucket_col, buckets, table,
+                      extra_update, tmp, t0) -> StageResult:
         import uuid
 
         self._vacuum_locked(table)
+        old = self.read_manifest(stage) or {
+            "stage": stage, "files": [], "extra": {}, "wall_ms": 0}
+        want = set(buckets)
+        keep = []
+        for f in old.get("files", []):
+            held = set(f.get("buckets", ()))
+            if want.isdisjoint(held):
+                keep.append(f)
+            elif not held <= want:
+                raise RuntimeError(
+                    f"table '{table}': {f['path']} holds buckets "
+                    f"{sorted(held - want)} outside the replaced set — "
+                    "replace rewrite_set()'s buckets")
+
         gen = uuid.uuid4().hex[:12]
-        replaced = [f"{partition_col}={v}" for v in values]
+        target = self.path(table)
+        os.makedirs(target, exist_ok=True)
+        src = self._parquet_files(tmp)
+        dst = [os.path.join(target, f"gen-{gen}-{os.path.basename(fp)}")
+               for fp in src]
+        entries = self._file_entries(src, dst, bucket_col)
+        stray = set().union(*(e["buckets"] for e in entries)) - want
+        if stray:
+            raise RuntimeError(
+                f"table '{table}': replacement rows in buckets "
+                f"{sorted(stray)} outside the replaced set")
         fresh = []
-        for sub in replaced:
-            self._touch_commit_lock()  # heartbeat: long moves stay fresh
-            src = os.path.join(tmp, sub)
-            if not os.path.isdir(src):
-                continue  # partition emptied by this commit
-            dst = os.path.join(target, sub)
-            os.makedirs(dst, exist_ok=True)
-            for root, _, fs in os.walk(src):
-                for fn in sorted(fs):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    fp = os.path.join(root, fn)
-                    out = os.path.join(dst, f"gen-{gen}-{fn}")
-                    meta = pq.read_metadata(fp)
-                    shutil.move(fp, out)
-                    fresh.append({
-                        "path": os.path.relpath(out, self.work_dir),
-                        "rows": meta.num_rows,
-                        "bytes": os.path.getsize(out),
-                    })
+        for fp, out, entry in zip(src, dst, entries):
+            if entry["rows"]:  # an empty task's file holds no bucket
+                self._touch_commit_lock()  # heartbeat: long moves
+                shutil.move(fp, out)
+                fresh.append(entry)
         shutil.rmtree(tmp, ignore_errors=True)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        old = self.read_manifest(stage) or {
-            "stage": stage, "files": [], "extra": {}, "wall_ms": 0}
-        prefixes = tuple(os.path.join(table, sub) + os.sep for sub in replaced)
-        keep = [f for f in old.get("files", [])
-                if not f["path"].startswith(prefixes)]
         files = keep + fresh
         extra = {**old.get("extra", {}), **(extra_update or {})}
         result = StageResult(
@@ -507,7 +570,7 @@ class TableIO:
             bytes=sum(f["bytes"] for f in files),
             wall_ms=old.get("wall_ms", 0) + wall_ms,
             files=files, extra=extra,
-            schema=read_schema(df, [partition_col]))
+            schema=df.schema.jsonValue())
         self.write_manifest(result)  # atomic commit point
         self._vacuum_locked(table)
         return result
@@ -549,9 +612,9 @@ def resolve_layout(io: TableIO, cfg):
     bucket count; blocks: head-term shard width and block size), after
     check_format_version refuses an index in another on-disk format.
 
-    Every query path must derive partition-prune buckets from the on-disk
+    Every query path must derive its pruning buckets from the on-disk
     layout, not from live config: an index built with term_buckets=16 read
-    under cfg term_buckets=64 would hash every term to the wrong partition
+    under cfg term_buckets=64 would hash every term to the wrong bucket
     and silently return no rows. Config is only the fallback when no
     manifest exists (fresh build)."""
     import dataclasses

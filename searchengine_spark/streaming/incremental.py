@@ -1,11 +1,11 @@
-"""Incremental index maintenance — partition-scoped snapshot-to-snapshot
+"""Incremental index maintenance — bucket-scoped snapshot-to-snapshot
 batch MERGE with a durable, resumable commit protocol.
 
 The reference mutates counters in place: single-page reindex deletes the
 page's postings, re-lemmatizes, decrements each lemma's df and deletes
 zero-df lemmas (services/IndexingServiceImpl.removePageDataFromBD :185-198);
 site removal cascades deletes (:154-163). Read-modify-write counters do not
-scale; here maintenance is declarative AND partition-scoped:
+scale; here maintenance is declarative AND bucket-scoped:
 
   1. doc_ids are STABLE: an updated url keeps its doc_id; new urls append
      after max(doc_id) in deterministic (bucket, url) order; removals leave
@@ -14,14 +14,17 @@ scale; here maintenance is declarative AND partition-scoped:
   2. affected terms = lemmas of the OLD text of touched docs (the
      reference's re-lemmatize step, :187) ∪ lemmas of the NEW text;
      affected term_buckets = their hash buckets — a bounded set.
-  3. postings/terms/blocks are rewritten ONLY for affected term_buckets,
-     and docs ONLY for affected url_buckets, via
-     TableIO.overwrite_partitions (the Iceberg dynamic-partition-overwrite
-     / MERGE seam): new bucket content = old rows minus touched doc_ids
-     plus the delta. One changed page costs O(its buckets), not O(corpus).
-     Each rewrite runs min(buckets, cores) write tasks (TableIO.cluster),
-     one file per bucket; when every bucket is affected the scans carry
-     no bucket filter at all.
+  3. postings/terms/site_stats/blocks rewrite ONLY the files holding an
+     affected term_bucket, and docs ONLY the files holding an affected
+     url_bucket, via TableIO.replace_buckets (the Iceberg file-level
+     overwrite / MERGE seam). The file is the smallest unit rewritten:
+     TableIO.rewrite_set widens the affected buckets to every bucket of
+     those files, the scans pin exactly those files through the manifest
+     (TableIO.read(table, buckets)), and the new content of the set =
+     old rows minus touched doc_ids plus the delta. One changed page
+     costs O(the files of its buckets), not O(corpus). Each rewrite runs
+     one write task per file it replaces (TableIO.cluster), so the file
+     count never grows past min(buckets, cores).
   4. stats are recomputed from the small terms table; the blocks
      manifest's avgdl is marked stale so WAND switches to avgdl-free
      max_tf bounds (results stay exact; bounds re-tighten on the next full
@@ -60,7 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..config import EngineConfig
+from ..config import EngineConfig, aqe_off
 from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import assign_doc_ids
 from ..plans.build import IndexBuilder, term_bucket_col
@@ -77,35 +80,38 @@ def _delta_path(io: TableIO, *parts: str) -> str:
 def upsert_docs(spark, io: TableIO, cfg: EngineConfig,
                 changed_pages: DataFrame) -> dict:
     """C3 indexPage generalized to a batch of pages: replace-by-url with
-    stable ids and bucket-scoped index maintenance."""
+    stable ids and bucket-scoped index maintenance. Runs with AQE off,
+    an engine-owned write phase like the build (config.aqe_off)."""
     from ..sources.tableio import resolve_layout
 
     cfg = resolve_layout(io, cfg)  # write with the index's OWN layout
-    old_docs = io.read("docs")
-    incoming = extract_docs(changed_pages)
+    with aqe_off(spark):
+        old_docs = io.read("docs")
+        incoming = extract_docs(changed_pages)
 
-    # stage the (small) incoming batch once; everything below reuses it
-    # (read back with the written frame's schema: no inference job)
-    inc_path = os.path.join(io.work_dir, "_staged_incoming")
-    incoming.write.mode("overwrite").parquet(inc_path)
-    incoming = spark.read.schema(incoming.schema).parquet(inc_path)
+        # stage the (small) incoming batch once; everything below reuses
+        # it (read back with the written frame's schema: no inference job)
+        inc_path = os.path.join(io.work_dir, "_staged_incoming")
+        incoming.write.mode("overwrite").parquet(inc_path)
+        incoming = spark.read.schema(incoming.schema).parquet(inc_path)
 
-    old_ids = old_docs.select("doc_id", "url")
-    updated = incoming.join(old_ids, "url")  # keeps old doc_id
-    fresh = incoming.join(old_ids.select("url"), "url", "left_anti")
-    max_id = old_docs.agg(F.max("doc_id")).collect()[0][0]
-    base = int(max_id) + 1 if max_id is not None else 0
-    fresh_ids = (assign_doc_ids(fresh, cfg.doc_id_buckets)
-                 .withColumn("doc_id", (F.col("doc_id") + F.lit(base))
-                             .cast("long")))
-    changed = (updated.select(*DOC_COLS)
-               .unionByName(fresh_ids.select(*DOC_COLS)))
+        old_ids = old_docs.select("doc_id", "url")
+        updated = incoming.join(old_ids, "url")  # keeps old doc_id
+        fresh = incoming.join(old_ids.select("url"), "url", "left_anti")
+        max_id = old_docs.agg(F.max("doc_id")).collect()[0][0]
+        base = int(max_id) + 1 if max_id is not None else 0
+        fresh_ids = (assign_doc_ids(fresh, cfg.doc_id_buckets)
+                     .withColumn("doc_id", (F.col("doc_id") + F.lit(base))
+                                 .cast("long")))
+        changed = (updated.select(*DOC_COLS)
+                   .unionByName(fresh_ids.select(*DOC_COLS)))
 
-    # old text of updated urls: its lemmas locate the buckets to purge
-    old_touched = old_docs.join(incoming.select("url"), "url", "left_semi")
+        # old text of updated urls: its lemmas locate the buckets to purge
+        old_touched = old_docs.join(incoming.select("url"), "url",
+                                    "left_semi")
 
-    _stage_delta(spark, io, changed=changed, touched=old_touched)
-    report = apply_staged_delta(spark, io, cfg)
+        _stage_delta(spark, io, changed=changed, touched=old_touched)
+        report = apply_staged_delta(spark, io, cfg)
     shutil.rmtree(inc_path, ignore_errors=True)
     return report
 
@@ -113,7 +119,8 @@ def upsert_docs(spark, io: TableIO, cfg: EngineConfig,
 def remove_docs(spark, io: TableIO, cfg: EngineConfig,
                 site: str | None = None, url: str | None = None) -> dict:
     """S7 (site cascade delete) / S8 (page delete + df recompute): purge
-    the victims' postings from their terms' buckets only."""
+    the victims' postings from their terms' buckets only. Runs with AQE
+    off, like upsert_docs."""
     from ..sources.tableio import resolve_layout
 
     if site is None and url is None:
@@ -126,8 +133,9 @@ def remove_docs(spark, io: TableIO, cfg: EngineConfig,
     if url is not None:
         cond = cond & (F.col("url") == F.lit(url))
     removed = docs.filter(cond)
-    _stage_delta(spark, io, changed=None, touched=removed)
-    return apply_staged_delta(spark, io, cfg)
+    with aqe_off(spark):
+        _stage_delta(spark, io, changed=None, touched=removed)
+        return apply_staged_delta(spark, io, cfg)
 
 
 def _stage_delta(spark, io: TableIO, changed: DataFrame | None,
@@ -165,7 +173,8 @@ def resume_delta(spark, io: TableIO, cfg: EngineConfig) -> dict | None:
         return None
     from ..sources.tableio import resolve_layout
 
-    return apply_staged_delta(spark, io, resolve_layout(io, cfg))
+    with aqe_off(spark):  # an engine-owned write phase, like upsert_docs
+        return apply_staged_delta(spark, io, resolve_layout(io, cfg))
 
 
 def apply_staged_delta(spark, io: TableIO, cfg: EngineConfig) -> dict:
@@ -205,11 +214,12 @@ def apply_staged_delta(spark, io: TableIO, cfg: EngineConfig) -> dict:
 def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
                  builder: IndexBuilder, delta_docs: DataFrame | None,
                  old_touched: DataFrame) -> dict:
-    """Rewrite only the affected term_buckets of postings/terms/blocks and
-    the affected url_buckets of docs; recompute scalar stats. Every step is
-    an atomic partition-overwrite commit expressed as "current rows minus
-    touched keys plus staged delta", so replaying after a crash converges
-    to the same state regardless of which commits already landed.
+    """Rewrite only the files holding affected term_buckets of postings/
+    terms/site_stats/blocks and affected url_buckets of docs; recompute
+    scalar stats. Every step is an atomic file-replacement commit
+    expressed as "current rows minus touched keys plus staged delta", so
+    replaying after a crash converges to the same state regardless of
+    which commits already landed.
 
     delta_docs: docs whose NEW text must be indexed (None for pure
     removals); old_touched: docs whose OLD postings must be purged (their
@@ -238,34 +248,38 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
         touched_ids = touched_ids.unionByName(delta_docs.select("doc_id"))
         touched_urls = touched_urls.unionByName(delta_docs.select("url"))
 
-    def affected_postings():
-        return in_buckets(io.read("postings"), "term_bucket", buckets,
+    def postings_of(bs):
+        """Committed postings rows of the term buckets bs: the files
+        holding them, less their other buckets' rows."""
+        return in_buckets(io.read("postings", bs), "term_bucket", bs,
                           cfg.term_buckets)
 
     if buckets:
-        # --- postings: old bucket rows minus touched docs, plus the delta
-        # (every delta term is in an affected bucket by construction)
-        newp = affected_postings().join(touched_ids, "doc_id", "left_anti")
+        # --- postings: the rewrite set's rows minus touched docs, plus the
+        # delta (every delta term is in an affected bucket by
+        # construction); the pinned read holds exactly the set's rows
+        pb, k = io.rewrite_set("postings", buckets)
+        newp = io.read("postings", pb).join(touched_ids, "doc_id",
+                                            "left_anti")
         if delta_tokens is not None:
             newp = newp.unionByName(delta_tokens)
-        # sort_by keeps rewritten bucket files (term, doc_id)-ordered —
-        # the table's file-order contract for the exchange-free blocks
-        # encoder (TableIO prepends the partition-column prefix the
-        # writer requires; the EliminateSorts discipline lives there)
-        report["postings"] = io.overwrite_partitions(
-            io.cluster(newp, "term_bucket", len(buckets)),
-            "postings", "term_bucket", buckets,
+        # sort_by keeps every bucket a (term, doc_id)-ordered run — the
+        # table's file-order contract for the exchange-free blocks encoder
+        report["postings"] = io.replace_buckets(
+            io.cluster(newp, "term_bucket", k),
+            "postings", "term_bucket", pb,
             sort_by=["term", "doc_id"]).to_json()
 
-        # --- terms: recompute df/cf for the rewritten buckets only
-        newt = (affected_postings()
+        # --- terms: recompute df/cf for the terms rewrite set only
+        tb, k = io.rewrite_set("terms", buckets)
+        newt = (postings_of(tb)
                 .groupBy("term")
                 .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
                 .withColumn("term_bucket",
                             term_bucket_col(F.col("term"), cfg.term_buckets)))
-        report["terms"] = io.overwrite_partitions(
-            io.cluster(newt, "term_bucket", len(buckets)),
-            "terms", "term_bucket", buckets,
+        report["terms"] = io.replace_buckets(
+            io.cluster(newt, "term_bucket", k),
+            "terms", "term_bucket", tb,
             # the full build's observed corpus totals (Σcf/Σdf on the terms
             # write job) and head-term list are stale once any bucket is
             # rewritten — null them so _stage_stats/_stage_blocks
@@ -275,7 +289,7 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
                           "head_terms": None,
                           "head_df_threshold": None}).to_json()
 
-    # --- docs: rewrite only the touched url_buckets (atomic partition
+    # --- docs: rewrite only the files of the touched url_buckets (atomic
     # commit — the old docs snapshot stays readable until the manifest
     # swap, and the old-lemma delta needed to purge stale postings lives
     # in _delta/, never only in the table being overwritten)
@@ -284,35 +298,36 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
     # stats AFTER the docs commit: n_docs comes from the docs manifest
     report["stats"] = builder._stage_stats().to_json()
 
-    # site_stats: lemma rows of the affected term buckets + the -1 pages
-    # rows (docs changed) — same partition-overwrite discipline; an index
-    # whose site_stats stage never completed gets a full rebuild of the
-    # tiny table
+    # site_stats: lemma rows of the rewrite set's term buckets + the -1
+    # pages rows (docs changed) — same file-replacement discipline; an
+    # index whose site_stats stage never completed gets a full rebuild of
+    # the tiny table
     if io.stage_complete("site_stats"):
-        ss = builder._site_stats_frame(io.read("docs"), io.read("postings"),
-                                       buckets)
-        ss_buckets = [*buckets, -1]
-        report["site_stats"] = io.overwrite_partitions(
-            io.cluster(ss, "term_bucket", len(ss_buckets)),
-            "site_stats", "term_bucket", ss_buckets).to_json()
+        sb, k = io.rewrite_set("site_stats", [*buckets, -1])
+        lem = [b for b in sb if b >= 0]
+        ss = builder._site_stats_frame(io.read("docs"),
+                                       io.read("postings", lem), lem)
+        report["site_stats"] = io.replace_buckets(
+            io.cluster(ss, "term_bucket", k),
+            "site_stats", "term_bucket", sb).to_json()
     else:
         report["site_stats"] = builder._stage_site_stats().to_json()
 
     if buckets:
-        # --- blocks: re-encode the rewritten buckets; mark block-max
+        # --- blocks: re-encode the rewrite set's buckets; mark block-max
         # bounds stale (max_tfpart of untouched buckets bakes the OLD
         # avgdl — WAND switches to the avgdl-free max_tf bound).
-        # The rewritten bucket files keep the (term, doc_id) file order
-        # (the newp sort above leads with term_bucket), so the
-        # exchange-free encoder applies here exactly as in the full
-        # build's _stage_blocks — the rewritten buckets' postings are
-        # scanned straight into the encoder, never shuffled.
+        # Postings files keep every bucket a (term, doc_id)-ordered run,
+        # so the exchange-free encoder applies here exactly as in the
+        # full build's _stage_blocks — the set's postings are scanned
+        # straight into the encoder, never shuffled.
         from ..operators.postings import large_arrow_batches
 
-        newb, head, _ = builder._blocks_frame(affected_postings())
+        bb, _ = io.rewrite_set("blocks", buckets)
+        newb, head, _ = builder._blocks_frame(postings_of(bb))
         with large_arrow_batches(spark):
-            report["blocks"] = io.overwrite_partitions(
-                newb, "blocks", "term_bucket", buckets,
+            report["blocks"] = io.replace_buckets(
+                newb, "blocks", "term_bucket", bb,
                 sort_by=["term", "shard", "doc_min"],
                 extra_update={"head_terms": head, "avgdl": None}).to_json()
 
@@ -322,10 +337,10 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
 def _commit_docs(spark, io: TableIO, cfg: EngineConfig,
                  delta_docs: DataFrame | None,
                  touched_urls: DataFrame) -> dict:
-    """Partition-scoped docs commit: replacement rows for each affected
-    url_bucket = current bucket rows minus touched urls plus the staged
-    changed rows — idempotent under replay. cfg carries the index's own
-    doc_id_buckets (resolve_layout)."""
+    """File-scoped docs commit: replacement rows for the rewrite set of
+    the affected url_buckets = its current rows minus touched urls plus
+    the staged changed rows — idempotent under replay. cfg carries the
+    index's own doc_id_buckets (resolve_layout)."""
     bucket_of_url = url_bucket_col(F.col("url"), cfg.doc_id_buckets)
     url_frames = [touched_urls]
     if delta_docs is not None:
@@ -339,8 +354,8 @@ def _commit_docs(spark, io: TableIO, cfg: EngineConfig,
     if not doc_buckets:
         return (io.read_manifest("docs") or {})
 
-    repl = (in_buckets(io.read("docs"), "url_bucket", doc_buckets,
-                       cfg.doc_id_buckets)
+    db, k = io.rewrite_set("docs", doc_buckets)
+    repl = (io.read("docs", db)
             .join(all_urls.distinct(), "url", "left_anti")
             .select(*DOC_COLS, "url_bucket"))
     if delta_docs is not None:
@@ -348,10 +363,8 @@ def _commit_docs(spark, io: TableIO, cfg: EngineConfig,
         repl = repl.unionByName(
             delta_docs.select(*DOC_COLS)
             .withColumn("url_bucket", bucket_of_url))
-    # sort_by keeps rewritten bucket files doc_id-ascending for the
+    # sort_by keeps every rewritten bucket doc_id-ascending for the
     # serving path's point reads, same discipline as the full build
-    # (TableIO prepends the url_bucket prefix the writer requires)
-    return io.overwrite_partitions(
-        io.cluster(repl, "url_bucket", len(doc_buckets)),
-        "docs", "url_bucket", doc_buckets,
+    return io.replace_buckets(
+        io.cluster(repl, "url_bucket", k), "docs", "url_bucket", db,
         sort_by=["doc_id"]).to_json()

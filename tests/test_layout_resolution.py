@@ -124,26 +124,32 @@ def test_block_id_sequential_across_batches(spark, small_bucket_engine):
         assert sorted(ids) == list(range(len(ids))), (key, sorted(ids)[:5])
 
 
-def test_postings_files_are_term_doc_sorted(small_bucket_engine):
-    """Every postings FILE must be internally (term, doc_id)-ordered: the
-    exchange-free blocks encoder consumes file order directly, and parquet
-    row-group min/max pruning needs it. Regression: the partitionBy writer
-    inserts its own partition-column sort when the task ordering doesn't
-    lead with it, and Catalyst's EliminateSorts then removes ours — files
-    silently land in raw generation order (caught live before the fix)."""
-    import glob
+def _live_files(io, table):
+    import os
 
+    return [os.path.join(io.work_dir, f["path"])
+            for f in io.read_manifest(table)["files"]]
+
+
+def _assert_ordered(path, columns):
+    """The rows of a parquet file are strictly ascending in `columns`."""
     import pyarrow.parquet as pq
 
-    eng, work = small_bucket_engine
+    t = pq.read_table(path, columns=columns)
+    rows = list(zip(*(t[c].to_pylist() for c in columns)))
+    assert rows and all(a < b for a, b in zip(rows, rows[1:])), \
+        f"file {path} not {tuple(columns)}-ordered"
+
+
+def test_postings_files_are_term_doc_sorted(small_bucket_engine):
+    """Every postings FILE must be (term_bucket, term, doc_id)-ordered:
+    each bucket is a (term, doc_id) run, which the exchange-free blocks
+    encoder consumes directly and parquet row-group min/max pruning
+    needs."""
+    eng, _ = small_bucket_engine
     assert eng.io.read_manifest("postings")["format_version"] == FORMAT_VERSION
-    files = glob.glob(f"{work}/postings/term_bucket=*/*.parquet")
-    assert files
-    for f in files:
-        t = pq.read_table(f, columns=["term", "doc_id"])
-        rows = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
-        assert all(a < b for a, b in zip(rows, rows[1:])), \
-            f"file {f} not (term, doc_id)-ordered"
+    for f in _live_files(eng.io, "postings"):
+        _assert_ordered(f, ["term_bucket", "term", "doc_id"])
 
 
 def test_presorted_blocks_match_repartition_path(small_bucket_engine):
@@ -183,17 +189,11 @@ def test_presorted_blocks_plan_has_no_exchange(small_bucket_engine):
 
 
 def test_incremental_rewrite_keeps_file_sorted_contract(spark, tmp_path):
-    """An upsert rewrites touched postings/docs buckets via partition
-    overwrite; the rewritten files must keep the layout contracts the
-    exchange-free encoder and the serving point-reads rely on:
-    postings files stay (term, doc_id)-ordered (the manifest keeps the
-    current format version), docs files stay doc_id-ascending.
-    Regression: the partitionBy writer inserts its own partition-column
-    sort when the task ordering doesn't lead with it, and EliminateSorts
-    then deletes ours."""
-    import glob
-
-    import pyarrow.parquet as pq
+    """An upsert replaces the files holding touched postings/docs buckets;
+    the rewritten files must keep the layout contracts the exchange-free
+    encoder and the serving point-reads rely on: postings files stay
+    (term_bucket, term, doc_id)-ordered (the manifest keeps the current
+    format version), docs files (url_bucket, doc_id)-ordered."""
     from searchengine_spark.sources.corpus import gen_pages_local
 
     work = str(tmp_path / "inc_sorted")
@@ -210,26 +210,15 @@ def test_incremental_rewrite_keeps_file_sorted_contract(spark, tmp_path):
         "url string, warc_ts timestamp, html binary, text string, lang string")
     eng.upsert_docs(pdf)
 
-    m = eng.io.read_manifest("postings")
-    assert m["format_version"] == FORMAT_VERSION
-    live = {f["path"] for f in m["files"]}
-    gen_files = [p for p in glob.glob(f"{work}/postings/term_bucket=*/*.parquet")
-                 if p.replace(f"{work}/", "", 1) in live
-                 and "gen-" in p.rsplit("/", 1)[1]]
-    assert gen_files, "upsert should have rewritten at least one bucket"
-    for f in gen_files:
-        t = pq.read_table(f, columns=["term", "doc_id"])
-        rows = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
-        assert all(a < b for a, b in zip(rows, rows[1:])), \
-            f"rewritten postings file {f} not (term, doc_id)-ordered"
-
-    doc_gen = [p for p in glob.glob(f"{work}/docs/url_bucket=*/*.parquet")
-               if "gen-" in p.rsplit("/", 1)[1]]
-    assert doc_gen, "upsert should have rewritten at least one docs bucket"
-    for f in doc_gen:
-        ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
-        assert ids == sorted(ids), \
-            f"rewritten docs file {f} not doc_id-ascending"
+    assert eng.io.read_manifest("postings")["format_version"] \
+        == FORMAT_VERSION
+    for table, order in (("postings", ["term_bucket", "term", "doc_id"]),
+                         ("docs", ["url_bucket", "doc_id"])):
+        gen = [f for f in _live_files(eng.io, table)
+               if f.rsplit("/", 1)[1].startswith("gen-")]
+        assert gen, f"upsert should have rewritten a {table} file"
+        for f in gen:
+            _assert_ordered(f, order)
 
 
 def test_index_in_another_format_is_refused(spark, small_bucket_engine,
@@ -307,30 +296,38 @@ def test_manifest_schema_read_equals_inferred_read(spark,
                 == sorted(inferred.collect(), key=repr)), table
 
 
-def test_overwrite_partitions_crash_safety(spark, tmp_path):
-    """An interrupted partition overwrite (new-generation files present,
-    manifest NOT yet swapped) must leave Spark reads on the OLD snapshot;
-    vacuum removes the debris."""
+def test_replace_buckets_crash_safety(spark, tmp_path):
+    """An interrupted file replacement (new-generation files present,
+    manifest NOT yet swapped) must leave reads on the OLD snapshot;
+    vacuum removes the debris. A replacement drops exactly the files
+    holding its buckets and refuses a bucket set that would lose another
+    bucket's rows."""
     import os
 
     from pyspark.sql import functions as F
 
     io = TableIO(spark, str(tmp_path / "crash"))
-    df = spark.range(0, 100).select(
-        F.col("id").alias("v"), (F.col("id") % 4).cast("int").alias("pk"))
-    io.write_stage(df.repartition(4, "pk"), "t", partition_by=["pk"])
+    # 4 tasks of 25 ids, each file holding buckets {2i, 2i+1} of pk = id%8
+    df = spark.range(0, 100, numPartitions=4).select(
+        F.col("id").alias("v"),
+        ((F.col("id") / 25).cast("int") * 2 + F.col("id") % 2)
+        .cast("int").alias("pk"))
+    io.write_stage(df, "t", bucket_col="pk")
+    files = io.read_manifest("t")["files"]
+    assert [f["buckets"] for f in files] == [[0, 1], [2, 3], [4, 5], [6, 7]]
     assert io.read("t").count() == 100
+    assert io.read("t", [1]).count() == 25  # one file pinned
+    assert io.rewrite_set("t", [1, 2]) == ([0, 1, 2, 3], 2)
 
-    # simulate the crash: drop a rogue new-generation file into a
-    # partition dir WITHOUT committing a manifest swap
-    part_dir = os.path.join(io.path("t"), "pk=1")
-    victim = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+    # simulate the crash: drop a rogue new-generation file into the table
+    # dir WITHOUT committing a manifest swap
+    victim = os.path.join(io.work_dir, files[0]["path"])
     import shutil
-    rogue = os.path.join(part_dir, "gen-deadbeef-rogue.parquet")
-    shutil.copy(os.path.join(part_dir, victim), rogue)
+    rogue = os.path.join(io.path("t"), "gen-deadbeef-rogue.parquet")
+    shutil.copy(victim, rogue)
 
     # manifest-pinned read: still exactly the old snapshot (a plain
-    # directory read would double-count pk=1)
+    # directory read would double-count buckets 0 and 1)
     assert io.read("t").count() == 100
     assert spark.read.parquet(io.path("t")).count() > 100  # the hazard
 
@@ -338,13 +335,21 @@ def test_overwrite_partitions_crash_safety(spark, tmp_path):
     assert not os.path.exists(rogue)
     assert io.read("t").count() == 100
 
-    # a real commit through the protocol: replace pk=1 rows with 5 rows
-    repl = spark.range(0, 5).select(
+    # a bucket set that splits a file is refused before anything moves
+    one = spark.range(0, 5, numPartitions=1).select(
         F.col("id").alias("v"), F.lit(1).cast("int").alias("pk"))
-    io.overwrite_partitions(repl, "t", "pk", [1])
+    with pytest.raises(RuntimeError, match="outside the replaced set"):
+        io.replace_buckets(one, "t", "pk", [1])
+    assert io.read("t").count() == 100
+
+    # a real commit through the protocol: replace the file of buckets
+    # {0, 1} by 5 rows of bucket 1
+    io.replace_buckets(one, "t", "pk", [0, 1])
     got = io.read("t")
     assert got.count() == 75 + 5
     assert got.filter(F.col("pk") == 1).count() == 5
+    assert sorted(f["buckets"] for f in io.read_manifest("t")["files"]) \
+        == [[1], [2, 3], [4, 5], [6, 7]]
     # directory agrees after the commit's trailing vacuum
     assert spark.read.parquet(io.path("t")).count() == 80
 
@@ -363,10 +368,10 @@ def _job_group(sc, group: str):
 
 @contextmanager
 def _stage_writes_grouped(sc, op: str):
-    """Run every stage write (TableIO.write_stage / overwrite_partitions)
-    in its own Spark job group "<op>:<stage>"."""
+    """Run every stage write (TableIO.write_stage / replace_buckets) in
+    its own Spark job group "<op>:<stage>"."""
     patched = {}
-    for name in ("write_stage", "overwrite_partitions"):
+    for name in ("write_stage", "replace_buckets"):
         def grouped(self, df, stage, *a, _fn=getattr(TableIO, name), **kw):
             with _job_group(sc, f"{op}:{stage}"):
                 return _fn(self, df, stage, *a, **kw)
@@ -424,76 +429,148 @@ def packed_upsert(spark, packed_build, tmp_path_factory):
 
 
 def test_blocks_write_packs_bucket_files(spark, packed_build):
-    """The blocks stage of a build runs its write with fewer tasks than
-    there are postings bucket files (default file packing, ~one task per
-    core, instead of one task per file)."""
+    """The blocks stage of a build scans the (at most one per core)
+    postings files with Spark's default file packing and runs its write
+    with at most one task per core — never one per bucket."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     tasks = [tracker.getStageInfo(s).numTasks
              for j in tracker.getJobIdsForGroup("build:blocks")
              for s in tracker.getJobInfo(j).stageIds]
     n_files = len(packed_build.io.read_manifest("postings")["files"])
-    assert n_files > sc.defaultParallelism and tasks
-    assert max(tasks) < n_files, (tasks, n_files)
+    assert tasks and 1 < n_files <= sc.defaultParallelism
+    assert max(tasks) <= sc.defaultParallelism, (tasks, n_files)
 
 
 def test_bucketed_writes_run_one_task_per_core(spark, packed_build,
                                                packed_upsert):
-    """Every term-bucketed write of a build and of an upsert runs fewer
-    tasks than the buckets it writes, and at least one per core (each
-    bucket stays wholly in one task, so it is still written as one
-    file)."""
+    """Every term-bucketed write of a build runs min(buckets, cores)
+    tasks; every rewrite of an upsert runs one task per file it replaces
+    (each bucket stays wholly in one task, so the file count never
+    grows)."""
     sc = spark.sparkContext
     cores = sc.defaultParallelism
     n_buckets = packed_build.cfg.term_buckets
-    affected = len(packed_upsert[1]["affected_buckets"])
-    assert affected > cores
-    written = {"postings": affected, "terms": affected,
-               "site_stats": affected + 1}  # + the -1 pages bucket
-    for op, stage, buckets in [
-            ("build", "postings", n_buckets), ("build", "terms", n_buckets),
-            ("build", "site_stats", n_buckets + 1),
-            *(("upsert", s, b) for s, b in written.items())]:
-        tasks = _write_tasks(sc, f"{op}:{stage}")
-        assert min(buckets, cores) <= tasks < buckets, (op, stage, tasks)
+    affected = packed_upsert[1]["affected_buckets"]
+    assert len(affected) > cores
+    for stage, buckets in (("postings", n_buckets), ("terms", n_buckets),
+                           ("site_stats", n_buckets + 1)):
+        assert _write_tasks(sc, f"build:{stage}") == min(buckets, cores)
+    for stage, buckets in (("postings", affected), ("terms", affected),
+                           ("site_stats", [*affected, -1])):
+        # packed_build is the upsert's parent snapshot (it ran on a copy)
+        _, replaced = packed_build.io.rewrite_set(stage, buckets)
+        assert 1 <= replaced <= cores
+        assert _write_tasks(sc, f"upsert:{stage}") == replaced, stage
 
 
-def test_bucketed_writes_keep_one_ordered_file_per_bucket(packed_build,
-                                                          packed_upsert):
-    """After the build and after the upsert's rewrites, every live bucket
-    directory of every table holds exactly one file; postings files stay
-    (term, doc_id)-ordered and docs files doc_id-ascending."""
+# table -> (bucket column, strict file order)
+LAYOUT = {
+    "docs": ("url_bucket", ["url_bucket", "doc_id"]),
+    "postings": ("term_bucket", ["term_bucket", "term", "doc_id"]),
+    "terms": ("term_bucket", None),
+    "site_stats": ("term_bucket", None),
+    "blocks": ("term_bucket", ["term_bucket", "term", "shard", "doc_min"]),
+}
+
+
+def test_bucketed_tables_are_bucket_clustered_files(spark, packed_build,
+                                                    packed_upsert):
+    """After a 64-bucket build and after an upsert into it, every bucketed
+    table is at most min(buckets, cores) flat files (no bucket
+    directories); every bucket is in exactly one live file, whose
+    manifest bucket set equals the buckets the file holds; files are
+    (bucket, <sort keys>)-ordered."""
     import os
 
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    cores = spark.sparkContext.defaultParallelism
     for eng in (packed_build, packed_upsert[0]):
-        for table in ("docs", "postings", "terms", "site_stats", "blocks"):
-            files = [f["path"] for f in eng.io.read_manifest(table)["files"]]
-            dirs = [os.path.dirname(p) for p in files]
-            assert len(set(dirs)) == len(dirs), (table, len(dirs))
-            for rel in files:
-                path = os.path.join(eng.io.work_dir, rel)
-                if table == "postings":
-                    t = pq.read_table(path, columns=["term", "doc_id"])
-                    rows = list(zip(t["term"].to_pylist(),
-                                    t["doc_id"].to_pylist()))
-                    assert all(a < b for a, b in zip(rows, rows[1:])), rel
-                elif table == "docs":
-                    ids = pq.read_table(path, columns=["doc_id"])[
-                        "doc_id"].to_pylist()
-                    assert ids == sorted(ids), rel
+        n_b = {"docs": eng.cfg.doc_id_buckets,
+               "site_stats": eng.cfg.term_buckets + 1}
+        for table, (col, order) in LAYOUT.items():
+            m = eng.io.read_manifest(table)
+            assert len(m["files"]) <= min(n_b.get(table, eng.cfg.term_buckets),
+                                          cores), (table, len(m["files"]))
+            assert not [d for d in os.listdir(eng.io.path(table))
+                        if os.path.isdir(os.path.join(eng.io.path(table), d))]
+            seen: list[int] = []
+            for f in m["files"]:
+                path = os.path.join(eng.io.work_dir, f["path"])
+                assert os.path.dirname(path) == eng.io.path(table)
+                held = pq.read_table(path, columns=[col])[col]
+                assert sorted(pc.unique(held).to_pylist()) == f["buckets"]
+                assert held.to_pylist() == sorted(held.to_pylist())
+                if order:
+                    _assert_ordered(path, order)
+                seen += f["buckets"]
+            assert len(seen) == len(set(seen)), table  # one file per bucket
+            rows = eng.io.read(table).select(col).distinct().collect()
+            assert sorted(seen) == sorted(r[0] for r in rows), table
     rewritten = [f for f in packed_upsert[0].io.read_manifest("postings")
                  ["files"] if "gen-" in f["path"]]
     assert rewritten
 
 
+def test_queries_pin_only_their_buckets_files(spark, packed_build,
+                                              packed_upsert):
+    """Exact, WAND and driver-path queries read only the files whose
+    manifest bucket set holds the query terms' buckets — after the build
+    and after the upsert."""
+    import os
+    from urllib.parse import urlparse
+
+    from searchengine_spark.plans.build import term_bucket
+    from searchengine_spark.plans.wand import wand_topk
+
+    def files_of(eng, table, bucket):
+        return {os.path.join(eng.io.work_dir, f["path"])
+                for f in eng.io.read_manifest(table)["files"]
+                if bucket in f["buckets"]}
+
+    def local(paths):
+        return {urlparse(p).path for p in paths}
+
+    for eng in (packed_build, packed_upsert[0]):
+        qe = QueryEngine(spark, eng.io)  # cold: reads go to the files
+        q = _a_query(eng)
+        terms = qe.analyze(q)
+        assert [t["term"] for t in terms] == [q]
+        b = term_bucket(q, qe.cfg.term_buckets)
+        want_p, want_b = files_of(eng, "postings", b), files_of(eng, "blocks", b)
+        assert len(want_p) == 1 < len(eng.io.read_manifest("postings")["files"])
+        assert local(qe.candidates_df(terms).inputFiles()) == want_p
+        assert local(wand_topk(spark, eng.io, qe.cfg, terms, k=5)
+                     .inputFiles()) == want_b
+
+        pinned = []
+        real = eng.io.pinned_files
+
+        def spy(table, buckets=None, _real=real):
+            files, schema = _real(table, buckets)
+            pinned.append((table, buckets, set(files)))
+            return files, schema
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(eng.io, "pinned_files", spy)
+            r = qe.search(q, limit=5, strategy="driver")
+        assert r["result"] is True
+        want = {"terms": files_of(eng, "terms", b), "blocks": want_b}
+        for table, buckets, files in pinned:
+            if table == "docs":
+                continue  # k point reads by doc_id stats, every file
+            assert buckets == [b] and files == want[table], (table, files)
+        assert {t for t, _, _ in pinned} == {"terms", "blocks", "docs"}
+
+
 def test_packed_blocks_match_one_file_per_task(spark, packed_build):
     """The exchange-free encoder reads the postings scan with Spark's
-    default file packing, several bucket files to a task. Bucket files
-    never share a term, so every file boundary is a run boundary and the
-    blocks equal a one-file-per-task encoding on every column but
-    block_id."""
+    file packing, possibly several files to a task. Postings files never
+    share a term, so every file boundary is a run boundary and the
+    blocks of any packing — one file per task, or every file in one
+    task — are equal on every column but block_id."""
     from searchengine_spark.operators.postings import (build_blocks,
                                                        large_arrow_batches)
 
@@ -502,29 +579,33 @@ def test_packed_blocks_match_one_file_per_task(spark, packed_build):
     head = eng.io.read_manifest("blocks")["extra"]["head_terms"]
     n_files = len(eng.io.read_manifest("postings")["files"])
 
-    def encode():
-        blocks = build_blocks(eng.io.read("postings"), head, stats["avgdl"],
-                              eng.cfg)
-        with large_arrow_batches(spark):
-            rows = blocks.drop("block_id").collect()
-            return (blocks.rdd.getNumPartitions(),
-                    sorted(tuple(r) for r in rows))
+    def encode(key, value):
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        try:
+            blocks = build_blocks(eng.io.read("postings"), head,
+                                  stats["avgdl"], eng.cfg)
+            with large_arrow_batches(spark):
+                rows = blocks.drop("block_id").collect()
+                return (blocks.rdd.getNumPartitions(),
+                        sorted(tuple(r) for r in rows))
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
-    packed_tasks, packed = encode()
-    # a huge per-file open cost makes every bucket file its own scan task
-    key = "spark.sql.files.openCostInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(1 << 30))
-    try:
-        single_tasks, single = encode()
-    finally:
-        spark.conf.set(key, old)
-    assert single_tasks == n_files
-    assert packed_tasks < n_files
-    assert packed == single
-    # and the stage the build committed is that same packed encoding
+    # a huge per-file open cost makes every file its own scan task; one
+    # minimum split packs every file into one task
+    single_tasks, single = encode("spark.sql.files.openCostInBytes",
+                                  str(1 << 30))
+    merged_tasks, merged = encode("spark.sql.files.minPartitionNum", "1")
+    assert single_tasks == n_files > 1
+    assert merged_tasks == 1
+    assert merged == single
+    # and the stage the build committed is that same encoding
     table = eng.io.read("blocks").drop("term_bucket", "block_id")
-    assert sorted(tuple(r) for r in table.collect()) == packed
+    assert sorted(tuple(r) for r in table.collect()) == single
 
 
 DISCOVERY_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -536,9 +617,9 @@ def _wide_table(spark, work) -> TableIO:
     from pyspark.sql import functions as F
 
     io = TableIO(spark, work)
-    df = spark.range(0, 400).select(
-        F.col("id").alias("v"), (F.col("id") % 40).cast("int").alias("pk"))
-    io.write_stage(df.repartition(40, "pk"), "t", partition_by=["pk"])
+    df = spark.range(0, 400, numPartitions=40).select(
+        F.col("id").alias("v"), (F.col("id") / 10).cast("int").alias("pk"))
+    io.write_stage(df, "t", bucket_col="pk")
     assert len(io.read_manifest("t")["files"]) == 40
     return io
 

@@ -12,24 +12,39 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_query_postings_scan_partition_pruned(built_engine):
-    """The exact query path's postings scan must touch only the query
-    terms' term_bucket partitions (partition pruning on the layout key)."""
-    qe = built_engine.query_engine
-    terms = qe.analyze("леопард обитает")
-    assert terms
-    plan = _plan(qe.candidates_df(terms))
-    # the parquet scan carries the bucket filter as a partition filter
-    assert "term_bucket" in plan
+def _bucket_files(eng, table, terms) -> set[str]:
+    """The live files of table whose manifest bucket set holds a query
+    term's bucket (the files a query may pin)."""
+    import os
+
     from searchengine_spark.plans.build import term_bucket
 
-    buckets = sorted({term_bucket(t["term"], qe.cfg.term_buckets)
-                      for t in terms})
-    n_buckets = built_engine.cfg.term_buckets
-    assert len(buckets) < n_buckets  # pruning is actually selective
-    # pruned input: fewer partition dirs than the full layout would give
-    pruned = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pruned, plan
+    buckets = {term_bucket(t["term"], eng.cfg.term_buckets) for t in terms}
+    return {os.path.join(eng.io.work_dir, f["path"])
+            for f in eng.io.read_manifest(table)["files"]
+            if buckets & set(f["buckets"])}
+
+
+def _scanned(df) -> set[str]:
+    from urllib.parse import urlparse
+
+    return {urlparse(p).path for p in df.inputFiles()}
+
+
+def test_query_postings_scan_partition_pruned(spark, built_engine):
+    """The exact query path's postings scan must touch only the files
+    holding the query terms' term_buckets (file pruning through the
+    manifest's bucket sets)."""
+    from searchengine_spark.plans.query import QueryEngine
+
+    qe = QueryEngine(spark, built_engine.io)  # cold: scans read files
+    terms = qe.analyze("леопард")
+    assert terms
+    df = qe.candidates_df(terms)
+    want = _bucket_files(built_engine, "postings", terms)
+    n_files = len(built_engine.io.read_manifest("postings")["files"])
+    assert _scanned(df) == want and len(want) < n_files
+    assert "term_bucket" not in _plan(df)  # no bucket filter left
 
 
 def test_query_joins_broadcast_query_terms(built_engine):
@@ -51,14 +66,17 @@ def test_topk_plans_take_ordered(built_engine):
 
 
 def test_wand_blocks_scan_pruned(built_engine):
+    """A cold WAND query scans only the blocks files holding the query
+    terms' term_buckets."""
     from searchengine_spark.plans.wand import wand_topk
 
     qe = built_engine.query_engine
-    terms = qe.analyze("леопард обитает")
+    terms = qe.analyze("леопард")
     df = wand_topk(built_engine.spark, built_engine.io, built_engine.cfg,
                    terms, k=10)
-    plan = _plan(df)
-    assert "PartitionFilters" in plan and "term_bucket" in plan
+    want = _bucket_files(built_engine, "blocks", terms)
+    n_files = len(built_engine.io.read_manifest("blocks")["files"])
+    assert _scanned(df) == want and len(want) < n_files
 
 
 def test_docs_scan_never_reads_text_for_stats(built_engine):

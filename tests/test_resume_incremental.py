@@ -122,26 +122,16 @@ def test_upsert_docs_matches_oracle(inc_engine, spark):
 
 
 def test_upsert_is_partition_scoped(inc_engine, spark):
-    """An upsert must leave unaffected term_bucket partitions byte-
-    untouched (same files, same mtimes) and keep doc_ids stable, and all
-    three query strategies must agree afterwards."""
-    import os
-
+    """An upsert must replace exactly the postings files holding an
+    affected term_bucket and leave every other file byte-untouched (same
+    files, same mtimes), keep doc_ids stable, and all three query
+    strategies must agree afterwards."""
     from searchengine_spark.sources.corpus import gen_pages_local
 
     io = inc_engine.io
-
-    def part_files(table):
-        out = {}
-        base = io.path(table)
-        for root, _, fs in os.walk(base):
-            for fn in fs:
-                if fn.endswith(".parquet"):
-                    fp = os.path.join(root, fn)
-                    out[os.path.relpath(fp, base)] = os.path.getmtime(fp)
-        return out
-
-    before = part_files("postings")
+    held = {f["path"].split(os.sep)[-1]: set(f["buckets"])
+            for f in io.read_manifest("postings")["files"]}
+    before = _part_files(io, "postings")
     ids_before = {r["url"]: r["doc_id"]
                   for r in io.read("docs").select("url", "doc_id").collect()}
 
@@ -152,14 +142,15 @@ def test_upsert_is_partition_scoped(inc_engine, spark):
           victim["lang"])],
         "url string, warc_ts timestamp, html binary, text string, lang string")
     report = inc_engine.upsert_docs(pdf)
-    touched = {f"term_bucket={b}" for b in report["affected_buckets"]}
-    assert 0 < len(touched) < 64  # scoped, not a full rebuild
+    affected = set(report["affected_buckets"])
+    assert 0 < len(affected) < 64  # scoped, not a full rebuild
 
-    after = part_files("postings")
-    for rel, mtime in after.items():
-        bucket_dir = rel.split(os.sep)[0]
-        if bucket_dir not in touched:
-            assert before.get(rel) == mtime, f"untouched {rel} was rewritten"
+    after = _part_files(io, "postings")
+    for rel, buckets in held.items():
+        if buckets & affected:
+            assert rel not in after, f"{rel} holds affected buckets"
+        else:
+            assert after.get(rel) == before[rel], f"untouched {rel} changed"
 
     ids_after = {r["url"]: r["doc_id"]
                  for r in io.read("docs").select("url", "doc_id").collect()}
@@ -189,14 +180,16 @@ def _part_files(io, table):
 
 
 def test_upsert_docs_rewrite_is_bucket_scoped(inc_engine, spark):
-    """The docs table is url_bucket-partitioned: an upsert of one url must
-    rewrite only that url's bucket directory (byte-level mtime check on
-    every other bucket)."""
+    """The docs table is url_bucket-clustered: an upsert of one url must
+    replace only the file holding that url's bucket (byte-level mtime
+    check on every other file)."""
     from searchengine_spark import oracle as O
     from searchengine_spark.sources.corpus import gen_pages_local
 
     io = inc_engine.io
     before = _part_files(io, "docs")
+    held = {f["path"].split(os.sep)[-1]: set(f["buckets"])
+            for f in io.read_manifest("docs")["files"]}
     base = gen_pages_local(N)
     victim = dict(base[21], html=base[55]["html"], text=base[55]["text"])
     pdf = spark.createDataFrame(
@@ -207,12 +200,12 @@ def test_upsert_docs_rewrite_is_bucket_scoped(inc_engine, spark):
 
     vb = O.url_bucket(victim["url"], inc_engine.cfg.doc_id_buckets)
     after = _part_files(io, "docs")
-    touched_dirs = set()
-    for rel, mtime in after.items():
-        d = rel.split(os.sep)[0]
-        if before.get(rel) != mtime:
-            touched_dirs.add(d)
-    assert touched_dirs == {f"url_bucket={vb}"}
+    assert len(before) > 1
+    gone = {rel for rel in before if after.get(rel) != before[rel]}
+    assert gone == {rel for rel, buckets in held.items() if vb in buckets}
+    new = [f for f in io.read_manifest("docs")["files"]
+           if f["path"].split(os.sep)[-1] not in before]
+    assert len(new) == 1 and vb in new[0]["buckets"]
     # and the new text is served
     from searchengine_spark.functions.text_core import extract_text
 
@@ -365,7 +358,7 @@ def test_pending_delta_blocks_serving_and_dead_lock_is_taken_over(
     """(1) A pending (interrupted) delta must refuse queries — per-table
     manifests are complete in that state, so only the marker can catch the
     mixed snapshot. (2) A commit lock left by a DEAD writer (hard crash)
-    must be taken over immediately: vacuum/warm must not skip cleanup or
+    must be taken over immediately: vacuum must not skip cleanup or
     spin for the stale window."""
     import json
     import subprocess
@@ -395,14 +388,14 @@ def test_pending_delta_blocks_serving_and_dead_lock_is_taken_over(
     lock = os.path.join(io.work_dir, "_commit.lock")
     with open(lock, "w") as f:
         f.write(str(dead_pid))
-    assert io.vacuum("postings", required=True) >= 0  # no spin, no skip
+    assert io.vacuum("postings") >= 0  # taken over at once: no skip
     assert not os.path.exists(lock)  # stale lock was taken over + released
 
     # a LIVE holder (this process) is honored: non-blocking vacuum skips
     with open(lock, "w") as f:
         f.write(str(os.getpid()))
     # create debris that an (incorrectly) running vacuum would delete
-    debris = os.path.join(io.path("postings"), "term_bucket=0",
+    debris = os.path.join(io.path("postings"),
                           "gen-deadbeef-part-debris.parquet")
     os.makedirs(os.path.dirname(debris), exist_ok=True)
     with open(debris, "wb") as f:
@@ -412,6 +405,92 @@ def test_pending_delta_blocks_serving_and_dead_lock_is_taken_over(
     os.remove(lock)
     assert io.vacuum("postings") >= 1  # lock free: debris removed
     assert not os.path.exists(debris)
+
+
+def _pages_df(spark, pages):
+    return spark.createDataFrame(
+        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+         for p in pages],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+
+
+def test_warm_upsert_cycles_keep_persisted_rdds_constant(inc_engine, spark):
+    """warm -> upsert -> warm -> upsert -> warm: an upsert replaces the
+    query engine, and the replaced engine's warm frames (the old
+    snapshot) are unpersisted, so the persisted-RDD count stays
+    constant instead of growing by one table set per cycle."""
+    from searchengine_spark.sources.corpus import gen_pages_local
+
+    jsc = spark.sparkContext._jsc
+    # count only RDDs persisted from here on: other tests' cached frames
+    # may be cleaned up by the JVM at any moment
+    before = set(jsc.getPersistentRDDs())
+    base = gen_pages_local(N)
+    counts = []
+    try:
+        for i in range(3):
+            inc_engine.warm()
+            counts.append(len(set(jsc.getPersistentRDDs()) - before))
+            if i < 2:
+                inc_engine.upsert_docs(_pages_df(spark, [dict(
+                    base[i], html=base[60 + i]["html"],
+                    text=base[60 + i]["text"])]))
+    finally:
+        inc_engine._drop_query_engine()
+    assert counts[0] == counts[1] == counts[2], counts
+    # the upserts ran with AQE scoped off and restored the session's value
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_serving_reads_the_snapshot_not_the_directory(inc_engine):
+    """Copies of a live blocks file and a live docs file under new names
+    in their table directories — what an interrupted commit leaves
+    behind — are in no manifest, so the driver path's answers and
+    counts equal exact ones, both cold and after warm()."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+
+    io = inc_engine.io
+    n = inc_engine.query_engine.stats["n_docs"]
+    term = (io.read("terms").filter(F.col("df") / F.lit(float(n)) <= 0.95)
+            .orderBy(F.col("df").desc(), F.col("term"))
+            .select("term").first()["term"])
+    hit = inc_engine.search(term, limit=5)["data"][0]["doc_id"]
+
+    def copy_live(table, column, value):
+        for f in io.read_manifest(table)["files"]:
+            live = os.path.join(io.work_dir, f["path"])
+            if value in pq.read_table(live, columns=[column])[column] \
+                    .to_pylist():
+                shutil.copy(live, os.path.join(
+                    os.path.dirname(live),
+                    "gen-deadbeef-" + os.path.basename(live)))
+                return
+        raise AssertionError(f"no live {table} file holds {value!r}")
+
+    copy_live("blocks", "term", term)
+    copy_live("docs", "doc_id", hit)
+
+    def check():
+        for q in (term, "леопард обитает"):
+            exact = inc_engine.search(q, limit=5)
+            driver = inc_engine.search(q, limit=5, strategy="driver")
+            assert driver["result"] == exact["result"], q
+            if exact["result"]:
+                assert driver["count"] == exact["count"], q
+                assert [(h["doc_id"], h["uri"], round(h["score"], 9))
+                        for h in driver["data"]] == \
+                    [(h["doc_id"], h["uri"], round(h["score"], 9))
+                     for h in exact["data"]], q
+
+    check()
+    inc_engine.warm()
+    try:
+        check()
+    finally:
+        inc_engine._drop_query_engine()
 
 
 def test_remove_site_cascade(inc_engine):

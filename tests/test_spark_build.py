@@ -66,13 +66,13 @@ def test_manifest_lineage(built_engine):
     assert all(f["bytes"] > 0 for f in m["files"])
 
 
-def test_postings_partitioned_by_term_bucket(built_engine):
-    # partition pruning layout: term_bucket=N directories exist
-    import os
-
-    root = built_engine.io.path("postings")
-    buckets = [d for d in os.listdir(root) if d.startswith("term_bucket=")]
-    assert len(buckets) > 1
+def test_postings_partitioned_by_term_bucket(spark, built_engine):
+    # file-pruning layout: at most one file per core, each holding whole
+    # term buckets, the manifest recording every file's bucket set
+    files = built_engine.io.read_manifest("postings")["files"]
+    assert 1 < len(files) <= spark.sparkContext.defaultParallelism
+    held = [b for f in files for b in f["buckets"]]
+    assert sorted(held) == list(range(built_engine.cfg.term_buckets))
 
 
 def test_scan_prunes_html_column(spark, tmp_path):

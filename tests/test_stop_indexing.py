@@ -145,11 +145,11 @@ def test_incremental_respects_index_layout(spark, work):
     got = {r["term"]: (r["df"], r["cf"])
            for r in foreign.io.read("terms").collect()}
     assert got == {t: (idx.df[t], idx.cf[t]) for t in idx.df}
-    # no stray 64-bucket partition dirs were created
-    import os
-    buckets = {d for d in os.listdir(foreign.io.path("postings"))
-               if d.startswith("term_bucket=")}
-    assert all(int(b.split("=")[1]) < 8 for b in buckets), buckets
+    # no row landed in a 64-bucket layout's bucket
+    for table in ("postings", "terms", "blocks"):
+        held = {b for f in foreign.io.read_manifest(table)["files"]
+                for b in f["buckets"]}
+        assert held and max(held) < 8, (table, held)
 
 
 def test_remove_docs_requires_target(spark, work):
