@@ -2,23 +2,34 @@
 
 Reference lifecycle replaced (SURVEY.md §3.1): the reference issues one SQL
 round-trip per lemma, per (lemma,page) pair, and re-fetches pages over HTTP
-for titles (services/SearchServiceImpl.java:96-131). Here a query is ONE
-Spark job over file-pruned postings:
+for titles (services/SearchServiceImpl.java:96-131). Here every query runs
+the same five steps, each written once:
 
-  driver: lemmatize query -> look up query terms in `terms` (bucket-pruned
-          scan of a tiny frame) -> stopword prune df/N>0.95 -> rarest-first
-  exec:   postings scan pinned to the files holding the query terms'
-          term_buckets (file pruning through the manifest)
-          ⋈ broadcast(query terms + idf)            [J1, broadcast hash join]
-          -> per-posting BM25 term score             [pure column expr, codegen]
-          -> groupBy(doc_id): nt=count, score=sum    [J3+A6 in ONE hash agg]
-          -> filter nt == |Q|                        [AND semantics]
-          -> optional site filter                    [J4]
-          -> orderBy(score desc, doc_id asc) limit   [O3+O4 => TakeOrderedAndProject]
-  driver: join top-k with docs (broadcast the k rows), snippets on k rows
+  resolve:  lemmatize -> dictionary lookup of the lemmas in `terms` (a
+            manifest-pinned pyarrow read, serve.lookup_terms; no Spark
+            job) -> stopword prune df/N>0.95 -> rarest-first
+  route:    exact for a site filter / reference relevance; otherwise the
+            requested strategy, or under "auto" driver vs WAND by max df
+  score:    a page of (doc_id, score) rows plus the match count, from
+            exact   postings scan pinned to the files holding the query
+                    terms' term_buckets (file pruning through the manifest)
+                    ⋈ broadcast(query terms + idf)     [J1, broadcast hash join]
+                    -> per-posting BM25 term score      [pure column expr]
+                    -> groupBy(doc_id): nt=count, score=sum [J3+A6, one agg]
+                    -> filter nt == |Q|                 [AND semantics]
+                    -> optional site filter             [J4]
+                    -> count; orderBy(score desc, doc_id asc)
+                       offset limit                     [O3+O4]
+            wand    block-max WAND over the posting blocks (plans/wand.py)
+            driver  one-process intersection over the blocks files
+                    (plans/serve.py): top-k and count from one decode
+  fetch:    the page's docs rows, a manifest-pinned pyarrow read by doc_id
+            (serve.fetch_docs; `text` only when snippets are asked for)
+  assemble: ranks, titles and snippets on the k rows; an empty page is
+            result=True with no rows when the query matches, else "not found"
 
-The exact path below is also the correctness yardstick for the block-max
-WAND path (plans/wand.py): both must return identical rows.
+The exact path is also the correctness yardstick for the WAND and driver
+paths: all three must return identical rows.
 """
 
 from __future__ import annotations
@@ -31,8 +42,8 @@ from ..functions.text_core import is_query_valid, split_to_lemmas
 from ..operators.postings import bm25_tfpart_col
 from ..oracle import build_snippet
 from ..sources.tableio import TableIO
+from . import serve, wand
 from .build import term_bucket
-from .serve import rank_query_terms
 
 ERR_EMPTY = "Задан пустой поисковый запрос"
 ERR_NOT_RUSSIAN = "Запрос должен быть на русском языке"
@@ -55,9 +66,10 @@ class QueryEngine:
     # --- serving mode ----------------------------------------------------
 
     def warm(self) -> list[str]:
-        """Pin the query-side tables in executor memory (serving mode — the
-        cluster analog of a resident index: postings/terms/blocks/docs stay
-        cached across queries; MEMORY_AND_DISK so oversized indexes spill
+        """Pin the tables a Spark query path reads in executor memory
+        (serving mode — the cluster analog of a resident index: postings
+        for exact, blocks for WAND, docs for the site filter stay cached
+        across queries; MEMORY_AND_DISK so oversized indexes spill
         instead of failing). Returns the list of tables actually pinned;
         an absent table (e.g. blocks not built) is skipped, but a corrupt
         or partially-written one raises — serving must not silently degrade
@@ -66,7 +78,7 @@ class QueryEngine:
 
         self._assert_no_pending_delta()
         pinned: list[str] = []
-        for t in ("postings", "terms", "blocks", "docs"):
+        for t in ("postings", "blocks", "docs"):
             if not self.io.exists(t):
                 continue  # the one expected absence: table never built
             if not self.io.stage_complete(t):
@@ -111,18 +123,15 @@ class QueryEngine:
     # --- query analysis (driver-side; tiny data) ------------------------
 
     def analyze(self, query: str) -> list[dict]:
-        """Lemmatize, keep indexed terms, prune stopwords, rarest-first.
-        (getLemmaList, SearchServiceImpl.java:153-168; ties by term asc.)"""
+        """Lemmatize, keep indexed terms, prune stopwords, rarest-first
+        (getLemmaList, SearchServiceImpl.java:153-168; ties by term asc):
+        [{term, df, idf}] from a pinned pyarrow dictionary read, no Spark
+        job."""
         lemmas = list(split_to_lemmas(query))
         if not lemmas:
             return []
-        buckets = sorted({term_bucket(t, self.cfg.term_buckets)
-                          for t in lemmas})
-        rows = (self._table("terms", buckets)
-                .filter(F.col("term").isin(lemmas))
-                .select("term", "df").collect())
-        return rank_query_terms([(r["term"], r["df"]) for r in rows],
-                                self.stats["n_docs"], self.cfg)
+        return serve.lookup_terms(self.io, self.cfg, lemmas,
+                                  self.stats["n_docs"])
 
     # --- scoring ---------------------------------------------------------
 
@@ -174,170 +183,106 @@ class QueryEngine:
                            files with pyarrow — NO Spark job; millisecond
                            path for interactive serving (plans/serve.py).
                            bm25, no site filter; falls back to exact.
-        strategy="auto":   route by the query's posting volume (driver-side
-                           dictionary lookup, no Spark job): driver while
-                           every term's df fits one process
+        strategy="auto":   route by the query's posting volume: driver
+                           while every term's df fits one process
                            (cfg.driver_df_limit), WAND above it, exact for
                            site filters / reference relevance mode.
-        count_mode="none" skips the total-match count (count is inherently a
-        full-intersection job; WAND's point is NOT doing that work)."""
+        count_mode="none" skips WAND's total-match count (count is a
+        full-intersection job; WAND's point is NOT doing that work). The
+        exact and driver paths hold the count anyway."""
         self._assert_no_pending_delta()
         limit = limit if limit is not None else self.cfg.default_limit
         if not query:
             return {"result": False, "error": ERR_EMPTY}
         if not is_query_valid(query):
             return {"result": False, "error": ERR_NOT_RUSSIAN}
-
-        pre_terms = None
-        if strategy == "auto":
-            strategy, pre_terms = self._pick_strategy(query, site,
-                                                      relevance_mode)
-
-        if (strategy == "driver" and site is None
-                and relevance_mode == "bm25"):
-            return self._search_driver(query, limit, offset, with_snippets,
-                                       count_mode, terms=pre_terms)
-
         terms = self.analyze(query)
         if not terms:
             return {"result": False, "error": ERR_NOT_FOUND}
 
-        use_wand = (strategy == "wand" and site is None
-                    and relevance_mode == "bm25")
-        count = None
-        if use_wand:
-            from .wand import wand_topk
-            topk = wand_topk(self.spark, self.io, self.cfg, terms,
-                             k=limit, offset=offset,
-                             blocks_df=self._warm.get("blocks"))
-            if count_mode == "exact":
-                count = self.candidates_df(terms, site, relevance_mode).count()
-            docs = self._table("docs")
-            hits = (docs.join(F.broadcast(topk), "doc_id")
-                        .select("doc_id", "url", "site", "title", "text", "score")
-                        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                        .collect())
-            if not hits:
-                # response-shape parity with the exact path: offset past the
-                # last hit of a matching query is result=True + empty data,
-                # only a truly empty candidate set is ERR_NOT_FOUND. WAND at
-                # offset 0 returns hits iff candidates exist, so only the
-                # offset-past-end case ever pays a count job (even under
-                # count_mode="none" — shape correctness needs it there).
-                if offset == 0:
-                    return {"result": False, "error": ERR_NOT_FOUND}
-                if count is None:
-                    count = self.candidates_df(terms, site, relevance_mode).count()
-                if count == 0:
-                    return {"result": False, "error": ERR_NOT_FOUND}
-            if count is None:
-                count = len(hits)
+        strategy = self._pick_strategy(terms, site, relevance_mode, strategy)
+        if strategy == "driver":
+            page, count = serve.driver_topk(self.io, self.cfg, terms,
+                                            k=limit, offset=offset)
+        elif strategy == "wand":
+            page, count = self._wand_page(terms, limit, offset, count_mode)
         else:
-            cand = self.candidates_df(terms, site, relevance_mode).cache()
-            try:
-                count = cand.count()
-                if count == 0:
-                    return {"result": False, "error": ERR_NOT_FOUND}
-                if relevance_mode == "reference":
-                    # Σtf / max normalization (SearchServiceImpl.java:96-115)
-                    mx = cand.agg(F.max("score")).collect()[0][0]
-                    cand_final = cand.withColumn("score", F.col("score") / F.lit(mx))
-                else:
-                    cand_final = cand
-                topk = (cand_final
-                        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                        .offset(offset).limit(limit))
-                docs = self._table("docs")
-                hits = (docs.join(F.broadcast(topk), "doc_id")
-                            .select("doc_id", "url", "site", "title", "text", "score")
-                            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                            .collect())
-            finally:
-                cand.unpersist()
-
-        data = []
-        qlemmas_master = [t["term"] for t in terms]
-        for rank, r in enumerate(hits, start=offset + 1):
-            row = {
-                "rank": rank,
-                "doc_id": r["doc_id"],
-                "site": r["site"],
-                "site_name": r["site"],  # W4 siteName (host doubles as name)
-                "uri": r["url"],
-                "title": r["title"],
-                "score": float(r["score"]),
-            }
-            if with_snippets:
-                # snippet over k rows only; same code path as the oracle
-                row["snippet"] = build_snippet(r["text"], list(qlemmas_master))
-            data.append(row)
-        return {"result": True, "count": count, "data": data}
-
-    def _pick_strategy(self, query: str, site: str | None,
-                       relevance_mode: str) -> tuple[str, list[dict] | None]:
-        """auto routing: driver (one-process columnar read) while every
-        query term's posting list is small, distributed WAND above, exact
-        whenever the fast paths don't apply (site filter, reference
-        relevance, no blocks stage). The df probe is a driver-side pruned
-        dictionary read — no Spark job; the resolved terms ride along so
-        the driver path doesn't repeat the lookup."""
-        # gate on stage_complete, not directory existence: after a stopped/
-        # failed build the blocks dir holds a partially written stage
-        # (aborted manifest) and the fast paths would silently serve
-        # incomplete results where exact is safe
-        if site is not None or relevance_mode != "bm25" \
-                or not self.io.stage_complete("blocks"):
-            return "exact", None
-        from . import serve
-
-        lemmas = list(split_to_lemmas(query))
-        if not lemmas:
-            return "exact", None
-        terms = serve.lookup_terms(self.io, self.cfg, lemmas,
-                                   self.stats["n_docs"])
-        if not terms:
-            return "exact", None
-        mx = max(t["df"] for t in terms)
-        return ("driver" if mx <= self.cfg.driver_df_limit else "wand"), terms
-
-    # --- driver-side serving path (plans/serve.py) ------------------------
-
-    def _search_driver(self, query: str, limit: int, offset: int,
-                       with_snippets: bool, count_mode: str,
-                       terms: list[dict] | None = None) -> dict:
-        from . import serve
-
-        if terms is None:  # auto routing already resolved them otherwise
-            lemmas = list(split_to_lemmas(query))
-            if not lemmas:
-                return {"result": False, "error": ERR_NOT_FOUND}
-            terms = serve.lookup_terms(self.io, self.cfg, lemmas,
-                                       self.stats["n_docs"])
-        if not terms:
+            page, count = self._exact_page(terms, limit, offset, site,
+                                           relevance_mode)
+        # offset past the last hit of a matching query is result=True +
+        # empty data; only an empty candidate set is "not found"
+        if count == 0:
             return {"result": False, "error": ERR_NOT_FOUND}
-        topk = serve.driver_topk(self.io, self.cfg, terms, k=limit,
-                                 offset=offset)
-        if not topk:
-            # offset=0 + no hits <=> no candidates at all — no count needed.
-            # Only offset-past-end needs the count for shape parity with
-            # the exact path.
-            if offset == 0:
-                return {"result": False, "error": ERR_NOT_FOUND}
-            count = serve.driver_count_candidates(self.io, self.cfg, terms)
-            if count == 0:
-                return {"result": False, "error": ERR_NOT_FOUND}
-            return {"result": True, "count": count, "data": []}
-        count = (serve.driver_count_candidates(self.io, self.cfg, terms)
-                 if count_mode == "exact" else len(topk))
-        docs = serve.fetch_docs(self.io, [d for d, _ in topk])
+
+        columns = ("doc_id", "url", "site", "title") + (
+            ("text",) if with_snippets else ())
+        docs = serve.fetch_docs(self.io, [d for d, _ in page], columns)
         qlemmas = [t["term"] for t in terms]
         data = []
-        for rank, (d, s) in enumerate(topk, start=offset + 1):
+        for rank, (d, s) in enumerate(page, start=offset + 1):
             doc = docs[d]
             row = {"rank": rank, "doc_id": d, "site": doc["site"],
-                   "site_name": doc["site"], "uri": doc["url"],
-                   "title": doc["title"], "score": float(s)}
+                   "site_name": doc["site"],  # W4 siteName (host doubles as name)
+                   "uri": doc["url"], "title": doc["title"],
+                   "score": float(s)}
             if with_snippets:
+                # snippet over k rows only; same code path as the oracle
                 row["snippet"] = build_snippet(doc["text"], list(qlemmas))
             data.append(row)
         return {"result": True, "count": count, "data": data}
+
+    def _pick_strategy(self, terms: list[dict], site: str | None,
+                       relevance_mode: str, strategy: str) -> str:
+        """The strategy that runs: exact whenever the fast paths don't
+        apply (site filter, reference relevance); under "auto", driver
+        (one-process columnar read) while every query term's posting list
+        is small, distributed WAND above, exact with no blocks stage."""
+        if site is not None or relevance_mode != "bm25":
+            return "exact"
+        if strategy == "auto":
+            # gate on stage_complete, not directory existence: after a
+            # stopped/failed build the blocks dir holds a partially written
+            # stage (aborted manifest) and the fast paths would silently
+            # serve incomplete results where exact is safe
+            if not self.io.stage_complete("blocks"):
+                return "exact"
+            mx = max(t["df"] for t in terms)
+            return "driver" if mx <= self.cfg.driver_df_limit else "wand"
+        return strategy if strategy in ("driver", "wand") else "exact"
+
+    def _exact_page(self, terms: list[dict], limit: int, offset: int,
+                    site: str | None, relevance_mode: str
+                    ) -> tuple[list[tuple[int, float]], int]:
+        """(page, count) of the exact path: count the candidates, then
+        rank and slice them in Spark."""
+        cand = self.candidates_df(terms, site, relevance_mode).cache()
+        try:
+            count = cand.count()
+            if count == 0:
+                return [], 0
+            ranked = cand
+            if relevance_mode == "reference":
+                # Σtf / max normalization (SearchServiceImpl.java:96-115)
+                mx = cand.agg(F.max("score")).collect()[0][0]
+                ranked = cand.withColumn("score", F.col("score") / F.lit(mx))
+            rows = (ranked
+                    .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+                    .offset(offset).limit(limit).collect())
+            return [(r["doc_id"], r["score"]) for r in rows], count
+        finally:
+            cand.unpersist()
+
+    def _wand_page(self, terms: list[dict], limit: int, offset: int,
+                   count_mode: str) -> tuple[list[tuple[int, float]], int]:
+        """(page, count) of the WAND path; the count is an exact-path
+        candidates count, or the page size under count_mode="none"."""
+        rows = wand.wand_topk(self.spark, self.io, self.cfg, terms,
+                              k=limit, offset=offset,
+                              blocks_df=self._warm.get("blocks")).collect()
+        page = [(r["doc_id"], r["score"]) for r in rows]
+        # WAND at offset 0 returns hits iff candidates exist, so under
+        # count_mode="none" only an empty page past offset 0 pays a count
+        # job: it tells "offset past the end" from "not found"
+        if count_mode == "exact" or (not page and offset):
+            return page, self.candidates_df(terms).count()
+        return page, len(page)

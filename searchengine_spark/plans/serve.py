@@ -9,13 +9,17 @@ the stage manifest (TableIO.pinned_files): the committed snapshot's file
 list, pruned to the files whose bucket set holds the query's buckets. A
 query touches:
 
-    terms files holding b(q)     (dictionary rows for the query's terms)
-    blocks files holding b(q)    (posting blocks for the query terms)
-    docs row groups selected by doc_id stats   (k rows of metadata)
+    terms files holding b(q)     (dictionary rows for the query's terms;
+                                  lookup_terms, every strategy)
+    blocks files holding b(q)    (posting blocks for the query terms,
+                                  read and decoded once for top-k and
+                                  count; driver_topk)
+    docs row groups selected by doc_id stats   (k rows of metadata;
+                                  fetch_docs, every strategy)
 
 all via pyarrow dataset filters — so interactive latency is file-read
 bound (milliseconds), while the SAME files remain the source for the
-distributed exact/WAND paths. Debris of an interrupted commit is never
+distributed exact/WAND scoring. Debris of an interrupted commit is never
 read: it is in no manifest. This mirrors production engines: Spark
 builds and maintains the index; a thin serving tier reads it.
 
@@ -31,8 +35,7 @@ from __future__ import annotations
 import heapq
 
 from ..config import EngineConfig
-from ..operators.postings import (bm25_idf, np_intersect_score_blocks,
-                                  np_varint_decode)
+from ..operators.postings import bm25_idf, np_intersect_score_blocks
 from .build import term_bucket
 
 
@@ -63,8 +66,10 @@ def rank_query_terms(rows, n_docs: int, cfg: EngineConfig) -> list[dict]:
 
 def lookup_terms(io, cfg: EngineConfig, lemmas: list[str],
                  n_docs: int) -> list[dict]:
-    """QueryEngine.analyze's dictionary lookup via a pruned pyarrow read
-    (no Spark job), ranked by the same rank_query_terms."""
+    """The query terms [{term, df, idf}] of `lemmas`: their dictionary
+    rows from a bucket-pruned pyarrow read of `terms` (no Spark job),
+    ranked by rank_query_terms. The one dictionary lookup of every search
+    strategy (QueryEngine.analyze)."""
     import pyarrow.dataset as ds
 
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in lemmas})
@@ -78,9 +83,12 @@ def lookup_terms(io, cfg: EngineConfig, lemmas: list[str],
 
 
 def driver_topk(io, cfg: EngineConfig, terms: list[dict], k: int,
-                offset: int = 0) -> list[tuple[int, float]]:
-    """Top-(offset+k) (doc_id, score) — rarest-first AND intersection with
-    doc-range block skipping over the compressed blocks, one process.
+                offset: int = 0) -> tuple[list[tuple[int, float]], int]:
+    """(page, count): the (doc_id, score) rows ranked offset+1..offset+k
+    and the number of docs matching every term — rarest-first AND
+    intersection with doc-range block skipping over the compressed
+    blocks, one process, one read and one decode for both. terms: the
+    analyze() / lookup_terms output [{term, df, idf}], rarest-first.
     Decode + scoring numpy-vectorized via the shared kernel
     (operators/postings.py::np_intersect_score_blocks) — score-identical
     to the WAND tasks by construction."""
@@ -112,18 +120,16 @@ def driver_topk(io, cfg: EngineConfig, terms: list[dict], k: int,
     }
     cand_docs, cand_scores = np_intersect_score_blocks(
         per_term_blocks, term_order, idf, avgdl, k1, b)
-    if cand_docs.size == 0:
-        return []
-    kprime = offset + k
     top = heapq.nsmallest(
-        kprime, zip(cand_docs.tolist(), cand_scores.tolist()),
+        offset + k, zip(cand_docs.tolist(), cand_scores.tolist()),
         key=lambda kv: (-kv[1], kv[0]))
-    return [(d_, s) for d_, s in top[offset:]]
+    return top[offset:], int(cand_docs.size)
 
 
 def fetch_docs(io, doc_ids: list[int],
                columns=("doc_id", "url", "site", "title", "text")) -> dict[int, dict]:
-    """k rows of doc metadata via row-group doc_id statistics."""
+    """doc_id -> row of `columns` for k docs, via row-group doc_id
+    statistics: the one doc fetch of every search strategy."""
     import pyarrow.dataset as ds
 
     if not doc_ids:
@@ -136,33 +142,3 @@ def fetch_docs(io, doc_ids: list[int],
         row = {c: tbl[c][i].as_py() for c in tbl.column_names}
         out[row["doc_id"]] = row
     return out
-
-
-def driver_count_candidates(io, cfg: EngineConfig, terms: list[dict]) -> int:
-    """Exact AND-match count, driver-side (for response parity)."""
-    import pyarrow.dataset as ds
-
-    term_order = [t["term"] for t in terms]
-    buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
-    d = _dataset(io, "blocks", buckets)
-    tbl = d.to_table(
-        filter=(ds.field("term_bucket").isin(buckets)
-                & ds.field("term").isin(term_order)),
-        columns=["term", "docs_bin"])  # count needs doc ids only
-    import numpy as np
-
-    by_term: dict[str, list] = {t: [] for t in term_order}
-    for i in range(tbl.num_rows):
-        t = tbl["term"][i].as_py()
-        if t in by_term:
-            by_term[t].append(np.cumsum(np_varint_decode(
-                bytes(tbl["docs_bin"][i].as_py()))))
-    cand = None
-    for t in term_order:
-        docs_t = (np.concatenate(by_term[t]) if by_term[t]
-                  else np.empty(0, dtype=np.int64))
-        cand = docs_t if cand is None else np.intersect1d(
-            cand, docs_t, assume_unique=True)
-        if cand.size == 0:
-            return 0
-    return int(cand.size) if cand is not None else 0

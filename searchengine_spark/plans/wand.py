@@ -151,7 +151,8 @@ def _wand_task(pdf, *, term_order: list[str], idf: dict[str, float],
 def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
               k: int, offset: int = 0,
               blocks_df: DataFrame | None = None) -> DataFrame:
-    """terms: analyze() output [{term, df, idf}] rarest-first.
+    """terms: the query terms [{term, df, idf}] rarest-first, as
+    QueryEngine.analyze (serve.lookup_terms) returns them.
     Returns DataFrame(doc_id, score) of the global top-(offset+k).
     blocks_df: optionally a pre-warmed (cached) blocks frame."""
     stats = io.read_meta("stats")

@@ -99,6 +99,16 @@ def in_buckets(df: DataFrame, col: str, values: list,
     return df.filter(F.col(col).isin(values))
 
 
+def _remove_data_file(path: str) -> None:
+    """Delete a data file and the hidden `.<name>.crc` checksum sidecar
+    the Hadoop local filesystem writes beside it."""
+    os.remove(path)
+    crc = os.path.join(os.path.dirname(path),
+                       f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
 class TableIO:
     """Parquet-dir tables + JSON stage manifests under one work dir."""
 
@@ -248,7 +258,7 @@ class TableIO:
             if entry["rows"]:
                 files.append(entry)
             else:  # task 0 writes a file even when it got no rows
-                os.remove(fp)
+                _remove_data_file(fp)
         result = StageResult(stage=stage, status="complete",
                              rows=sum(f["rows"] for f in files),
                              bytes=sum(f["bytes"] for f in files),
@@ -453,8 +463,9 @@ class TableIO:
             pass
 
     def vacuum(self, table: str) -> int:
-        """Delete data files not referenced by the table's manifest —
-        debris from an interrupted file replacement. Returns the number
+        """Delete data files not referenced by the table's manifest, with
+        their checksum sidecars — debris from an interrupted or finished
+        file replacement. Returns the number
         of files removed. Takes the commit lock: if a LIVE commit is in
         flight its uncommitted gen-* files must survive, so the
         non-blocking acquire skips and the committer vacuums after its
@@ -477,7 +488,7 @@ class TableIO:
         removed = 0
         for fp in self._parquet_files(self.path(table)):
             if fp not in live:
-                os.remove(fp)
+                _remove_data_file(fp)
                 removed += 1
         return removed
 

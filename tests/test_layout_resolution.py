@@ -93,7 +93,7 @@ def test_warm_returns_pinned_tables(spark, small_bucket_engine):
     eng, work = small_bucket_engine
     qe = QueryEngine(spark, TableIO(spark, work))
     pinned = qe.warm()
-    assert set(pinned) == {"postings", "terms", "blocks", "docs"}
+    assert set(pinned) == {"postings", "blocks", "docs"}
 
 
 def test_block_id_sequential_across_batches(spark, small_bucket_engine):
@@ -563,6 +563,25 @@ def test_queries_pin_only_their_buckets_files(spark, packed_build,
                 continue  # k point reads by doc_id stats, every file
             assert buckets == [b] and files == want[table], (table, files)
         assert {t for t, _, _ in pinned} == {"terms", "blocks", "docs"}
+
+
+def test_no_checksum_sidecar_outlives_its_file(packed_build, packed_upsert):
+    """The hidden `.<file>.crc` sidecar the local filesystem writes beside
+    each data file goes with the file: after the build and after an upsert
+    every sidecar in a table directory belongs to a file of the table's
+    manifest (or to the write's _SUCCESS marker)."""
+    import os
+
+    for eng in (packed_build, packed_upsert[0]):
+        for table in ("docs", "postings", "terms", "site_stats", "blocks"):
+            live = {os.path.basename(f["path"])
+                    for f in eng.io.read_manifest(table)["files"]}
+            sidecars = [n for n in os.listdir(eng.io.path(table))
+                        if n.endswith(".crc")]
+            assert sidecars, table
+            stale = [n for n in sidecars
+                     if n[1:-len(".crc")] not in live | {"_SUCCESS"}]
+            assert not stale, (table, stale)
 
 
 def test_packed_blocks_match_one_file_per_task(spark, packed_build):

@@ -81,13 +81,91 @@ def test_auto_strategy_routes_and_matches(built_engine):
            [h["doc_id"] for h in exact["data"]]
 
     qe = eng.query_engine
-    assert qe._pick_strategy(q, None, "bm25")[0] == "driver"
-    assert qe._pick_strategy(q, "anysite", "bm25")[0] == "exact"
-    assert qe._pick_strategy(q, None, "reference")[0] == "exact"
+    terms = qe.analyze(q)
+    assert qe._pick_strategy(terms, None, "bm25", "auto") == "driver"
+    assert qe._pick_strategy(terms, "anysite", "bm25", "auto") == "exact"
+    assert qe._pick_strategy(terms, None, "reference", "auto") == "exact"
 
     tiny = QueryEngine(eng.spark, eng.io,
                        dataclasses.replace(eng.cfg, driver_df_limit=0))
-    assert tiny._pick_strategy(q, None, "bm25")[0] == "wand"
+    assert tiny._pick_strategy(terms, None, "bm25", "auto") == "wand"
     wand_auto = tiny.search(q, limit=5, strategy="auto")
     assert [h["doc_id"] for h in wand_auto["data"]] == \
            [h["doc_id"] for h in exact["data"]]
+
+
+def _jobs(spark, group, fn):
+    """(fn(), Spark jobs fn started), counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_analyze_starts_no_spark_job(built_engine):
+    """The dictionary lookup of every strategy is a pinned pyarrow read."""
+    qe = built_engine.query_engine
+    terms, jobs = _jobs(built_engine.spark, "serve-analyze",
+                        lambda: qe.analyze("леопард обитает"))
+    assert [t["term"] for t in terms] == ["леопард", "обитать"]
+    assert jobs == 0
+
+
+def test_auto_all_stopword_query_starts_no_spark_job(built_engine):
+    """An all-stopword query resolves to no terms before routing, so it is
+    "not found" without falling through to the exact path's Spark job."""
+    from searchengine_spark.plans.query import ERR_NOT_FOUND
+    from searchengine_spark.sources.corpus import head_terms
+
+    r, jobs = _jobs(built_engine.spark, "serve-stopwords",
+                    lambda: built_engine.search(" ".join(head_terms()),
+                                                strategy="auto"))
+    assert r == {"result": False, "error": ERR_NOT_FOUND}
+    assert jobs == 0
+
+
+def test_driver_search_reads_blocks_once(built_engine, monkeypatch):
+    """Top-k and count come from one read and decode of the blocks."""
+    from searchengine_spark.plans import serve
+
+    tables = []
+    real = serve._dataset
+
+    def spy(io, table, buckets=None):
+        tables.append(table)
+        return real(io, table, buckets)
+
+    monkeypatch.setattr(serve, "_dataset", spy)
+    r = built_engine.search("леопард обитает", strategy="driver")
+    assert r["result"] and r["count"] > 0
+    assert tables.count("blocks") == 1 and tables.count("terms") == 1
+
+
+def test_doc_fetch_reads_text_only_for_snippets(built_engine, monkeypatch):
+    """Every strategy fetches its page through serve.fetch_docs, and reads
+    the `text` column only when the response carries snippets."""
+    from searchengine_spark.plans import serve
+
+    fetched = []
+    real = serve.fetch_docs
+
+    def spy(*args, **kwargs):
+        rows = real(*args, **kwargs)
+        fetched.append({c for row in rows.values() for c in row})
+        return rows
+
+    monkeypatch.setattr(serve, "fetch_docs", spy)
+    for strategy in ("exact", "wand", "driver"):
+        for snippets in (False, True):
+            fetched.clear()
+            r = built_engine.search("леопард обитает", limit=3,
+                                    strategy=strategy,
+                                    with_snippets=snippets)
+            assert r["result"] and r["data"], (strategy, snippets)
+            assert len(fetched) == 1, (strategy, snippets)
+            assert ("text" in fetched[0]) == snippets, (strategy, fetched)
+            assert all(("snippet" in h) == snippets for h in r["data"])
