@@ -15,10 +15,12 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # tokens that change from run to run without the plan changing: the
-# scratch directory, parquet part-file names and the per-session
+# scratch directory, parquet part-file names (with the generation prefix
+# a table commit gives them, TableIO.replace_buckets) and the per-session
 # expression / exchange-plan / RDD ids
 _TMP_DIR = re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+")
-_PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}[\w.-]*?\.parquet")
+_PART_FILE = re.compile(
+    r"(?:gen-[0-9a-f]{12}-)?part-\d+-[0-9a-f-]{36}[\w.-]*?\.parquet")
 _IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
 
 

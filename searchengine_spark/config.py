@@ -50,8 +50,9 @@ def recommended_spark_conf() -> dict[str, str]:
     leave partial files in the destination) is fully covered by this
     engine's own commit protocol: readers are manifest-pinned
     (sources/tableio.py::TableIO.read — only files listed by a COMPLETE
-    stage manifest are ever read), stage re-runs overwrite the
-    destination, and vacuum() deletes unmanifested files. The same
+    stage manifest are ever read), every write lands in a side directory
+    that the next write of the table clears (TableIO.replace_buckets),
+    and vacuum() deletes unmanifested files. The same
     reasoning is why object-store committers (no atomic rename at all)
     are safe under manifest/snapshot table formats.
     """

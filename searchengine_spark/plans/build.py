@@ -5,6 +5,11 @@ Replaces the reference's crawl-and-upsert build
 crawl's output is our input table; every MySQL read-modify-write counter
 (df increment, RecursiveSearch.java:150-161) becomes a declarative
 aggregation; each stage commit is a checkpoint (manifest + parquet dir).
+The single-page reindex (streaming/incremental.py) writes the same tables
+through the same commit: every writer goes through commit_table, which
+takes each table's layout from TABLES and commits through
+TableIO.replace_buckets — the whole table here, the affected buckets'
+files there.
 
 Stage graph (each stage resumable, per-file lineage in _manifest/):
 
@@ -33,16 +38,32 @@ Scale notes (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import EngineConfig
+from ..config import EngineConfig, aqe_off, committer_v2
 from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import attach_doc_ids, compute_bucket_offsets
-from ..sources.tableio import TableIO, check_format_version, in_buckets
+from ..sources.tableio import (StageResult, TableIO, check_format_version,
+                               in_buckets)
 
 STAGES = ["docs", "postings", "terms", "stats", "site_stats", "blocks"]
+
+# Each table's layout, declared once: (bucket column, sort keys within a
+# bucket). docs by url_bucket, doc_id-ascending (tight row-group stats
+# for the serving path's point reads); postings as (term, doc_id) runs
+# (the exchange-free block encoder and parquet min/max skipping); blocks
+# in the order WAND and the driver path read them; site_stats holds the
+# term buckets plus the -1 pages bucket.
+TABLES = {
+    "docs": ("url_bucket", ["doc_id"]),
+    "postings": ("term_bucket", ["term", "doc_id"]),
+    "terms": ("term_bucket", []),
+    "site_stats": ("term_bucket", []),
+    "blocks": ("term_bucket", ["term", "shard", "doc_min"]),
+}
 
 
 def term_bucket_col(term_col, n_buckets: int):
@@ -55,6 +76,27 @@ def term_bucket(term: str, n_buckets: int) -> int:
     """term_bucket_col for one term, driver-side (query-time pruning)."""
     import hashlib
     return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % n_buckets
+
+
+def postings_frame(docs: DataFrame, n_buckets: int) -> DataFrame:
+    """The posting rows of docs with their term bucket — what the build
+    writes for the corpus and an upsert for its changed docs."""
+    return tokens_from_docs(docs).withColumn(
+        "term_bucket", term_bucket_col(F.col("term"), n_buckets))
+
+
+def commit_table(io: TableIO, table: str, df: DataFrame,
+                 buckets: list | None = None, extra: dict | None = None):
+    """Commit df as `table` (buckets=None) or as the files of its
+    `buckets`, in the table's declared layout (TABLES)."""
+    bucket_col, sort_by = TABLES[table]
+    return io.replace_buckets(df, table, bucket_col, buckets,
+                              sort_by=sort_by, extra=extra)
+
+
+def _error_message(exc: BaseException) -> str:
+    """The status record's one-line error text."""
+    return f"{type(exc).__name__}: {exc}".splitlines()[0][:300]
 
 
 class IndexBuilder:
@@ -87,15 +129,11 @@ class IndexBuilder:
 
         # AQE off and committer v2, both scoped to the build (engine-owned
         # write phase; see config.aqe_off and config.committer_v2)
-        from ..config import aqe_off, committer_v2
-
         with aqe_off(self.spark), committer_v2(self.spark):
             return self._build_stages(pages, resume, report)
 
     def _build_stages(self, pages: DataFrame, resume: bool,
                       report: dict) -> dict:
-        from ..sources.tableio import StageResult
-
         t0 = time.monotonic()
         started: list[str] = []  # append-only; GIL-atomic across branches
 
@@ -149,7 +187,7 @@ class IndexBuilder:
             if branch_exc:
                 raise branch_exc[0]
         except BaseException as exc:  # incl. job-group cancellation
-            msg = f"{type(exc).__name__}: {exc}".splitlines()[0][:300]
+            msg = _error_message(exc)
             # mark every attempted-but-uncommitted stage aborted (with
             # branches, more than one can be in flight) — and ONLY those:
             # a stop landing on a resume-skipped (complete) stage must not
@@ -186,6 +224,23 @@ class IndexBuilder:
             "status_time": int(time.time() * 1000),
         })
 
+    @contextmanager
+    def status(self, stage: str):
+        """The lifecycle of a maintenance write (a delta apply, a blocks
+        refresh): INDEXING(stage) while it runs, then INDEXED — or FAILED
+        with the error when it raises."""
+        self.write_status("INDEXING", stage=stage)
+        try:
+            yield
+        except BaseException as exc:
+            try:
+                self.write_status("FAILED", stage=stage,
+                                  error=_error_message(exc))
+            except Exception:
+                pass  # a status-write failure must not mask the real one
+            raise
+        self.write_status("INDEXED")
+
     # ------------------------------------------------------------------
 
     def _stage_docs(self, pages: DataFrame):
@@ -198,8 +253,8 @@ class IndexBuilder:
         # orders doc_id assignment, so each bucket is a contiguous doc_id
         # range — parquet row-group stats stay tight for the serving
         # path's doc_id point reads) and incremental upserts rewrite only
-        # the files holding touched buckets via replace_buckets
-        # (streaming/incremental.py) instead of the whole table.
+        # the files holding touched buckets (streaming/incremental.py)
+        # instead of the whole table.
         n_b = self.cfg.doc_id_buckets
         offsets = compute_bucket_offsets(pages, n_b)
         extracted = extract_docs(pages)
@@ -209,60 +264,75 @@ class IndexBuilder:
         # and the narrow coalesce merges whole tasks down to one per core
         docs = attach_doc_ids(extracted, offsets, n_b,
                               keep_bucket_as="url_bucket")
-        # sort_by keeps each bucket doc_id-ascending (tight row-group
-        # stats for the serving path's point reads)
         docs = docs.select("doc_id", "url", "site", "title", "text",
                            "url_bucket")
-        return self.io.write_stage(
-            docs.coalesce(self.io.write_tasks(n_b)), "docs",
-            bucket_col="url_bucket", sort_by=["doc_id"],
-            extra={"doc_id_buckets": n_b},
-        )
+        return commit_table(self.io, "docs",
+                            docs.coalesce(self.io.write_tasks(n_b)),
+                            extra={"doc_id_buckets": n_b})
 
     def _stage_postings(self):
         cfg = self.cfg
-        postings = tokens_from_docs(self.io.read("docs")).withColumn(
-            "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
-        # one task (and file) per core, each bucket wholly in one task;
-        # sort_by lays each bucket out as a (term, doc_id)-ordered run for
-        # the exchange-free block encoder and parquet min/max skipping
-        return self.io.write_stage(
+        postings = postings_frame(self.io.read("docs"), cfg.term_buckets)
+        # one task (and file) per core, each bucket wholly in one task
+        return commit_table(
+            self.io, "postings",
             self.io.cluster(postings, "term_bucket", cfg.term_buckets),
-            "postings", bucket_col="term_bucket",
-            sort_by=["term", "doc_id"],
-            extra={"term_buckets": cfg.term_buckets},
-        )
+            extra={"term_buckets": cfg.term_buckets})
 
-    def _stage_terms(self):
+    def _postings_of(self, buckets: list[int] | None) -> DataFrame:
+        """Committed postings rows of the term buckets (every bucket when
+        None): the files holding them, less their other buckets' rows."""
+        if buckets is None:
+            return self.io.read("postings")
+        return in_buckets(self.io.read("postings", buckets), "term_bucket",
+                          buckets, self.cfg.term_buckets)
+
+    def _stage_terms(self, buckets: list[int] | None = None):
+        """Per-term df/cf — of every term (build), or of the terms files
+        holding `buckets` (an upsert's affected buckets, widened by
+        TableIO.rewrite_set). Only the whole-table write records the
+        corpus totals and head terms in the manifest; a partial rewrite
+        nulls them, so _stage_stats/_stage_blocks re-aggregate instead of
+        trusting stale values."""
         from pyspark.sql import Observation
 
-        postings = self.io.read("postings")
-        # corpus totals (Σcf, Σdf) ride the terms WRITE job as observed
-        # metrics — the stats stage then costs zero Spark jobs. Every job
-        # the driver schedules is width-independent wall (~100 ms + plan
-        # time each) that the north_rule's N→4N efficiency pays in full,
-        # so the build piggybacks scalars on actions it already runs.
-        obs = Observation("corpus_totals")
-        terms = (
-            postings.groupBy("term")
-            # each (doc,term) appears once => count(*) == document frequency
-            .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-            .observe(obs, F.sum("cf").alias("total_tokens"),
-                     F.sum("df").alias("n_postings"),
-                     # head terms (df above the salting threshold) ride the
-                     # same write job, sparing _stage_blocks its own collect
-                     # job; bounded — head terms are stopword-scale few.
-                     # collect_list drops the nulls when() leaves on
-                     # non-head rows.
-                     F.collect_list(
-                         F.when(F.col("df") > self.cfg.salt_df_threshold,
-                                F.col("term"))).alias("head_terms"))
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), self.cfg.term_buckets))
-        )
-        # one file per core, each bucket wholly in one file
-        res = self.io.write_stage(
-            self.io.cluster(terms, "term_bucket", self.cfg.term_buckets),
-            "terms", bucket_col="term_bucket")
+        cfg = self.cfg
+        if buckets is None:
+            tb, k = None, cfg.term_buckets
+        else:
+            tb, k = self.io.rewrite_set("terms", buckets)
+        terms = (self._postings_of(tb).groupBy("term")
+                 # each (doc,term) appears once => count(*) == df
+                 .agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
+        if tb is None:
+            # corpus totals (Σcf, Σdf) ride the terms WRITE job as
+            # observed metrics — the stats stage then costs zero Spark
+            # jobs. Every job the driver schedules is width-independent
+            # wall (~100 ms + plan time each) that the north_rule's N→4N
+            # efficiency pays in full, so the build piggybacks scalars on
+            # actions it already runs.
+            obs = Observation("corpus_totals")
+            terms = terms.observe(
+                obs, F.sum("cf").alias("total_tokens"),
+                F.sum("df").alias("n_postings"),
+                # head terms (df above the salting threshold) ride the
+                # same write job, sparing _stage_blocks its own collect
+                # job; bounded — head terms are stopword-scale few.
+                # collect_list drops the nulls when() leaves on non-head
+                # rows.
+                F.collect_list(
+                    F.when(F.col("df") > cfg.salt_df_threshold,
+                           F.col("term"))).alias("head_terms"))
+        terms = terms.withColumn(
+            "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
+        # one file per core (per replaced file), each bucket wholly in one
+        res = commit_table(
+            self.io, "terms", self.io.cluster(terms, "term_bucket", k), tb,
+            extra=None if tb is None else dict.fromkeys(
+                ("total_tokens", "n_postings", "head_terms",
+                 "head_df_threshold")))
+        if tb is not None:
+            return res
         # re-commit the manifest with the observed totals (atomic replace;
         # a crash in between leaves a valid manifest and _stage_stats
         # falls back to its own aggregation)
@@ -307,23 +377,20 @@ class IndexBuilder:
             "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
         }
         self.io.write_meta("stats", stats)
-        from ..sources.tableio import StageResult
         res = StageResult(stage="stats", status="complete", rows=n_docs, bytes=0,
                           wall_ms=int((time.monotonic() - t0) * 1000), extra=stats)
         self.io.write_manifest(res)
         return res
 
-    def _site_stats_frame(self, docs: DataFrame, postings: DataFrame,
-                          buckets: list[int] | None = None) -> DataFrame:
+    def _site_stats_frame(self, docs: DataFrame,
+                          postings: DataFrame) -> DataFrame:
         """Rows of the precomputed per-site statistics table:
           (site, term_bucket=b,  pages=0, lemmas=<distinct terms of b>)
           (site, term_bucket=-1, pages=<page count>, lemmas=0)
-        Distinct (site, term) pairs partition cleanly by term_bucket, so
-        incremental updates rewrite only the affected buckets' rows (plus
-        the -1 pages rows) — the same file-replacement discipline as
-        postings/terms. buckets=None computes every bucket (full build);
-        otherwise postings may hold other buckets too (a pinned read
-        keeps whole files) and only `buckets` are counted.
+        for the term buckets of `postings`. Distinct (site, term) pairs
+        partition cleanly by term_bucket, so incremental updates rewrite
+        only the affected buckets' rows (plus the -1 pages rows) — the
+        same file-replacement discipline as postings/terms.
 
         Plan shape: postings carry site_id = xxhash64(site) (an 8-byte
         int attached BEFORE the wide shuffle, functions/udfs.py — 64-bit
@@ -335,9 +402,6 @@ class IndexBuilder:
         on the tiny (site_id, bucket) frame."""
         site_names = (docs.select("site").distinct()
                       .withColumn("site_id", F.xxhash64("site")))
-        if buckets is not None:
-            postings = in_buckets(postings, "term_bucket", buckets,
-                                  self.cfg.term_buckets)
         lem_ids = (postings.select("site_id", "term_bucket", "term")
                    .groupBy("site_id", "term_bucket")
                    .agg(F.count_distinct("term").cast("long")
@@ -351,18 +415,24 @@ class IndexBuilder:
                       "pages", F.lit(0).cast("long").alias("lemmas")))
         return lem.unionByName(pg)
 
-    def _stage_site_stats(self):
+    def _stage_site_stats(self, buckets: list[int] | None = None):
         """A4/C5 precompute: per-site page + distinct-lemma counts, built
         once here so statistics() reads a tiny table instead of scanning
-        postings per call. The plan is join-free: postings carry site_id,
-        so this is one column-pruned (site_id, term) aggregation (see
+        postings per call — of every bucket (build), or of the files
+        holding `buckets` plus the -1 pages rows (an upsert: docs
+        changed). The plan is join-free: postings carry site_id, so this
+        is one column-pruned (site_id, term) aggregation (see
         _site_stats_frame)."""
+        if buckets is None:
+            # term buckets plus the -1 pages bucket
+            sb, k, lem = None, self.cfg.term_buckets + 1, None
+        else:
+            sb, k = self.io.rewrite_set("site_stats", [*buckets, -1])
+            lem = [b for b in sb if b >= 0]
         frame = self._site_stats_frame(self.io.read("docs"),
-                                       self.io.read("postings"))
-        # term buckets plus the -1 pages bucket
-        return self.io.write_stage(
-            self.io.cluster(frame, "term_bucket", self.cfg.term_buckets + 1),
-            "site_stats", bucket_col="term_bucket")
+                                       self._postings_of(lem))
+        return commit_table(self.io, "site_stats",
+                            self.io.cluster(frame, "term_bucket", k), sb)
 
     def refresh_blocks(self):
         """Blocks-only maintenance rebuild: re-encode every posting block
@@ -370,19 +440,17 @@ class IndexBuilder:
         mark the blocks manifest's avgdl stale (streaming/incremental.py
         sets avgdl=None) because untouched buckets' max_tfpart bakes the
         OLD avgdl — WAND then falls back to the looser avgdl-free max_tf
-        bound. Before this op the only way to re-tighten was a full
-        rebuild; this costs O(one postings scan), touches neither docs nor
-        postings, re-shards terms whose df crossed the salting threshold
-        since the last full build, and commits via the crash-safe
-        file-replacement protocol (old blocks snapshot readable until the
-        manifest swap — safe against a live serving reader, unlike
-        write_stage's destructive overwrite).
+        bound. This re-tightens it without a full rebuild: the build's own
+        blocks stage, O(one postings scan), touching neither docs nor
+        postings and re-sharding terms whose df crossed the salting
+        threshold since the last full build. Like every table write it
+        commits by file replacement, so the old blocks snapshot stays
+        readable until the manifest swap (safe against a live serving
+        reader).
 
         Refuses while a staged delta is pending: postings could be at
         either snapshot of an in-flight commit, and encoding them would
         bake that ambiguity into committed blocks."""
-        from ..config import committer_v2
-        from ..operators.postings import large_arrow_batches
         from ..streaming.incremental import has_pending_delta
 
         if has_pending_delta(self.io):
@@ -395,33 +463,8 @@ class IndexBuilder:
                     f"refresh_blocks needs a complete '{dep}' stage — "
                     "run/resume the build first")
 
-        cfg = self.cfg
-        self.write_status("INDEXING", stage="blocks_refresh")
-        try:
-            with committer_v2(self.spark):
-                blocks, head, avgdl = self._blocks_frame(
-                    self.io.read("postings"))
-                with large_arrow_batches(self.spark):
-                    res = self.io.replace_buckets(
-                        blocks, "blocks", "term_bucket",
-                        list(range(cfg.term_buckets)),
-                        sort_by=["term", "shard", "doc_min"],
-                        extra_update={
-                            "head_terms": head,
-                            "block_size": cfg.block_size,
-                            "salt_shard_docs": cfg.salt_shard_docs,
-                            "avgdl": avgdl,
-                        })
-        except BaseException as exc:
-            msg = f"{type(exc).__name__}: {exc}".splitlines()[0][:300]
-            try:
-                self.write_status("FAILED", stage="blocks_refresh",
-                                  error=msg)
-            except Exception:
-                pass
-            raise
-        self.write_status("INDEXED")
-        return res
+        with self.status("blocks_refresh"), committer_v2(self.spark):
+            return self._stage_blocks()
 
     def _blocks_frame(self, postings: DataFrame
                      ) -> tuple[DataFrame, list[str], float]:
@@ -464,24 +507,26 @@ class IndexBuilder:
             "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
         return blocks, head, avgdl
 
-    def _stage_blocks(self):
+    def _stage_blocks(self, buckets: list[int] | None = None):
         """Compressed posting blocks (operators/postings.py): delta+varint,
-        block-max metadata, range-sharded head terms. Runs after stats so
-        avgdl is available for the idf-independent block-max factor."""
+        block-max metadata, range-sharded head terms — of every bucket
+        (build, refresh_blocks), or of the blocks files holding `buckets`
+        (an upsert). Runs after stats so avgdl is available for the
+        idf-independent block-max factor."""
         from ..operators.postings import large_arrow_batches
 
         cfg = self.cfg
-        blocks, head, avgdl = self._blocks_frame(self.io.read("postings"))
+        bb = None if buckets is None else \
+            self.io.rewrite_set("blocks", buckets)[0]
+        blocks, head, avgdl = self._blocks_frame(self._postings_of(bb))
+        # avgdl is recorded because max_tfpart bakes it in: WAND's
+        # block-max bounds are only tight while the corpus avgdl equals
+        # this value. A partial rewrite marks it stale (avgdl=None):
+        # untouched buckets bake the OLD avgdl, so WAND falls back to the
+        # avgdl-free max_tf bound until refresh_blocks or a full build
+        extra = {"head_terms": head, "avgdl": avgdl if bb is None else None}
+        if bb is None:
+            extra.update(block_size=cfg.block_size,
+                         salt_shard_docs=cfg.salt_shard_docs)
         with large_arrow_batches(self.spark):
-            return self.io.write_stage(
-                blocks, "blocks", bucket_col="term_bucket",
-                sort_by=["term", "shard", "doc_min"],
-                # avgdl is recorded because max_tfpart bakes it in: WAND's
-                # block-max bounds are only tight while the corpus avgdl
-                # equals this value — incremental deltas mark it stale
-                # (avgdl=None) and WAND falls back to the avgdl-free
-                # max_tf bound
-                extra={"head_terms": head, "block_size": cfg.block_size,
-                       "salt_shard_docs": cfg.salt_shard_docs,
-                       "avgdl": avgdl},
-            )
+            return commit_table(self.io, "blocks", blocks, bb, extra=extra)

@@ -13,6 +13,11 @@ each holding whole buckets sorted (bucket, <the table's sort keys>) and
 storing the bucket as a plain column. The bucket count sets the logical
 layout (doc ids, pruning granularity); the core count sets the file count.
 
+Every table write — the build's, an upsert's, a blocks refresh — commits
+through one method, replace_buckets: the whole table, or only the files
+holding some buckets, replaced by the crash-safe side-dir → move →
+manifest-swap protocol described there.
+
 Manifest model (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics"): one JSON per completed stage under <work>/_manifest/:
 
@@ -46,6 +51,7 @@ import os
 import shutil
 import threading
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -99,14 +105,18 @@ def in_buckets(df: DataFrame, col: str, values: list,
     return df.filter(F.col(col).isin(values))
 
 
+def _crc(path: str) -> str:
+    """The hidden `.<name>.crc` checksum sidecar the Hadoop local
+    filesystem writes beside a data file."""
+    return os.path.join(os.path.dirname(path),
+                        f".{os.path.basename(path)}.crc")
+
+
 def _remove_data_file(path: str) -> None:
-    """Delete a data file and the hidden `.<name>.crc` checksum sidecar
-    the Hadoop local filesystem writes beside it."""
+    """Delete a data file and its checksum sidecar."""
     os.remove(path)
-    crc = os.path.join(os.path.dirname(path),
-                       f".{os.path.basename(path)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    if os.path.exists(_crc(path)):
+        os.remove(_crc(path))
 
 
 class TableIO:
@@ -151,12 +161,8 @@ class TableIO:
     def write_manifest(self, result: StageResult) -> None:
         """Atomic: the manifest IS the commit point (snapshot swap), so it
         must never be observable half-written."""
-        p = self._manifest_path(result.stage)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({**result.to_json(), "format_version": FORMAT_VERSION},
-                      f, ensure_ascii=False, indent=1)
-        os.replace(tmp, p)
+        _write_json(self._manifest_path(result.stage),
+                    {**result.to_json(), "format_version": FORMAT_VERSION})
 
     def invalidate_from(self, stages: list[str], first_dirty: str) -> None:
         """Drop manifests (and data) for first_dirty and everything after."""
@@ -188,22 +194,20 @@ class TableIO:
         return df.repartition(self.write_tasks(n_values), col)
 
     @staticmethod
-    def _bucketed(df: DataFrame, bucket_col: str | None,
+    def _bucketed(df: DataFrame, bucket_col: str,
                   sort_by: list[str] | None) -> DataFrame:
         """The one write layout of a bucketed table: the bucket column
         last (the column order readers see), each task's rows sorted by
         (bucket, *sort_by) — so every file holds its buckets as
         contiguous runs in the table's data order, and parquet row-group
         stats on the bucket column prune within a file."""
-        if bucket_col is None:
-            return df.sortWithinPartitions(*sort_by) if sort_by else df
         df = df.select(*[c for c in df.columns if c != bucket_col],
                        bucket_col)
         return df.sortWithinPartitions(bucket_col, *(sort_by or []))
 
     def _file_entries(self, paths: list[str], dests: list[str],
-                      bucket_col: str | None) -> list[dict]:
-        """Manifest entries {path, rows, bytes[, buckets]} of the parquet
+                      bucket_col: str) -> list[dict]:
+        """Manifest entries {path, rows, bytes, buckets} of the parquet
         files `paths`, recorded under their final locations `dests`. Row
         counts come from the footers and the bucket set from the file's
         bucket column. The reads are I/O-bound and independent — a thread
@@ -216,14 +220,12 @@ class TableIO:
 
         def _stat(fp, dest):
             f = pq.ParquetFile(fp)
-            entry = {"path": os.path.relpath(dest, self.work_dir),
-                     "rows": f.metadata.num_rows,
-                     "bytes": os.path.getsize(fp)}
-            if bucket_col is not None:
-                col = f.read(columns=[bucket_col]).column(0)
-                entry["buckets"] = sorted(
-                    v for v in pc.unique(col).to_pylist() if v is not None)
-            return entry
+            col = f.read(columns=[bucket_col]).column(0)
+            return {"path": os.path.relpath(dest, self.work_dir),
+                    "rows": f.metadata.num_rows,
+                    "bytes": os.path.getsize(fp),
+                    "buckets": sorted(v for v in pc.unique(col).to_pylist()
+                                      if v is not None)}
 
         with ThreadPoolExecutor(max_workers=16) as ex:
             return list(ex.map(_stat, paths, dests))
@@ -235,43 +237,10 @@ class TableIO:
         return sorted(os.path.join(root, fn) for root, _, fs in os.walk(d)
                       for fn in fs if fn.endswith(".parquet"))
 
-    def write_stage(self, df: DataFrame, stage: str, table: str | None = None,
-                    bucket_col: str | None = None,
-                    extra: dict | None = None,
-                    sort_by: list[str] | None = None) -> StageResult:
-        """Write df as the stage output + manifest with per-file lineage:
-        one file per task of df (callers size the tasks with cluster()).
-        bucket_col: the table's bucket column — each file's bucket set is
-        recorded for pruned reads. sort_by: the data ordering within each
-        bucket (_bucketed)."""
-        table = table or stage
-        target = self.path(table)
-        t0 = time.monotonic()
-        df = self._bucketed(df, bucket_col, sort_by)
-        df.write.mode("overwrite").parquet(target)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-
-        paths = self._parquet_files(target)
-        files = []
-        for fp, entry in zip(paths, self._file_entries(paths, paths,
-                                                       bucket_col)):
-            if entry["rows"]:
-                files.append(entry)
-            else:  # task 0 writes a file even when it got no rows
-                _remove_data_file(fp)
-        result = StageResult(stage=stage, status="complete",
-                             rows=sum(f["rows"] for f in files),
-                             bytes=sum(f["bytes"] for f in files),
-                             wall_ms=wall_ms, files=files,
-                             extra=extra or {},
-                             schema=df.schema.jsonValue())
-        self.write_manifest(result)
-        return result
-
     def _pinned(self, table: str, m: dict, buckets) -> list[str]:
         """Absolute paths of the manifest's files whose bucket set meets
-        buckets (every file when buckets is None; a file without a bucket
-        set is always kept), after the strictness checks read() documents."""
+        buckets (every file when buckets is None), after the strictness
+        checks read() documents."""
         if m.get("status") != "complete":
             raise RuntimeError(
                 f"table '{table}' manifest status is "
@@ -281,8 +250,7 @@ class TableIO:
         want = None if buckets is None else set(buckets)
         files = [os.path.join(self.work_dir, f["path"])
                  for f in m.get("files", [])
-                 if want is None or "buckets" not in f
-                 or not want.isdisjoint(f["buckets"])]
+                 if want is None or not want.isdisjoint(f["buckets"])]
         missing = [p for p in files if not os.path.exists(p)]
         if missing:
             raise RuntimeError(
@@ -356,8 +324,7 @@ class TableIO:
         of the buckets in R and replace_buckets(..., R) drops exactly
         those k files."""
         files = [set(f["buckets"])
-                 for f in (self.read_manifest(table) or {}).get("files", [])
-                 if "buckets" in f]
+                 for f in (self.read_manifest(table) or {}).get("files", [])]
         want = set(buckets)
         while True:
             hit = [b for b in files if not want.isdisjoint(b)]
@@ -415,8 +382,6 @@ class TableIO:
         created at the original path. The (dev, ino) re-stat before the
         rename keeps the remaining TOCTOU at syscall width (and a false
         reap additionally requires PID reuse)."""
-        import uuid
-
         try:
             st = os.stat(lock)
             with open(lock) as f:
@@ -492,18 +457,27 @@ class TableIO:
                 removed += 1
         return removed
 
-    def replace_buckets(self, df: DataFrame, stage: str, bucket_col: str,
-                        buckets: list, table: str | None = None,
-                        extra_update: dict | None = None,
-                        sort_by: list[str] | None = None) -> StageResult:
-        """Replace the live files holding any of `buckets` with df's files
-        and merge the stage manifest's lineage — the parquet-dir emulation
-        of an Iceberg file-level overwrite (MERGE rewriting the touched
-        data files). df must hold exactly the replacement rows for
-        `buckets`, and `buckets` must cover every bucket of the files it
-        replaces (rewrite_set gives that set): a replaced file's other
-        buckets would otherwise be lost, so that case raises before
-        anything moves. A bucket with no rows in df is dropped.
+    def replace_buckets(self, df: DataFrame, table: str, bucket_col: str,
+                        buckets: list | None = None,
+                        sort_by: list[str] | None = None,
+                        extra: dict | None = None) -> StageResult:
+        """Commit df as the table's new files — the one write path of every
+        table, and the parquet-dir emulation of an Iceberg file-level
+        overwrite. df's write tasks become the files (callers size them
+        with cluster()); each is laid out by _bucketed(bucket_col,
+        sort_by) and its bucket set recorded in the manifest.
+
+        buckets=None replaces the whole table: every live file goes and
+        the fresh manifest holds `extra` and this write's wall_ms.
+        Otherwise only the live files holding any of `buckets` are
+        replaced (MERGE rewriting the touched data files): df must hold
+        exactly the replacement rows for `buckets`, and `buckets` must
+        cover every bucket of the files it replaces (rewrite_set gives
+        that set) — a replaced file's other buckets, or a df row outside
+        `buckets`, would otherwise be lost or duplicated, so either case
+        raises before anything moves. `extra` is merged into the old
+        manifest's and wall_ms added to its running total. A bucket with
+        no rows in df is dropped.
 
         Crash-safe commit protocol (snapshot emulation):
           1. write the replacement data to a side directory (a df whose
@@ -518,7 +492,6 @@ class TableIO:
           5. vacuum the superseded files.
         A crash at any step leaves a readable old snapshot plus orphan
         files the next commit's vacuum removes."""
-        table = table or stage
         tmp = os.path.join(self.work_dir, f"_tmp_{table}")
         shutil.rmtree(tmp, ignore_errors=True)
         t0 = time.monotonic()
@@ -528,22 +501,20 @@ class TableIO:
         df.write.mode("overwrite").parquet(tmp)
         self._acquire_commit_lock(blocking=True)
         try:
-            return self._commit_files(df, stage, bucket_col, buckets, table,
-                                      extra_update, tmp, t0)
+            return self._commit_files(df, table, bucket_col, buckets, extra,
+                                      tmp, t0)
         finally:
             self._release_commit_lock()
 
-    def _commit_files(self, df, stage, bucket_col, buckets, table,
-                      extra_update, tmp, t0) -> StageResult:
-        import uuid
-
+    def _commit_files(self, df, table, bucket_col, buckets, extra, tmp,
+                      t0) -> StageResult:
         self._vacuum_locked(table)
-        old = self.read_manifest(stage) or {
-            "stage": stage, "files": [], "extra": {}, "wall_ms": 0}
-        want = set(buckets)
+        # a whole-table write keeps nothing of the old snapshot
+        old = {} if buckets is None else (self.read_manifest(table) or {})
+        want = set(buckets or ())
         keep = []
         for f in old.get("files", []):
-            held = set(f.get("buckets", ()))
+            held = set(f["buckets"])
             if want.isdisjoint(held):
                 keep.append(f)
             elif not held <= want:
@@ -560,7 +531,7 @@ class TableIO:
                for fp in src]
         entries = self._file_entries(src, dst, bucket_col)
         stray = set().union(*(e["buckets"] for e in entries)) - want
-        if stray:
+        if buckets is not None and stray:
             raise RuntimeError(
                 f"table '{table}': replacement rows in buckets "
                 f"{sorted(stray)} outside the replaced set")
@@ -569,18 +540,19 @@ class TableIO:
             if entry["rows"]:  # an empty task's file holds no bucket
                 self._touch_commit_lock()  # heartbeat: long moves
                 shutil.move(fp, out)
+                if os.path.exists(_crc(fp)):  # the checksum goes along
+                    shutil.move(_crc(fp), _crc(out))
                 fresh.append(entry)
         shutil.rmtree(tmp, ignore_errors=True)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         files = keep + fresh
-        extra = {**old.get("extra", {}), **(extra_update or {})}
         result = StageResult(
-            stage=stage, status="complete",
+            stage=table, status="complete",
             rows=sum(f["rows"] for f in files),
             bytes=sum(f["bytes"] for f in files),
             wall_ms=old.get("wall_ms", 0) + wall_ms,
-            files=files, extra=extra,
+            files=files, extra={**old.get("extra", {}), **(extra or {})},
             schema=df.schema.jsonValue())
         self.write_manifest(result)  # atomic commit point
         self._vacuum_locked(table)
@@ -589,12 +561,24 @@ class TableIO:
     # --- scalar metadata (corpus stats etc.) ----------------------------
 
     def write_meta(self, name: str, payload: dict) -> None:
-        with open(os.path.join(self.work_dir, f"{name}.json"), "w") as f:
-            json.dump(payload, f, ensure_ascii=False, indent=1)
+        """Atomic, like write_manifest: a concurrent reader (statistics()
+        or stop_indexing() during an async build) sees the old record or
+        the new one, never a truncated file."""
+        _write_json(os.path.join(self.work_dir, f"{name}.json"), payload)
 
     def read_meta(self, name: str) -> dict:
         with open(os.path.join(self.work_dir, f"{name}.json")) as f:
             return json.load(f)
+
+
+def _write_json(path: str, payload: dict) -> None:
+    """Write payload to path through a tmp file and os.replace, so path
+    always holds a whole document. The tmp name is unique per thread:
+    two writers of one path never share a half-written tmp file."""
+    tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
+    with open(tmp, "w") as f:
+        json.dump(payload, f, ensure_ascii=False, indent=1)
+    os.replace(tmp, path)
 
 
 def _check_version(manifest: dict, work_dir: str, fn: str) -> None:

@@ -16,12 +16,15 @@ scale; here maintenance is declarative AND bucket-scoped:
      affected term_buckets = their hash buckets — a bounded set.
   3. postings/terms/site_stats/blocks rewrite ONLY the files holding an
      affected term_bucket, and docs ONLY the files holding an affected
-     url_bucket, via TableIO.replace_buckets (the Iceberg file-level
-     overwrite / MERGE seam). The file is the smallest unit rewritten:
-     TableIO.rewrite_set widens the affected buckets to every bucket of
-     those files, the scans pin exactly those files through the manifest
-     (TableIO.read(table, buckets)), and the new content of the set =
-     old rows minus touched doc_ids plus the delta. One changed page
+     url_bucket, with the build's own writers: its stage functions given
+     the affected buckets, and plans/build.py::commit_table, i.e.
+     TableIO.replace_buckets (the Iceberg file-level overwrite / MERGE
+     seam) — the commit the build makes for the whole table. The file is
+     the smallest unit rewritten: TableIO.rewrite_set widens the
+     affected buckets to every bucket of those files, the scans pin
+     exactly those files through the manifest (TableIO.read(table,
+     buckets)), and the new content of the set = old rows minus touched
+     doc_ids plus the delta. One changed page
      costs O(the files of its buckets), not O(corpus). Each rewrite runs
      one write task per file it replaces (TableIO.cluster), so the file
      count never grows past min(buckets, cores).
@@ -63,11 +66,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..config import EngineConfig, aqe_off
+from ..config import EngineConfig, aqe_off, committer_v2
 from ..functions.udfs import extract_docs, tokens_from_docs, url_bucket_col
 from ..operators.doc_ids import assign_doc_ids
-from ..plans.build import IndexBuilder, term_bucket_col
-from ..sources.tableio import TableIO, in_buckets
+from ..plans.build import (IndexBuilder, commit_table, postings_frame,
+                           term_bucket_col)
+from ..sources.tableio import TableIO
 
 DOC_COLS = ["doc_id", "url", "site", "title", "text"]
 DELTA_DIR = "_delta"
@@ -194,19 +198,10 @@ def apply_staged_delta(spark, io: TableIO, cfg: EngineConfig) -> dict:
     changed = staged("changed") if "changed" in marker["schemas"] else None
 
     builder = IndexBuilder(spark, io, cfg)
-    builder.write_status("INDEXING", stage="delta")
-    try:
-        from ..config import committer_v2
-
-        # same engine-owned write-phase scoping as IndexBuilder.build
-        with committer_v2(spark):
-            report = _apply_delta(spark, io, cfg, builder,
-                                  delta_docs=changed, old_touched=touched)
-    except BaseException as exc:
-        msg = f"{type(exc).__name__}: {exc}".splitlines()[0][:300]
-        builder.write_status("FAILED", stage="delta", error=msg)
-        raise
-    builder.write_status("INDEXED")
+    # same engine-owned write-phase scoping as IndexBuilder.build
+    with builder.status("delta"), committer_v2(spark):
+        report = _apply_delta(spark, io, cfg, builder,
+                              delta_docs=changed, old_touched=touched)
     shutil.rmtree(_delta_path(io), ignore_errors=True)
     return report
 
@@ -227,32 +222,20 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
     report: dict[str, dict] = {}
 
     # --- affected term buckets (old lemmas ∪ new lemmas of touched docs)
+    affected = tokens_from_docs(old_touched).select("term")
+    touched_ids = old_touched.select("doc_id")
+    touched_urls = old_touched.select("url")
     delta_tokens = None
-    term_frames = [tokens_from_docs(old_touched).select("term")]
     if delta_docs is not None:
-        delta_tokens = tokens_from_docs(delta_docs).withColumn(
-            "term_bucket", term_bucket_col(F.col("term"), cfg.term_buckets))
-        term_frames.append(delta_tokens.select("term"))
-    affected = term_frames[0]
-    for fr in term_frames[1:]:
-        affected = affected.unionByName(fr)
+        delta_tokens = postings_frame(delta_docs, cfg.term_buckets)
+        affected = affected.unionByName(delta_tokens.select("term"))
+        touched_ids = touched_ids.unionByName(delta_docs.select("doc_id"))
+        touched_urls = touched_urls.unionByName(delta_docs.select("url"))
     buckets = sorted(
         r["b"] for r in affected
         .select(term_bucket_col(F.col("term"), cfg.term_buckets).alias("b"))
         .distinct().collect())
     report["affected_buckets"] = buckets
-
-    touched_ids = old_touched.select("doc_id")
-    touched_urls = old_touched.select("url")
-    if delta_docs is not None:
-        touched_ids = touched_ids.unionByName(delta_docs.select("doc_id"))
-        touched_urls = touched_urls.unionByName(delta_docs.select("url"))
-
-    def postings_of(bs):
-        """Committed postings rows of the term buckets bs: the files
-        holding them, less their other buckets' rows."""
-        return in_buckets(io.read("postings", bs), "term_bucket", bs,
-                          cfg.term_buckets)
 
     if buckets:
         # --- postings: the rewrite set's rows minus touched docs, plus the
@@ -263,31 +246,11 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
                                             "left_anti")
         if delta_tokens is not None:
             newp = newp.unionByName(delta_tokens)
-        # sort_by keeps every bucket a (term, doc_id)-ordered run — the
-        # table's file-order contract for the exchange-free blocks encoder
-        report["postings"] = io.replace_buckets(
-            io.cluster(newp, "term_bucket", k),
-            "postings", "term_bucket", pb,
-            sort_by=["term", "doc_id"]).to_json()
-
+        report["postings"] = commit_table(
+            io, "postings", io.cluster(newp, "term_bucket", k),
+            pb).to_json()
         # --- terms: recompute df/cf for the terms rewrite set only
-        tb, k = io.rewrite_set("terms", buckets)
-        newt = (postings_of(tb)
-                .groupBy("term")
-                .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-                .withColumn("term_bucket",
-                            term_bucket_col(F.col("term"), cfg.term_buckets)))
-        report["terms"] = io.replace_buckets(
-            io.cluster(newt, "term_bucket", k),
-            "terms", "term_bucket", tb,
-            # the full build's observed corpus totals (Σcf/Σdf on the terms
-            # write job) and head-term list are stale once any bucket is
-            # rewritten — null them so _stage_stats/_stage_blocks
-            # re-aggregate instead of trusting them
-            extra_update={"total_tokens": None,
-                          "n_postings": None,
-                          "head_terms": None,
-                          "head_df_threshold": None}).to_json()
+        report["terms"] = builder._stage_terms(buckets).to_json()
 
     # --- docs: rewrite only the files of the touched url_buckets (atomic
     # commit — the old docs snapshot stays readable until the manifest
@@ -299,37 +262,18 @@ def _apply_delta(spark, io: TableIO, cfg: EngineConfig,
     report["stats"] = builder._stage_stats().to_json()
 
     # site_stats: lemma rows of the rewrite set's term buckets + the -1
-    # pages rows (docs changed) — same file-replacement discipline; an
-    # index whose site_stats stage never completed gets a full rebuild of
-    # the tiny table
-    if io.stage_complete("site_stats"):
-        sb, k = io.rewrite_set("site_stats", [*buckets, -1])
-        lem = [b for b in sb if b >= 0]
-        ss = builder._site_stats_frame(io.read("docs"),
-                                       io.read("postings", lem), lem)
-        report["site_stats"] = io.replace_buckets(
-            io.cluster(ss, "term_bucket", k),
-            "site_stats", "term_bucket", sb).to_json()
-    else:
-        report["site_stats"] = builder._stage_site_stats().to_json()
+    # pages rows (docs changed); an index whose site_stats stage never
+    # completed gets a full rebuild of the tiny table
+    report["site_stats"] = builder._stage_site_stats(
+        buckets if io.stage_complete("site_stats") else None).to_json()
 
     if buckets:
-        # --- blocks: re-encode the rewrite set's buckets; mark block-max
-        # bounds stale (max_tfpart of untouched buckets bakes the OLD
-        # avgdl — WAND switches to the avgdl-free max_tf bound).
-        # Postings files keep every bucket a (term, doc_id)-ordered run,
-        # so the exchange-free encoder applies here exactly as in the
-        # full build's _stage_blocks — the set's postings are scanned
-        # straight into the encoder, never shuffled.
-        from ..operators.postings import large_arrow_batches
-
-        bb, _ = io.rewrite_set("blocks", buckets)
-        newb, head, _ = builder._blocks_frame(postings_of(bb))
-        with large_arrow_batches(spark):
-            report["blocks"] = io.replace_buckets(
-                newb, "blocks", "term_bucket", bb,
-                sort_by=["term", "shard", "doc_min"],
-                extra_update={"head_terms": head, "avgdl": None}).to_json()
+        # --- blocks: re-encode the rewrite set's buckets and mark the
+        # block-max bounds stale. Postings files keep every bucket a
+        # (term, doc_id)-ordered run, so the exchange-free encoder applies
+        # here exactly as in the full build — the set's postings are
+        # scanned straight into it, never shuffled.
+        report["blocks"] = builder._stage_blocks(buckets).to_json()
 
     return report
 
@@ -338,33 +282,25 @@ def _commit_docs(spark, io: TableIO, cfg: EngineConfig,
                  delta_docs: DataFrame | None,
                  touched_urls: DataFrame) -> dict:
     """File-scoped docs commit: replacement rows for the rewrite set of
-    the affected url_buckets = its current rows minus touched urls plus
-    the staged changed rows — idempotent under replay. cfg carries the
-    index's own doc_id_buckets (resolve_layout)."""
+    the affected url_buckets = its current rows minus touched urls (the
+    old and the changed docs') plus the staged changed rows — idempotent
+    under replay. cfg carries the index's own doc_id_buckets
+    (resolve_layout)."""
     bucket_of_url = url_bucket_col(F.col("url"), cfg.doc_id_buckets)
-    url_frames = [touched_urls]
-    if delta_docs is not None:
-        url_frames.append(delta_docs.select("url"))
-    all_urls = url_frames[0]
-    for fr in url_frames[1:]:
-        all_urls = all_urls.unionByName(fr)
     doc_buckets = sorted(
         r["b"] for r in
-        all_urls.select(bucket_of_url.alias("b")).distinct().collect())
+        touched_urls.select(bucket_of_url.alias("b")).distinct().collect())
     if not doc_buckets:
         return (io.read_manifest("docs") or {})
 
     db, k = io.rewrite_set("docs", doc_buckets)
     repl = (io.read("docs", db)
-            .join(all_urls.distinct(), "url", "left_anti")
+            .join(touched_urls.distinct(), "url", "left_anti")
             .select(*DOC_COLS, "url_bucket"))
     if delta_docs is not None:
         # every delta url is in doc_buckets by construction
         repl = repl.unionByName(
             delta_docs.select(*DOC_COLS)
             .withColumn("url_bucket", bucket_of_url))
-    # sort_by keeps every rewritten bucket doc_id-ascending for the
-    # serving path's point reads, same discipline as the full build
-    return io.replace_buckets(
-        io.cluster(repl, "url_bucket", k), "docs", "url_bucket", db,
-        sort_by=["doc_id"]).to_json()
+    return commit_table(io, "docs", io.cluster(repl, "url_bucket", k),
+                        db).to_json()

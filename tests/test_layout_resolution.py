@@ -312,7 +312,7 @@ def test_replace_buckets_crash_safety(spark, tmp_path):
         F.col("id").alias("v"),
         ((F.col("id") / 25).cast("int") * 2 + F.col("id") % 2)
         .cast("int").alias("pk"))
-    io.write_stage(df, "t", bucket_col="pk")
+    io.replace_buckets(df, "t", "pk")
     files = io.read_manifest("t")["files"]
     assert [f["buckets"] for f in files] == [[0, 1], [2, 3], [4, 5], [6, 7]]
     assert io.read("t").count() == 100
@@ -368,17 +368,16 @@ def _job_group(sc, group: str):
 
 @contextmanager
 def _stage_writes_grouped(sc, op: str):
-    """Run every stage write (TableIO.write_stage / replace_buckets) in
-    its own Spark job group "<op>:<stage>"."""
-    patched = {}
-    for name in ("write_stage", "replace_buckets"):
-        def grouped(self, df, stage, *a, _fn=getattr(TableIO, name), **kw):
-            with _job_group(sc, f"{op}:{stage}"):
-                return _fn(self, df, stage, *a, **kw)
-        patched[name] = grouped
+    """Run every stage write (TableIO.replace_buckets) in its own Spark
+    job group "<op>:<stage>"."""
+    real = TableIO.replace_buckets
+
+    def grouped(self, df, stage, *a, **kw):
+        with _job_group(sc, f"{op}:{stage}"):
+            return real(self, df, stage, *a, **kw)
+
     with pytest.MonkeyPatch.context() as mp:
-        for name, fn in patched.items():
-            mp.setattr(TableIO, name, fn)
+        mp.setattr(TableIO, "replace_buckets", grouped)
         yield
 
 
@@ -638,7 +637,7 @@ def _wide_table(spark, work) -> TableIO:
     io = TableIO(spark, work)
     df = spark.range(0, 400, numPartitions=40).select(
         F.col("id").alias("v"), (F.col("id") / 10).cast("int").alias("pk"))
-    io.write_stage(df, "t", bucket_col="pk")
+    io.replace_buckets(df, "t", "pk")
     assert len(io.read_manifest("t")["files"]) == 40
     return io
 

@@ -1,5 +1,6 @@
-"""Unit tests (no SparkSession) for the commit-lock takeover policy and
-the query kernel's posting-uniqueness verify/repair path.
+"""Unit tests (no SparkSession) for the commit-lock takeover policy, the
+atomic metadata write and the query kernel's posting-uniqueness
+verify/repair path.
 
 Lock policy under test (sources/tableio.py:_takeover_dead_lock):
   - a holder whose PID is verifiably ALIVE is never reaped, however old
@@ -78,6 +79,58 @@ def test_heartbeat_keeps_inconclusive_holder_fresh(tmp_path):
     lock = _write_lock(tmp_path, "host-b:1234", age_sec=1800)
     os.utime(lock)  # what _touch_commit_lock does mid-commit
     assert TableIO._takeover_dead_lock(lock) is False
+
+
+# --------------------------------------------------------------------------
+# metadata writes
+# --------------------------------------------------------------------------
+
+def test_meta_reader_never_sees_a_partial_write(tmp_path):
+    """write_meta replaces the file atomically: a reader polling
+    build_status while other threads rewrite it (statistics() or
+    stop_indexing() during an async build) always parses a whole
+    record, never a truncated one — also with more writers than cores."""
+    import json
+    import sys
+    import threading
+
+    io = TableIO(None, str(tmp_path))
+    io.write_meta("build_status", {"status": "INDEXING", "stage": None})
+    stop = threading.Event()
+
+    def writer(w):
+        i = 0
+        while not stop.is_set():
+            io.write_meta("build_status", {"status": "INDEXING",
+                                           "stage": f"stage-{w}-{i}",
+                                           "error": None})
+            i += 1
+
+    writers = [threading.Thread(target=writer, args=(w,), daemon=True)
+               for w in range((os.cpu_count() or 1) + 2)]
+    old_switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    reads = torn = 0
+    try:
+        for th in writers:
+            th.start()
+        deadline = time.monotonic() + 1.0
+        while time.monotonic() < deadline:
+            try:
+                assert io.read_meta("build_status")["status"] == "INDEXING"
+            except json.JSONDecodeError:
+                torn += 1
+            reads += 1
+    finally:
+        stop.set()
+        for th in writers:
+            th.join(timeout=10)
+        sys.setswitchinterval(old_switch)
+    assert not any(th.is_alive() for th in writers)
+    assert reads > 100
+    assert torn == 0, f"{torn} of {reads} reads saw a partial file"
+    # no tmp file is left beside the record
+    assert [n for n in os.listdir(tmp_path) if ".tmp" in n] == []
 
 
 # --------------------------------------------------------------------------

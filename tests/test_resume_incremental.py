@@ -68,6 +68,73 @@ def test_resume_noop_when_all_complete(small_engine, spark):
                ("docs", "postings", "terms", "stats", "blocks"))
 
 
+def test_refresh_blocks_on_fresh_build_equals_build(small_engine):
+    """refresh_blocks runs the build's own blocks stage: on an unchanged
+    fresh build it commits the build's blocks rows and the same blocks
+    manifest extra (avgdl, head terms, block layout)."""
+    io = small_engine.io
+    rows = sorted(tuple(r) for r in io.read("blocks").collect())
+    extra = io.read_manifest("blocks")["extra"]
+    assert extra["avgdl"] is not None
+
+    rep = small_engine.refresh_blocks()
+    assert rep["status"] == "complete"
+    assert io.read_manifest("blocks")["extra"] == extra
+    assert sorted(tuple(r) for r in io.read("blocks").collect()) == rows
+
+
+def test_resumed_build_leaves_only_manifest_files(spark, tmp_path,
+                                                  monkeypatch):
+    """A build stopped mid-commit leaves debris: a terms generation moved
+    into its table but never committed, and a site_stats side directory
+    never moved. The resumed build commits through the same file
+    replacement, so afterwards every table directory holds exactly its
+    manifest's files and no `_tmp_<table>` side directory is left."""
+    from searchengine_spark.plans.build import TABLES, IndexBuilder
+    from searchengine_spark.sources.corpus import gen_pages_spark
+    from searchengine_spark.sources.tableio import TableIO
+
+    io = TableIO(spark, str(tmp_path / "stopped"))
+    real_commit = TableIO._commit_files
+    real_manifest = TableIO.write_manifest
+
+    def stop_before_move(self, df, table, *a):
+        if table == "site_stats":
+            raise InterruptedError("build stopped by user")
+        return real_commit(self, df, table, *a)
+
+    def stop_before_swap(self, result):
+        if result.stage == "terms" and result.status == "complete":
+            raise InterruptedError("build stopped by user")
+        return real_manifest(self, result)
+
+    def listed(t):
+        return {f["path"]
+                for f in (io.read_manifest(t) or {}).get("files", [])}
+
+    def on_disk(t):
+        return {os.path.relpath(fp, io.work_dir)
+                for fp in io._parquet_files(io.path(t))}
+
+    def side_dirs():
+        return [d for d in os.listdir(io.work_dir) if d.startswith("_tmp_")]
+
+    pages = gen_pages_spark(spark, 40, partitions=2)
+    monkeypatch.setattr(TableIO, "_commit_files", stop_before_move)
+    monkeypatch.setattr(TableIO, "write_manifest", stop_before_swap)
+    with pytest.raises(InterruptedError):
+        IndexBuilder(spark, io).build(pages)
+    monkeypatch.undo()
+    assert on_disk("terms") and not listed("terms")
+    assert side_dirs() == ["_tmp_site_stats"]
+
+    IndexBuilder(spark, io).build(pages, resume=True)
+    for t in TABLES:
+        assert io.stage_complete(t), t
+        assert on_disk(t) == listed(t), t
+    assert side_dirs() == []
+
+
 @pytest.fixture()
 def inc_engine(spark, tmp_path_factory):
     from searchengine_spark.plans.api import SearchEngine

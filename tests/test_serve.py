@@ -54,12 +54,21 @@ def test_driver_latency_no_spark_job(built_engine):
 
 
 def test_driver_pagination(built_engine):
-    full = built_engine.search("появление леопарда", limit=30,
-                               strategy="driver", with_snippets=False)
-    if not full["result"] or len(full["data"]) <= 10:
-        pytest.skip("not enough hits for pagination check")
-    page = built_engine.search("появление леопарда", limit=10, offset=10,
-                               strategy="driver", with_snippets=False)
+    """Page 2 of a driver query is rows 10..19 of its 30-row first page.
+    The query is the highest-df non-stopword term, so it has hits enough
+    for both pages."""
+    from pyspark.sql import functions as F
+
+    n = built_engine.query_engine.stats["n_docs"]
+    q = (built_engine.io.read("terms")
+         .filter(F.col("df") / F.lit(float(n)) <= 0.95)
+         .orderBy(F.col("df").desc(), F.col("term"))
+         .select("term").first()["term"])
+    full = built_engine.search(q, limit=30, strategy="driver",
+                               with_snippets=False)
+    assert full["result"] and len(full["data"]) == 30, q
+    page = built_engine.search(q, limit=10, offset=10, strategy="driver",
+                               with_snippets=False)
     assert [h["doc_id"] for h in page["data"]] == \
            [h["doc_id"] for h in full["data"][10:20]]
 
