@@ -34,9 +34,8 @@ class EngineConfig:
     # job) while every query term's posting list fits one process
     # (plans/serve.py scale caveat); above it, distributed block-max WAND
     driver_df_limit: int = 10_000_000
-    # defaults mirrored from the reference UI
+    # default mirrored from the reference UI
     default_limit: int = 10  # templates/index.html:128
-    snippet_window: int = 20  # SnippetSearch.java:25
 
 
 def recommended_spark_conf() -> dict[str, str]:
@@ -51,7 +50,7 @@ def recommended_spark_conf() -> dict[str, str]:
     engine's own commit protocol: readers are manifest-pinned
     (sources/tableio.py::TableIO.read — only files listed by a COMPLETE
     stage manifest are ever read), every write lands in a side directory
-    that the next write of the table clears (TableIO.replace_buckets),
+    that the writer removes on every exit path (TableIO.replace_buckets),
     and vacuum() deletes unmanifested files. The same
     reasoning is why object-store committers (no atomic rename at all)
     are safe under manifest/snapshot table formats.

@@ -240,9 +240,9 @@ def np_intersect_score_blocks(per_term_blocks, term_order, idf,
                               avgdl: float, k1: float, b: float,
                               window=None):
     """Rarest-first AND intersection with doc-range block skipping over
-    compressed posting blocks — THE shared query kernel of the WAND tasks
-    (plans/wand.py) and the driver serving path (plans/serve.py); the two
-    must stay score-identical, so they share this code.
+    compressed posting blocks — the query kernel. Its one caller is
+    rank_blocks, which the WAND tasks (plans/wand.py) and the driver
+    serving path (plans/serve.py) share, so the two stay score-identical.
 
     per_term_blocks: term -> list of (docs_bin, tfs_bin, dls_bin,
     doc_min, doc_max), in (shard, doc_min) order. window=(lo, hi)
@@ -301,6 +301,66 @@ def np_intersect_score_blocks(per_term_blocks, term_order, idf,
     if cand_docs is None:
         return empty
     return cand_docs, cand_scores
+
+
+def rank_blocks(tbl, terms, avgdl: float, k1: float, b: float, kprime: int,
+                range_w: int | None = None, tf_bounds: bool = False,
+                count: bool = False):
+    """(top, matches) of a pyarrow table of block rows: the ≤ kprime best
+    (doc_id, score), best-first under (score desc, doc_id asc), and the
+    number of docs matching every term in the ranges scored. The one
+    block scorer of the driver path (plans/serve.py: the whole table is
+    one range) and the WAND tasks (plans/wand.py: a group of doc ranges).
+    terms: [{term, idf}] rarest-first.
+
+    range_w: the table has a range_id column, and a range scores only the
+    rarest term's postings in [rid·range_w, (rid+1)·range_w), so a block
+    exploded to several ranges scores each doc once. Ranges run in
+    descending bound Σ_t idf_t · max over the term's blocks of max_tfpart
+    (under tf_bounds, blocks encoded under another avgdl: the avgdl-free
+    cap tfpart(max_tf, dl=0)). Without count, the first range whose
+    bound is strictly below the kprime-th score ends the scan, so score
+    ties stay exact; with count every range is scored."""
+    import numpy as np
+
+    term_order = [t["term"] for t in terms]
+    idf = {t["term"]: t["idf"] for t in terms}
+    keys = ["range_id"] * (range_w is not None) + ["term", "shard", "doc_min"]
+    c = tbl.sort_by([(k, "ascending") for k in keys]).to_pydict()
+    rids = c["range_id"] if range_w is not None else [0] * tbl.num_rows
+    ranges: dict[int, dict[str, list]] = {}
+    for row in zip(rids, c["term"], c["docs_bin"], c["tfs_bin"], c["dls_bin"],
+                   c["doc_min"], c["doc_max"]):
+        ranges.setdefault(row[0], {}).setdefault(row[1], []).append(row[2:])
+
+    order = [(0.0, rid) for rid in ranges]
+    if not count:
+        cap = (np_bm25_tfpart(c["max_tf"], 0, avgdl, k1, b).tolist()
+               if tf_bounds else c["max_tfpart"])
+        bound: dict[tuple[int, str], float] = {}
+        for key, v in zip(zip(rids, c["term"]), cap):
+            bound[key] = max(bound.get(key, 0.0), v)
+        order = sorted(((sum(idf[t] * bound[rid, t] for t in per_term), rid)
+                        for rid, per_term in ranges.items()), reverse=True)
+
+    top: list[tuple[int, float]] = []
+    matches = 0
+    for ub, rid in order:
+        if not count and len(top) >= kprime and (not top or ub < top[-1][1]):
+            break  # ranges are sorted: nothing below can beat θ either
+        per_term = ranges[rid]
+        if any(t not in per_term for t in term_order):
+            continue  # AND semantics: a term absent from the range ⇒ no hit
+        window = (None if range_w is None
+                  else (rid * range_w, (rid + 1) * range_w))
+        docs, scores = np_intersect_score_blocks(
+            per_term, term_order, idf, avgdl, k1, b, window=window)
+        matches += int(docs.size)
+        best = np.lexsort((docs, -scores))[:kprime]
+        top = sorted(top + list(zip(docs[best].tolist(),
+                                    scores[best].tolist())),
+                     key=lambda r: (-r[1], r[0]))[:kprime]
+    return top, matches
 
 
 BLOCKS_SCHEMA = StructType([

@@ -20,9 +20,12 @@ the same five steps, each written once:
                     -> optional site filter             [J4]
                     -> count; orderBy(score desc, doc_id asc)
                        offset limit                     [O3+O4]
-            wand    block-max WAND over the posting blocks (plans/wand.py)
+            wand    block-max WAND over the posting blocks (plans/wand.py):
+                    top-k and count from one Spark job
             driver  one-process intersection over the blocks files
                     (plans/serve.py): top-k and count from one decode
+            (wand and driver rank blocks with one function,
+            operators/postings.py::rank_blocks)
   fetch:    the page's docs rows, a manifest-pinned pyarrow read by doc_id
             (serve.fetch_docs; `text` only when snippets are asked for)
   assemble: ranks, titles and snippets on the k rows; an empty page is
@@ -34,7 +37,7 @@ paths: all three must return identical rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -187,8 +190,9 @@ class QueryEngine:
                            while every term's df fits one process
                            (cfg.driver_df_limit), WAND above it, exact for
                            site filters / reference relevance mode.
-        count_mode="none" skips WAND's total-match count (count is a
-        full-intersection job; WAND's point is NOT doing that work). The
+        count_mode="exact": WAND's tasks count the matches in the page's
+        own job, scoring every range; count_mode="none" keeps WAND's
+        block-max pruning and reports the page size as the count. The
         exact and driver paths hold the count anyway."""
         self._assert_no_pending_delta()
         limit = limit if limit is not None else self.cfg.default_limit
@@ -274,15 +278,25 @@ class QueryEngine:
 
     def _wand_page(self, terms: list[dict], limit: int, offset: int,
                    count_mode: str) -> tuple[list[tuple[int, float]], int]:
-        """(page, count) of the WAND path; the count is an exact-path
-        candidates count, or the page size under count_mode="none"."""
-        rows = wand.wand_topk(self.spark, self.io, self.cfg, terms,
-                              k=limit, offset=offset,
-                              blocks_df=self._warm.get("blocks")).collect()
-        page = [(r["doc_id"], r["score"]) for r in rows]
-        # WAND at offset 0 returns hits iff candidates exist, so under
-        # count_mode="none" only an empty page past offset 0 pays a count
-        # job: it tells "offset past the end" from "not found"
-        if count_mode == "exact" or (not page and offset):
-            return page, self.candidates_df(terms).count()
-        return page, len(page)
+        """(page, count) of the WAND path. Under count_mode="exact" the
+        tasks count their matches in the page's own job (wand_topk's
+        `matches`); under "none" they prune and the count is the page
+        size. WAND at offset 0 returns hits iff candidates exist, so only
+        an empty page past offset 0 reruns counting: it tells "offset past
+        the end" from "not found". A limit-0 page is always empty, so it
+        counts under either mode."""
+        def run(count: bool):
+            obs = Observation() if count else None
+            # k ≥ 1: under limit(0) Spark runs no job to observe
+            rows = wand.wand_topk(self.spark, self.io, self.cfg, terms,
+                                  k=max(limit, 1), offset=offset,
+                                  blocks_df=self._warm.get("blocks"),
+                                  matches=obs).collect()
+            page = [(r["doc_id"], r["score"]) for r in rows[:limit]]
+            return page, obs.get["matches"] if count else len(page)
+
+        counting = count_mode == "exact" or not limit
+        page, count = run(counting)
+        if not counting and not page and offset:
+            page, count = run(True)
+        return page, count

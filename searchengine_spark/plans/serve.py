@@ -12,16 +12,18 @@ query touches:
     terms files holding b(q)     (dictionary rows for the query's terms;
                                   lookup_terms, every strategy)
     blocks files holding b(q)    (posting blocks for the query terms,
-                                  read and decoded once for top-k and
-                                  count; driver_topk)
+                                  read once and ranked as one Arrow
+                                  table for top-k and count; driver_topk)
     docs row groups selected by doc_id stats   (k rows of metadata;
                                   fetch_docs, every strategy)
 
 all via pyarrow dataset filters — so interactive latency is file-read
 bound (milliseconds), while the SAME files remain the source for the
-distributed exact/WAND scoring. Debris of an interrupted commit is never
-read: it is in no manifest. This mirrors production engines: Spark
-builds and maintains the index; a thin serving tier reads it.
+distributed exact/WAND scoring. The driver path and the WAND tasks rank
+blocks with one function, operators/postings.py::rank_blocks. Debris of
+an interrupted commit is never read: it is in no manifest. This mirrors
+production engines: Spark builds and maintains the index; a thin serving
+tier reads it.
 
 Scale caveat (documented, by design): the driver path loads the query
 terms' dictionary rows and posting blocks into one process, so it serves
@@ -32,10 +34,8 @@ automatically via cfg/df thresholds when strategy="auto".
 
 from __future__ import annotations
 
-import heapq
-
 from ..config import EngineConfig
-from ..operators.postings import bm25_idf, np_intersect_score_blocks
+from ..operators.postings import bm25_idf, rank_blocks
 from .build import term_bucket
 
 
@@ -85,45 +85,25 @@ def lookup_terms(io, cfg: EngineConfig, lemmas: list[str],
 def driver_topk(io, cfg: EngineConfig, terms: list[dict], k: int,
                 offset: int = 0) -> tuple[list[tuple[int, float]], int]:
     """(page, count): the (doc_id, score) rows ranked offset+1..offset+k
-    and the number of docs matching every term — rarest-first AND
-    intersection with doc-range block skipping over the compressed
-    blocks, one process, one read and one decode for both. terms: the
-    analyze() / lookup_terms output [{term, df, idf}], rarest-first.
-    Decode + scoring numpy-vectorized via the shared kernel
-    (operators/postings.py::np_intersect_score_blocks) — score-identical
-    to the WAND tasks by construction."""
+    and the number of docs matching every term, from one bucket-pruned
+    pyarrow read of the query terms' blocks ranked in-process by
+    operators/postings.py::rank_blocks as one range with count=True —
+    the block scorer of the WAND tasks, so both are score-identical by
+    construction. terms: the analyze() / lookup_terms output
+    [{term, df, idf}], rarest-first."""
     import pyarrow.dataset as ds
 
-    stats = io.read_meta("stats")
-    avgdl = float(stats["avgdl"]) or 1.0
-    k1, b = cfg.bm25_k1, cfg.bm25_b
+    avgdl = float(io.read_meta("stats")["avgdl"]) or 1.0
     term_order = [t["term"] for t in terms]
-    idf = {t["term"]: t["idf"] for t in terms}
-
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
-    d = _dataset(io, "blocks", buckets)
-    tbl = d.to_table(
+    tbl = _dataset(io, "blocks", buckets).to_table(
         filter=(ds.field("term_bucket").isin(buckets)
                 & ds.field("term").isin(term_order)),
-        columns=["term", "doc_min", "doc_max", "docs_bin", "tfs_bin",
-                 "dls_bin"])
-    per_term: dict[str, list[dict]] = {t: [] for t in term_order}
-    for i in range(tbl.num_rows):
-        row = {c: tbl[c][i].as_py() for c in tbl.column_names}
-        if row["term"] in per_term:
-            per_term[row["term"]].append(row)
-
-    per_term_blocks = {
-        t: [(r["docs_bin"], r["tfs_bin"], r["dls_bin"],
-             r["doc_min"], r["doc_max"]) for r in rows]
-        for t, rows in per_term.items()
-    }
-    cand_docs, cand_scores = np_intersect_score_blocks(
-        per_term_blocks, term_order, idf, avgdl, k1, b)
-    top = heapq.nsmallest(
-        offset + k, zip(cand_docs.tolist(), cand_scores.tolist()),
-        key=lambda kv: (-kv[1], kv[0]))
-    return top[offset:], int(cand_docs.size)
+        columns=["term", "shard", "doc_min", "doc_max", "docs_bin",
+                 "tfs_bin", "dls_bin"])
+    top, count = rank_blocks(tbl, terms, avgdl, cfg.bm25_k1, cfg.bm25_b,
+                             kprime=offset + k, count=True)
+    return top[offset:], count
 
 
 def fetch_docs(io, doc_ids: list[int],
@@ -137,8 +117,4 @@ def fetch_docs(io, doc_ids: list[int],
     d = _dataset(io, "docs")
     tbl = d.to_table(filter=ds.field("doc_id").isin(doc_ids),
                      columns=list(columns))
-    out = {}
-    for i in range(tbl.num_rows):
-        row = {c: tbl[c][i].as_py() for c in tbl.column_names}
-        out[row["doc_id"]] = row
-    return out
+    return {row["doc_id"]: row for row in tbl.to_pylist()}

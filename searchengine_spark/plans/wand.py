@@ -21,7 +21,10 @@ Physical plan:
                                                        candidate_ranges]
     -> wand_group = range_id % P                      [P tasks, each owning
                                                        many doc ranges]
-    -> applyInPandas(wand_task)                       [per task:
+    -> applyInArrow(rank_blocks)                      [per task, one Arrow
+                                                       table: operators/
+                                                       postings.py::rank_blocks,
+                                                       the driver path's scorer:
          ranges sorted by upper bound desc;
          skip range if upper < θ (block-max pruning);
          rarest-first AND intersection w/ doc-range block skipping;
@@ -35,6 +38,12 @@ non-negative term parts and AND candidates are a subset of every term's
 postings. A range is skipped only when its bound is STRICTLY below the
 current k'-th score, so score-ties (broken by doc_id asc) stay exact.
 
+The count. A search under count_mode="exact" passes an Observation: the
+tasks then skip no range, each reports its match count on its partial
+rows, and the observed sum arrives with the page from the same job — no
+second, exact-path count job. Every doc lies in exactly one range, so the
+per-task counts add up to the match count.
+
 On a multi-executor cluster the local θ per task converges from that task's
 own ranges. Cross-task θ sharing (score the hot ranges first, broadcast θ,
 rerun) measured ~2× slower than this single phase on a skew-heavy 60k-doc
@@ -44,15 +53,12 @@ index: the extra driver round-trip costs more than the pruning saves
 
 from __future__ import annotations
 
-import heapq
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
 from ..config import EngineConfig
-from ..operators.postings import (np_bm25_tfpart, np_intersect_score_blocks,
-                                  np_varint_decode)
+from ..operators.postings import np_varint_decode, rank_blocks
 from .build import term_bucket
 
 # minimum doc-range count before wand_topk spends a driver job deriving
@@ -60,101 +66,25 @@ from .build import term_bucket
 # cheaper than the extra job; see the gate in wand_topk)
 RANGE_BOUND_MIN_RANGES = 64
 
-TOPK_SCHEMA = StructType([
+PARTIAL_SCHEMA = StructType([
     StructField("doc_id", LongType(), False),
     StructField("score", DoubleType(), False),
+    StructField("matches", LongType(), False),
 ])
-
-
-def _wand_task(pdf, *, term_order: list[str], idf: dict[str, float],
-               avgdl: float, k1: float, b: float, kprime: int,
-               range_w: int, tf_bounds: bool = False):
-    """One task: blocks of several doc-ranges -> ≤ kprime (doc_id, score).
-
-    Each doc belongs to exactly one range (doc_id // range_w); postings
-    decoded from a range-spanning block are filtered to the range's doc
-    window so every doc is scored exactly once, with ALL its query-term
-    postings present (completeness: every block overlapping the range is in
-    this group).
-
-    Decode + scoring are numpy-vectorized via the shared kernel
-    (operators/postings.py::np_intersect_score_blocks): cumsum delta
-    decode, array tfpart, sorted-array intersection — no per-posting
-    Python loop; score-identical to the driver serving path by
-    construction. Layout unchanged; results byte-identical to the scalar
-    codec (property-tested)."""
-    import pandas as pd
-
-    # heap of (score, -doc_id): worst element first under (score asc,
-    # doc_id desc) == worst under our (score desc, doc_id asc) ranking
-    heap: list[tuple[float, int]] = []
-
-    def theta() -> tuple[float, int] | None:
-        return (heap[0][0], -heap[0][1]) if len(heap) >= kprime else None
-
-    by_range: dict[int, pd.DataFrame] = {
-        int(r): g for r, g in pdf.groupby("range_id")
-    }
-    # range upper bound = Σ_t idf_t · max tfpart_t within the range.
-    # tf_bounds: the stored max_tfpart baked in a different avgdl (index
-    # incrementally updated since the blocks were encoded) — use the sound
-    # avgdl-free cap instead: tfpart falls with dl, so tfpart(max_tf, dl=0)
-    # bounds every posting of the block (looser, still exact results;
-    # tightens again on refresh_blocks or a full rebuild)
-    def term_bound(gg) -> float:
-        if tf_bounds:
-            return float(np_bm25_tfpart(gg["max_tf"].max(), 0, avgdl, k1, b))
-        return float(gg["max_tfpart"].max())
-
-    uppers: list[tuple[float, int]] = []
-    for rid, g in by_range.items():
-        ub = sum(idf[t] * term_bound(gg) for t, gg in g.groupby("term"))
-        uppers.append((ub, rid))
-    uppers.sort(reverse=True)
-
-    for ub, rid in uppers:
-        th = theta()
-        if th is not None and ub < th[0]:
-            break  # ranges are sorted: nothing below can beat θ either
-        g = by_range[rid]
-        w_lo, w_hi = rid * range_w, (rid + 1) * range_w
-        per_term = {t: gg for t, gg in g.groupby("term")}
-        if any(t not in per_term for t in term_order):
-            continue  # AND semantics: a term absent from the range ⇒ no hit
-
-        # rarest-first intersection with block skipping — the shared numpy
-        # kernel (operators/postings.py::np_intersect_score_blocks), range
-        # window applied to the first term only
-        per_term_blocks = {
-            t: list(zip(gg2["docs_bin"], gg2["tfs_bin"], gg2["dls_bin"],
-                        gg2["doc_min"], gg2["doc_max"]))
-            for t, gg2 in ((t, per_term[t].sort_values(["shard", "doc_min"]))
-                           for t in term_order)
-        }
-        cand_docs, cand_scores = np_intersect_score_blocks(
-            per_term_blocks, term_order, idf, avgdl, k1, b,
-            window=(w_lo, w_hi))
-        if cand_docs.size == 0:
-            continue
-        for d, s in zip(cand_docs.tolist(), cand_scores.tolist()):
-            item = (s, -d)
-            if len(heap) < kprime:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-
-    return pd.DataFrame(
-        {"doc_id": pd.array([-nd for _, nd in heap], dtype="int64"),
-         "score": pd.array([s for s, _ in heap], dtype="float64")})
 
 
 def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
               k: int, offset: int = 0,
-              blocks_df: DataFrame | None = None) -> DataFrame:
+              blocks_df: DataFrame | None = None,
+              matches: Observation | None = None) -> DataFrame:
     """terms: the query terms [{term, df, idf}] rarest-first, as
     QueryEngine.analyze (serve.lookup_terms) returns them.
     Returns DataFrame(doc_id, score) of the global top-(offset+k).
-    blocks_df: optionally a pre-warmed (cached) blocks frame."""
+    blocks_df: optionally a pre-warmed (cached) blocks frame.
+    matches: when given, the tasks score every range (no block-max
+    pruning) and the first action on the frame observes the number of
+    docs matching every term as matches.get["matches"] — from the same
+    job. It needs k ≥ 1: Spark runs no job under limit(0)."""
     stats = io.read_meta("stats")
     avgdl = float(stats["avgdl"]) or 1.0
     kprime = offset + k
@@ -172,7 +102,6 @@ def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
                  or abs(float(blocks_avgdl) - avgdl) > 1e-9)
 
     term_order = [t["term"] for t in terms]
-    idf = {t["term"]: t["idf"] for t in terms}
     buckets = sorted({term_bucket(t, cfg.term_buckets) for t in term_order})
 
     # a cold read pins only the files holding the query's buckets
@@ -191,13 +120,26 @@ def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
                     if n_ranges > RANGE_BOUND_MIN_RANGES else None)
     exploded = explode_coverage(blocks, range_w, n_tasks, range_filter)
 
-    def task(pdf):
-        return _wand_task(pdf, term_order=term_order, idf=idf, avgdl=avgdl,
-                          k1=cfg.bm25_k1, b=cfg.bm25_b, kprime=kprime,
-                          range_w=range_w, tf_bounds=tf_bounds)
+    k1, b, count = cfg.bm25_k1, cfg.bm25_b, matches is not None
 
-    partial = exploded.groupBy("wand_group").applyInPandas(
-        task, schema=TOPK_SCHEMA)
+    def task(tbl):
+        import pyarrow as pa
+
+        top, n = rank_blocks(tbl, terms, avgdl, k1, b, kprime, range_w,
+                             tf_bounds, count)
+        # the task's match count rides on its first row (a task with
+        # matches has a row: kprime ≥ 1)
+        return pa.table({
+            "doc_id": pa.array([d for d, _ in top], pa.int64()),
+            "score": pa.array([sc for _, sc in top], pa.float64()),
+            "matches": pa.array([n] + [0] * (len(top) - 1) if top else [],
+                                pa.int64())})
+
+    partial = exploded.groupBy("wand_group").applyInArrow(
+        task, schema=PARTIAL_SCHEMA)
+    if count:
+        partial = partial.observe(
+            matches, F.coalesce(F.sum("matches"), F.lit(0)).alias("matches"))
     # NB: a doc whose postings land in one range can still be emitted by two
     # tasks only if a block spans ranges AND both copies see it — dedup by
     # doc_id keeping max (scores are identical; max is a safe dedup)

@@ -496,15 +496,19 @@ class TableIO:
         shutil.rmtree(tmp, ignore_errors=True)
         t0 = time.monotonic()
         # the Spark write (step 1, side dir) runs outside the lock — it
-        # touches no live files; the lock covers vacuum + move + swap
-        df = self._bucketed(df, bucket_col, sort_by)
-        df.write.mode("overwrite").parquet(tmp)
-        self._acquire_commit_lock(blocking=True)
+        # touches no live files; the lock covers vacuum + move + swap.
+        # The side dir is this writer's own: it goes on every exit path
         try:
-            return self._commit_files(df, table, bucket_col, buckets, extra,
-                                      tmp, t0)
+            df = self._bucketed(df, bucket_col, sort_by)
+            df.write.mode("overwrite").parquet(tmp)
+            self._acquire_commit_lock(blocking=True)
+            try:
+                return self._commit_files(df, table, bucket_col, buckets,
+                                          extra, tmp, t0)
+            finally:
+                self._release_commit_lock()
         finally:
-            self._release_commit_lock()
+            shutil.rmtree(tmp, ignore_errors=True)
 
     def _commit_files(self, df, table, bucket_col, buckets, extra, tmp,
                       t0) -> StageResult:
@@ -543,7 +547,6 @@ class TableIO:
                 if os.path.exists(_crc(fp)):  # the checksum goes along
                     shutil.move(_crc(fp), _crc(out))
                 fresh.append(entry)
-        shutil.rmtree(tmp, ignore_errors=True)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         files = keep + fresh

@@ -86,10 +86,11 @@ def test_refresh_blocks_on_fresh_build_equals_build(small_engine):
 def test_resumed_build_leaves_only_manifest_files(spark, tmp_path,
                                                   monkeypatch):
     """A build stopped mid-commit leaves debris: a terms generation moved
-    into its table but never committed, and a site_stats side directory
-    never moved. The resumed build commits through the same file
-    replacement, so afterwards every table directory holds exactly its
-    manifest's files and no `_tmp_<table>` side directory is left."""
+    into its table but never committed. The site_stats write stopped
+    before its move removes its own `_tmp_<table>` side directory. The
+    resumed build commits through the same file replacement, so
+    afterwards every table directory holds exactly its manifest's files
+    and no side directory is left."""
     from searchengine_spark.plans.build import TABLES, IndexBuilder
     from searchengine_spark.sources.corpus import gen_pages_spark
     from searchengine_spark.sources.tableio import TableIO
@@ -126,7 +127,7 @@ def test_resumed_build_leaves_only_manifest_files(spark, tmp_path,
         IndexBuilder(spark, io).build(pages)
     monkeypatch.undo()
     assert on_disk("terms") and not listed("terms")
-    assert side_dirs() == ["_tmp_site_stats"]
+    assert side_dirs() == []
 
     IndexBuilder(spark, io).build(pages, resume=True)
     for t in TABLES:

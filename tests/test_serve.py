@@ -178,3 +178,24 @@ def test_doc_fetch_reads_text_only_for_snippets(built_engine, monkeypatch):
             assert len(fetched) == 1, (strategy, snippets)
             assert ("text" in fetched[0]) == snippets, (strategy, fetched)
             assert all(("snippet" in h) == snippets for h in r["data"])
+
+
+def test_wand_counts_its_own_matches(built_engine):
+    """A default WAND search (count_mode="exact") takes its count from
+    its own job: it starts as many Spark jobs as count_mode="none" and
+    reports the exact strategy's count and rows. A limit-0 page reports
+    the count under either mode, as the other strategies do."""
+    eng, q = built_engine, "нудетеать лозоать"
+    exact = eng.search(q, strategy="exact", with_snippets=False)
+    assert exact["count"] > len(exact["data"])  # the count is not the page
+    _, none_jobs = _jobs(eng.spark, "wand-count-none", lambda: eng.search(
+        q, strategy="wand", count_mode="none", with_snippets=False))
+    wand, jobs = _jobs(eng.spark, "wand-count-exact", lambda: eng.search(
+        q, strategy="wand", with_snippets=False))
+    assert jobs == none_jobs
+    assert wand["count"] == exact["count"]
+    assert ([h["doc_id"] for h in wand["data"]]
+            == [h["doc_id"] for h in exact["data"]])
+    for mode in ("exact", "none"):
+        r = eng.search(q, limit=0, strategy="wand", count_mode=mode)
+        assert r == {"result": True, "count": exact["count"], "data": []}

@@ -1,24 +1,28 @@
-"""WAND == exhaustive scoring on randomized corpora (SURVEY.md §5 property
-test). The partition-local algorithm in plans/wand.py is re-implemented
-nowhere here — we drive the real _wand_task against brute-force scoring of
-randomly generated posting sets, covering multi-range, multi-shard, tied
-scores, and k larger than the result set."""
+"""WAND and driver ranking == exhaustive scoring on randomized corpora
+(SURVEY.md §5 property test). The block scorer shared by the WAND tasks
+and the driver path is re-implemented nowhere here — we drive the real
+operators/postings.py::rank_blocks on pyarrow tables of block rows
+against brute-force scoring of randomly generated posting sets, covering
+multi-range, multi-shard, tied scores, k larger than the result set and
+k' = 0. Three modes: WAND tasks pruning by block-max bounds (top rows
+checked), WAND tasks counting (top rows and the summed match count
+checked), and the driver path (the whole table as one range, with its
+count)."""
 
-import heapq
 import random
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from searchengine_spark.operators.postings import (bm25_tfpart,
-                                                   encode_posting_block)
-from searchengine_spark.plans.wand import _wand_task
+                                                   encode_posting_block,
+                                                   rank_blocks)
 
 K1, B = 1.2, 0.75
 
 
 def _make_blocks(postings_by_term, block_size, range_w, head_terms):
-    """postings_by_term: {term: {doc_id: (tf, dl)}} -> block rows df."""
+    """postings_by_term: {term: {doc_id: (tf, dl)}} -> block row dicts."""
     rows = []
     avgdl = 100.0
     for term, pl in postings_by_term.items():
@@ -45,10 +49,10 @@ def _make_blocks(postings_by_term, block_size, range_w, head_terms):
                     "docs_bin": docs_bin, "tfs_bin": tfs_bin,
                     "dls_bin": dls_bin,
                 })
-    return pd.DataFrame(rows), avgdl
+    return rows, avgdl
 
 
-def _exhaustive(postings_by_term, terms, idf, avgdl, kprime):
+def _exhaustive(postings_by_term, terms, idf, avgdl):
     docs = None
     for t in terms:
         s = set(postings_by_term[t])
@@ -60,11 +64,22 @@ def _exhaustive(postings_by_term, terms, idf, avgdl, kprime):
                 for t in terms)
         scored.append((d, s))
     scored.sort(key=lambda x: (-x[1], x[0]))
-    return scored[:kprime]
+    return scored
 
 
-@pytest.mark.parametrize("seed", range(12))
-def test_wand_task_equals_exhaustive(seed):
+# (seed, mode, k' override, dense): the twelve sparse WAND cases draw
+# each term's df at random, so most intersections are small or empty;
+# dense corpora give every term at least half the docs, so the counts,
+# the ties and the block-max pruning all see hundreds of matches
+CASES = ([pytest.param(s, "wand", None, False, id=str(s)) for s in range(12)]
+         + [pytest.param(s, mode, None, True, id=f"{mode}-{s}")
+            for mode in ("wand", "count", "driver") for s in range(8)]
+         + [pytest.param(s, mode, 0, True, id=f"{mode}-k0-{s}")
+            for mode in ("wand", "count", "driver") for s in range(2)])
+
+
+@pytest.mark.parametrize("seed,mode,kprime,dense", CASES)
+def test_wand_task_equals_exhaustive(seed, mode, kprime, dense):
     rng = random.Random(seed)
     n_docs = rng.choice([50, 400, 3000])
     range_w = rng.choice([64, 256, 1000])
@@ -75,7 +90,8 @@ def test_wand_task_equals_exhaustive(seed):
 
     postings_by_term = {}
     for t in terms:
-        df_t = rng.randint(1, max(1, n_docs // rng.choice([1, 2, 10])))
+        top_df = max(1, n_docs // rng.choice([1, 2, 10]))
+        df_t = rng.randint(*((n_docs // 2, n_docs) if dense else (1, top_df)))
         docs = rng.sample(range(n_docs), min(df_t, n_docs))
         postings_by_term[t] = {
             d: (rng.randint(1, 5),
@@ -89,36 +105,36 @@ def test_wand_task_equals_exhaustive(seed):
     idf = {t: max(0.01, 1.0 + (n - len(postings_by_term[t])) / (1 + len(postings_by_term[t])))
            for t in terms}
     term_order = sorted(terms, key=lambda t: len(postings_by_term[t]))
-    kprime = rng.choice([1, 5, 100])
+    query = [{"term": t, "idf": idf[t]} for t in term_order]
+    kprime = rng.choice([1, 5, 100]) if kprime is None else kprime
+    scored = _exhaustive(postings_by_term, term_order, idf, avgdl)
 
-    # emulate the driver split: blocks -> covered ranges -> task groups
-    rows = []
-    for _, r in blocks.iterrows():
-        for rid in range(int(r["doc_min"]) // range_w,
-                         int(r["doc_max"]) // range_w + 1):
-            rr = dict(r)
-            rr["range_id"] = rid
-            rows.append(rr)
-    full = pd.DataFrame(rows)
-    n_tasks = rng.choice([1, 3])
-    partials = []
-    for g in range(n_tasks):
-        pdf = full[full["range_id"] % n_tasks == g]
-        if len(pdf):
-            out = _wand_task(pdf, term_order=term_order, idf=idf,
-                             avgdl=avgdl, k1=K1, b=B, kprime=kprime,
-                             range_w=range_w)
-            partials.append(out)
-    got = []
-    if partials:
-        allp = pd.concat(partials)
-        # driver-side merge: max-dedup + (score desc, doc_id asc) top-k
-        best = allp.groupby("doc_id")["score"].max().reset_index()
-        got = sorted(((int(r["doc_id"]), float(r["score"]))
-                      for _, r in best.iterrows()),
-                     key=lambda x: (-x[1], x[0]))[:kprime]
+    if mode == "driver":
+        got, matches = rank_blocks(pa.Table.from_pylist(blocks), query,
+                                   avgdl, K1, B, kprime, count=True)
+    else:
+        # emulate the driver split: blocks -> covered ranges -> task groups
+        rows = [dict(r, range_id=rid) for r in blocks
+                for rid in range(r["doc_min"] // range_w,
+                                 r["doc_max"] // range_w + 1)]
+        n_tasks = rng.choice([1, 3])
+        best, matches = {}, 0
+        for g in range(n_tasks):
+            group = [r for r in rows if r["range_id"] % n_tasks == g]
+            if group:
+                top, m = rank_blocks(pa.Table.from_pylist(group), query,
+                                     avgdl, K1, B, kprime, range_w=range_w,
+                                     tf_bounds=seed % 2 == 1,
+                                     count=mode == "count")
+                matches += m
+                # driver-side merge: max-dedup + (score desc, doc_id asc)
+                for d, sc in top:
+                    best[d] = max(sc, best.get(d, sc))
+        got = sorted(best.items(), key=lambda x: (-x[1], x[0]))[:kprime]
 
-    want = _exhaustive(postings_by_term, term_order, idf, avgdl, kprime)
+    want = scored[:kprime]
     assert [d for d, _ in got] == [d for d, _ in want], (seed, got, want)
     for (_, sg), (_, sw) in zip(got, want):
         assert sg == pytest.approx(sw, abs=1e-9)
+    if mode != "wand":
+        assert matches == len(scored)
