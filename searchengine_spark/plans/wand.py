@@ -29,7 +29,7 @@ Physical plan:
          skip range if upper < θ (block-max pruning);
          rarest-first AND intersection w/ doc-range block skipping;
          exact BM25 scores; bounded min-heap of size offset+k]
-    -> union of ≤ P·k' partial rows
+    -> union of ≤ P·k' partial rows, no doc twice      [see "The count"]
     -> orderBy(score desc, doc_id asc).limit           [TakeOrderedAndProject]
 
 Upper bound per (term, range) = idf · max(max_tfpart of its blocks there);
@@ -41,8 +41,9 @@ current k'-th score, so score-ties (broken by doc_id asc) stay exact.
 The count. A search under count_mode="exact" passes an Observation: the
 tasks then skip no range, each reports its match count on its partial
 rows, and the observed sum arrives with the page from the same job — no
-second, exact-path count job. Every doc lies in exactly one range, so the
-per-task counts add up to the match count.
+second, exact-path count job. Every doc is scored in exactly one range
+(the rarest term's window) by exactly one task, so the per-task counts
+add up to the match count and the page needs no doc_id dedup.
 
 On a multi-executor cluster the local θ per task converges from that task's
 own ranges. Cross-task θ sharing (score the hot ranges first, broadcast θ,
@@ -140,10 +141,9 @@ def wand_topk(spark, io, cfg: EngineConfig, terms: list[dict],
     if count:
         partial = partial.observe(
             matches, F.coalesce(F.sum("matches"), F.lit(0)).alias("matches"))
-    # NB: a doc whose postings land in one range can still be emitted by two
-    # tasks only if a block spans ranges AND both copies see it — dedup by
-    # doc_id keeping max (scores are identical; max is a safe dedup)
-    return (partial.groupBy("doc_id").agg(F.max("score").alias("score"))
+    # no doc_id dedup: a range scores only the rarest term's postings in
+    # its own window and lives in one task, so each doc is emitted once
+    return (partial.select("doc_id", "score")
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .offset(offset).limit(k))
 

@@ -7,7 +7,8 @@ multi-range, multi-shard, tied scores, k larger than the result set and
 k' = 0. Three modes: WAND tasks pruning by block-max bounds (top rows
 checked), WAND tasks counting (top rows and the summed match count
 checked), and the driver path (the whole table as one range, with its
-count)."""
+count). WAND runs under both block-max bounds: the tight max_tfpart and
+the avgdl-free tf_bounds cap."""
 
 import random
 
@@ -67,19 +68,23 @@ def _exhaustive(postings_by_term, terms, idf, avgdl):
     return scored
 
 
-# (seed, mode, k' override, dense): the twelve sparse WAND cases draw
-# each term's df at random, so most intersections are small or empty;
-# dense corpora give every term at least half the docs, so the counts,
-# the ties and the block-max pruning all see hundreds of matches
-CASES = ([pytest.param(s, "wand", None, False, id=str(s)) for s in range(12)]
-         + [pytest.param(s, mode, None, True, id=f"{mode}-{s}")
+# (seed, mode, k' override, dense, tf_bounds): the twelve sparse WAND
+# cases draw each term's df at random, so most intersections are small
+# or empty; dense corpora give every term at least half the docs, so the
+# counts, the ties and the block-max pruning all see hundreds of matches
+CASES = ([pytest.param(s, "wand", None, False, False, id=str(s))
+          for s in range(12)]
+         + [pytest.param(s, "wand", None, dense, True,
+                         id=f"tfb-{'dense-' * dense}{s}")
+            for dense in (False, True) for s in range(6)]
+         + [pytest.param(s, mode, None, True, False, id=f"{mode}-{s}")
             for mode in ("wand", "count", "driver") for s in range(8)]
-         + [pytest.param(s, mode, 0, True, id=f"{mode}-k0-{s}")
+         + [pytest.param(s, mode, 0, True, False, id=f"{mode}-k0-{s}")
             for mode in ("wand", "count", "driver") for s in range(2)])
 
 
-@pytest.mark.parametrize("seed,mode,kprime,dense", CASES)
-def test_wand_task_equals_exhaustive(seed, mode, kprime, dense):
+@pytest.mark.parametrize("seed,mode,kprime,dense,tf_bounds", CASES)
+def test_wand_task_equals_exhaustive(seed, mode, kprime, dense, tf_bounds):
     rng = random.Random(seed)
     n_docs = rng.choice([50, 400, 3000])
     range_w = rng.choice([64, 256, 1000])
@@ -118,19 +123,19 @@ def test_wand_task_equals_exhaustive(seed, mode, kprime, dense):
                 for rid in range(r["doc_min"] // range_w,
                                  r["doc_max"] // range_w + 1)]
         n_tasks = rng.choice([1, 3])
-        best, matches = {}, 0
+        partial, matches = [], 0
         for g in range(n_tasks):
             group = [r for r in rows if r["range_id"] % n_tasks == g]
             if group:
                 top, m = rank_blocks(pa.Table.from_pylist(group), query,
                                      avgdl, K1, B, kprime, range_w=range_w,
-                                     tf_bounds=seed % 2 == 1,
+                                     tf_bounds=tf_bounds,
                                      count=mode == "count")
                 matches += m
-                # driver-side merge: max-dedup + (score desc, doc_id asc)
-                for d, sc in top:
-                    best[d] = max(sc, best.get(d, sc))
-        got = sorted(best.items(), key=lambda x: (-x[1], x[0]))[:kprime]
+                partial += top
+        # wand_topk merges without a doc_id dedup: each doc is emitted once
+        assert len({d for d, _ in partial}) == len(partial)
+        got = sorted(partial, key=lambda x: (-x[1], x[0]))[:kprime]
 
     want = scored[:kprime]
     assert [d for d, _ in got] == [d for d, _ in want], (seed, got, want)
@@ -138,3 +143,23 @@ def test_wand_task_equals_exhaustive(seed, mode, kprime, dense):
         assert sg == pytest.approx(sw, abs=1e-9)
     if mode != "wand":
         assert matches == len(scored)
+
+
+@pytest.mark.parametrize("kprime", [1, 3])
+def test_wand_scans_a_range_whose_bound_ties_theta(kprime):
+    """A range is skipped only when its bound is STRICTLY below the
+    k'-th score. One term, and every range's best doc has the same score,
+    which is also the range's bound: ranges run from the highest range_id
+    down, so the k' lowest doc_ids among the tied docs are found only if
+    every tied range is still scanned."""
+    range_w, n_docs = 100, 600
+    postings = {"t": {d: (5 if d % range_w == 7 else 1, 100)
+                      for d in range(n_docs)}}
+    blocks, avgdl = _make_blocks(postings, 16, range_w, {"t"})
+    rows = [dict(r, range_id=r["doc_min"] // range_w) for r in blocks]
+    query = [{"term": "t", "idf": 1.5}]
+    got, _ = rank_blocks(pa.Table.from_pylist(rows), query, avgdl, K1, B,
+                         kprime, range_w=range_w)
+    want = _exhaustive(postings, ["t"], {"t": 1.5}, avgdl)[:kprime]
+    assert [d for d, _ in got] == [d for d, _ in want] == [
+        7 + range_w * i for i in range(kprime)]
