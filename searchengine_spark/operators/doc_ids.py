@@ -40,6 +40,11 @@ def compute_bucket_offsets(urls: DataFrame, n_buckets: int,
                   .groupBy("_bucket").agg(F.count("*").alias("cnt"))
                   .collect())
     }
+    return bucket_offsets(counts, n_buckets)
+
+
+def bucket_offsets(counts: dict[int, int], n_buckets: int) -> dict[int, int]:
+    """Per-bucket start offsets (prefix sums) of per-bucket url counts."""
     offsets, acc = {}, 0
     for b in range(n_buckets):
         offsets[b] = acc
@@ -68,12 +73,3 @@ def attach_doc_ids(df: DataFrame, offsets: dict[int, int], n_buckets: int,
         return out.withColumnRenamed("_bucket", keep_bucket_as)
     return out.drop("_bucket")
 
-
-def assign_doc_ids(docs: DataFrame, n_buckets: int = 64,
-                   url_col: str = "url") -> DataFrame:
-    """One-frame convenience wrapper (counts + attach on the same frame).
-    For pipelines where the frame is expensive to recompute (UDF output),
-    call compute_bucket_offsets on the cheap upstream projection and
-    attach_doc_ids on the expensive frame instead."""
-    offsets = compute_bucket_offsets(docs, n_buckets, url_col)
-    return attach_doc_ids(docs, offsets, n_buckets, url_col)

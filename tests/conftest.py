@@ -1,12 +1,26 @@
 import os
 import shutil
 import sys
+from contextlib import contextmanager
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_FIXTURE_DOCS = 300
+
+
+@contextmanager
+def job_group(sc, group: str):
+    """Run the block's Spark jobs (on this thread) in job group `group`.
+    Yields a function that counts the jobs the group has started
+    (statusTracker), callable inside the block or after it."""
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,7 @@
 reads, and partition pruning in the physical plan."""
 
 import pytest
+from conftest import job_group
 
 from pyspark.sql import functions as F
 
@@ -381,18 +382,10 @@ def test_ivfpq_full_rerank_needs_no_count(spark, pq_index, emb, query_vec):
     size a whole-table rerank pool (k·⌈n/k⌉) first."""
     from searchengine_spark.operators.similarity import cosine_topk
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
     def run(group, query):
-        sc.setJobGroup(group, group)
-        try:
+        with job_group(spark.sparkContext, group) as jobs:
             rows = query().collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return (sorted((r["vec_id"], r["cos"]) for r in rows),
-                len(tracker.getJobIdsForGroup(group)))
+        return sorted((r["vec_id"], r["cos"]) for r in rows), jobs()
 
     def probe(rerank_factor):
         return pq_index.ann_topk(query_vec, k=10,

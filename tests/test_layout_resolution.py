@@ -11,6 +11,7 @@ import shutil
 from contextlib import contextmanager
 
 import pytest
+from conftest import job_group
 
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.plans.api import SearchEngine
@@ -288,9 +289,9 @@ def test_manifest_schema_read_equals_inferred_read(spark,
         inferred = (spark.read.option("basePath", io.path(table))
                     .parquet(*files))
         group = f"schema-read-{table}"
-        with _job_group(sc, group):
+        with job_group(sc, group) as jobs:
             pinned = io.read(table)
-        assert not sc.statusTracker().getJobIdsForGroup(group), table
+        assert jobs() == 0, table
         assert pinned.schema == inferred.schema, table
         assert (sorted(pinned.collect(), key=repr)
                 == sorted(inferred.collect(), key=repr)), table
@@ -355,25 +356,13 @@ def test_replace_buckets_crash_safety(spark, tmp_path):
 
 
 @contextmanager
-def _job_group(sc, group: str):
-    """Run the block's Spark jobs (on this thread) in a job group, so
-    statusTracker can count them."""
-    sc.setJobGroup(group, group)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
-@contextmanager
 def _stage_writes_grouped(sc, op: str):
     """Run every stage write (TableIO.replace_buckets) in its own Spark
     job group "<op>:<stage>"."""
     real = TableIO.replace_buckets
 
     def grouped(self, df, stage, *a, **kw):
-        with _job_group(sc, f"{op}:{stage}"):
+        with job_group(sc, f"{op}:{stage}"):
             return real(self, df, stage, *a, **kw)
 
     with pytest.MonkeyPatch.context() as mp:
@@ -404,27 +393,49 @@ def packed_build(spark, tmp_path_factory):
     shutil.rmtree(work, ignore_errors=True)
 
 
-@pytest.fixture(scope="module")
-def packed_upsert(spark, packed_build, tmp_path_factory):
-    """A copy of packed_build's index with one upsert batch (updated and
-    new urls) applied, its stage writes grouped "upsert:<stage>"."""
+def _packed_batch(spark):
+    """packed_build's upsert batch: 3 updated urls and 3 new ones."""
     from searchengine_spark.sources.corpus import gen_pages_local
 
-    work = str(tmp_path_factory.mktemp("packed_upsert") / "w")
-    shutil.copytree(packed_build.io.work_dir, work)
-    eng = SearchEngine(spark, work)
     base = gen_pages_local(60)
     changed = [dict(base[i], html=base[i + 30]["html"],
                     text=base[i + 30]["text"]) for i in range(3)]
     changed += gen_pages_local(63)[-3:]
-    pdf = spark.createDataFrame(
+    return spark.createDataFrame(
         [(c["url"], c["warc_ts"], c["html"], c["text"], c["lang"])
          for c in changed],
         "url string, warc_ts timestamp, html binary, text string, lang string")
+
+
+@pytest.fixture(scope="module")
+def packed_upsert(spark, packed_build, tmp_path_factory):
+    """A copy of packed_build's index with one upsert batch (updated and
+    new urls) applied, its stage writes grouped "upsert:<stage>"."""
+    work = str(tmp_path_factory.mktemp("packed_upsert") / "w")
+    shutil.copytree(packed_build.io.work_dir, work)
+    eng = SearchEngine(spark, work)
     with _stage_writes_grouped(spark.sparkContext, "upsert"):
-        report = eng.upsert_docs(pdf)
+        report = eng.upsert_docs(_packed_batch(spark))
     yield eng, report
     shutil.rmtree(work, ignore_errors=True)
+
+
+# Spark jobs of one upsert: two staging writes (docs rows, postings rows)
+# and the broadcast of the batch's urls, then the apply's rewrites.
+UPSERT_JOBS = 13
+
+
+def test_upsert_starts_a_bounded_number_of_jobs(spark, packed_build,
+                                                tmp_path):
+    """The packed batch's upsert into a copy of packed_build starts at
+    most UPSERT_JOBS Spark jobs: the batch is extracted and tokenized
+    once, and the apply neither probes its buckets nor collects them."""
+    work = str(tmp_path / "w")
+    shutil.copytree(packed_build.io.work_dir, work)
+    eng = SearchEngine(spark, work)
+    with job_group(spark.sparkContext, "upsert-jobs") as jobs:
+        eng.upsert_docs(_packed_batch(spark))
+    assert jobs() <= UPSERT_JOBS, jobs()
 
 
 def test_blocks_write_packs_bucket_files(spark, packed_build):
@@ -659,9 +670,9 @@ def test_read_lists_pinned_files_on_driver(spark, tmp_path):
 
     before = spark.conf.get(key, None)
     group = "tableio-read-listing"
-    with _job_group(sc, group):
+    with job_group(sc, group) as jobs:
         t = io.read("t")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert jobs() == 0
     assert spark.conf.get(key, None) == before
     assert t.count() == 400
     assert t.filter(F.col("pk") == 3).count() == 10

@@ -8,6 +8,7 @@ affected slices; results must equal an oracle built on the edited page set
 services/IndexingServiceImpl.removePageDataFromBD :185-198)."""
 
 import os
+import re
 import shutil
 
 import pytest
@@ -696,3 +697,145 @@ def test_random_op_sequence_equals_fresh_build(spark, tmp_path_factory, seed):
                           for h in got["data"]) == \
                 sorted((h["uri"], round(h["score"], 6))
                        for h in want["data"])
+
+
+def _side_dirs(io):
+    """Upsert/remove side directories in the work dir: the delta staging
+    and the table writes' side directories."""
+    return sorted(d for d in os.listdir(io.work_dir)
+                  if d.startswith(("_delta", "_staged", "_tmp_")))
+
+
+def test_upsert_refuses_a_batch_that_repeats_a_url(inc_engine, spark,
+                                                   monkeypatch):
+    """A batch holding one existing url twice and one new url twice is
+    refused before its delta is staged: a ValueError names a repeated
+    url, and the index, its status and its work dir are as before — no
+    pending marker, no side directory, and search answers. A batch whose
+    staging fails midway leaves no side directory either."""
+    from searchengine_spark.sources.corpus import gen_pages_local
+    from searchengine_spark.streaming import incremental as inc
+
+    io = inc_engine.io
+    q = "леопард обитает"
+    before = inc_engine.search(q, limit=10)
+    base = gen_pages_local(N)
+    old = dict(base[8], html=base[44]["html"], text=base[44]["text"])
+    new = gen_pages_local(N + 1)[-1]
+    with pytest.raises(ValueError, match="|".join(
+            re.escape(p["url"]) for p in (old, new))):
+        inc_engine.upsert_docs(_pages_df(spark, [old, new, old, new]))
+
+    def untouched():
+        assert not inc.has_pending_delta(io)
+        assert _side_dirs(io) == []
+        assert io.read_meta("build_status")["status"] == "INDEXED"
+        assert io.read("docs").count() == N
+        assert inc_engine.search(q, limit=10) == before
+
+    untouched()
+
+    def boom(*a, **k):
+        raise RuntimeError("injected failure while staging")
+
+    monkeypatch.setattr(inc, "tokens_from_docs", boom)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        inc_engine.upsert_docs(_pages_df(spark, [old, new]))
+    untouched()
+
+
+def test_upsert_and_remove_report_the_delta_phase(inc_engine, spark):
+    """The report of an upsert and of a removal carries the staging
+    phase's record: its wall and the affected term and url buckets."""
+    from searchengine_spark import oracle as O
+    from searchengine_spark.sources.corpus import gen_pages_local
+
+    base = gen_pages_local(N)
+    batch = [dict(base[2], html=base[52]["html"], text=base[52]["text"]),
+             gen_pages_local(N + 1)[-1]]
+    n_b = inc_engine.cfg.doc_id_buckets
+    for report, urls in (
+            (inc_engine.upsert_docs(_pages_df(spark, batch)),
+             [p["url"] for p in batch]),
+            (inc_engine.remove_page(base[9]["url"]), [base[9]["url"]])):
+        delta = report["delta"]
+        assert set(delta) == {"wall_ms", "affected_buckets", "doc_buckets"}
+        assert isinstance(delta["wall_ms"], int) and delta["wall_ms"] > 0
+        assert delta["affected_buckets"] == report["affected_buckets"]
+        assert delta["affected_buckets"]
+        assert delta["doc_buckets"] == sorted(
+            {O.url_bucket(u, n_b) for u in urls})
+
+
+def test_resume_after_staging_tokenizes_nothing(inc_engine, spark,
+                                                monkeypatch):
+    """A crash just after pending.json is written leaves the whole delta
+    staged: resume_upsert() applies it with the tokenizer unavailable
+    (the apply reads the staged postings and the marker's buckets) and
+    reaches the oracle's state on the edited page set."""
+    from searchengine_spark import oracle as O
+    from searchengine_spark.plans import build
+    from searchengine_spark.sources.corpus import gen_pages_local
+    from searchengine_spark.streaming import incremental as inc
+
+    io = inc_engine.io
+    base = gen_pages_local(N)
+    changed = [dict(base[13], html=base[47]["html"], text=base[47]["text"]),
+               *gen_pages_local(N + 2)[-2:]]
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash after staging")
+
+    monkeypatch.setattr(inc, "apply_staged_delta", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        inc_engine.upsert_docs(_pages_df(spark, changed))
+    monkeypatch.undo()
+    assert inc.has_pending_delta(io)
+
+    def no_tokenizer(*a, **k):
+        raise AssertionError("the apply tokenized")
+
+    monkeypatch.setattr(inc, "tokens_from_docs", no_tokenizer)
+    monkeypatch.setattr(build, "tokens_from_docs", no_tokenizer)
+    report = inc_engine.resume_upsert()
+    assert report is not None and not inc.has_pending_delta(io)
+    assert io.read_meta("build_status")["status"] == "INDEXED"
+
+    edited = {p["url"]: p for p in base}
+    for c in changed:
+        edited[c["url"]] = c
+    idx = _oracle_for(list(edited.values()))
+    assert _terms_snapshot(inc_engine) == {
+        t: (idx.df[t], idx.cf[t]) for t in idx.df}
+    urls = {r["url"] for r in io.read("docs").select("url").collect()}
+    assert urls == set(edited)
+    q = "леопард обитает"
+    want = O.search(idx, q, limit=10)
+    got = inc_engine.search(q, limit=10)
+    assert got["result"] == want["result"]
+    if want["result"]:
+        assert sorted((h["uri"], round(h["score"], 6)) for h in got["data"]) \
+            == sorted((h["uri"], round(h["score"], 6)) for h in want["data"])
+
+
+def test_pending_delta_without_recorded_buckets_is_refused(inc_engine):
+    """A pending.json in the layout of an engine that probed the affected
+    buckets at apply time records none: replaying it is refused with a
+    message saying so, and a new upsert/remove is refused while it is
+    pending. Nothing is replayed and the marker stays."""
+    import json
+
+    from searchengine_spark.sources.corpus import gen_pages_local
+    from searchengine_spark.streaming import incremental as inc
+
+    io = inc_engine.io
+    os.makedirs(inc._delta_path(io), exist_ok=True)
+    schema = io.read("docs").select(*inc.DOC_COLS).schema.jsonValue()
+    with open(inc._delta_path(io, "pending.json"), "w") as f:
+        json.dump({"schemas": {"touched": schema, "changed": schema}}, f)
+    with pytest.raises(RuntimeError, match="records no affected buckets"):
+        inc_engine.resume_upsert()
+    with pytest.raises(RuntimeError, match="resume_upsert"):
+        inc_engine.remove_page(gen_pages_local(N)[0]["url"])
+    assert inc.has_pending_delta(io)
+    assert io.read_meta("build_status")["status"] == "INDEXED"

@@ -5,6 +5,7 @@ sanity check (no Spark job => orders of magnitude under job-launch floors)."""
 import time
 
 import pytest
+from conftest import job_group
 
 from searchengine_spark import oracle as O
 
@@ -103,25 +104,13 @@ def test_auto_strategy_routes_and_matches(built_engine):
            [h["doc_id"] for h in exact["data"]]
 
 
-def _jobs(spark, group, fn):
-    """(fn(), Spark jobs fn started), counted under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_analyze_starts_no_spark_job(built_engine):
     """The dictionary lookup of every strategy is a pinned pyarrow read."""
     qe = built_engine.query_engine
-    terms, jobs = _jobs(built_engine.spark, "serve-analyze",
-                        lambda: qe.analyze("леопард обитает"))
+    with job_group(built_engine.spark.sparkContext, "serve-analyze") as jobs:
+        terms = qe.analyze("леопард обитает")
     assert [t["term"] for t in terms] == ["леопард", "обитать"]
-    assert jobs == 0
+    assert jobs() == 0
 
 
 def test_auto_all_stopword_query_starts_no_spark_job(built_engine):
@@ -130,11 +119,11 @@ def test_auto_all_stopword_query_starts_no_spark_job(built_engine):
     from searchengine_spark.plans.query import ERR_NOT_FOUND
     from searchengine_spark.sources.corpus import head_terms
 
-    r, jobs = _jobs(built_engine.spark, "serve-stopwords",
-                    lambda: built_engine.search(" ".join(head_terms()),
-                                                strategy="auto"))
+    with job_group(built_engine.spark.sparkContext,
+                   "serve-stopwords") as jobs:
+        r = built_engine.search(" ".join(head_terms()), strategy="auto")
     assert r == {"result": False, "error": ERR_NOT_FOUND}
-    assert jobs == 0
+    assert jobs() == 0
 
 
 def test_driver_search_reads_blocks_once(built_engine, monkeypatch):
@@ -188,11 +177,12 @@ def test_wand_counts_its_own_matches(built_engine):
     eng, q = built_engine, "нудетеать лозоать"
     exact = eng.search(q, strategy="exact", with_snippets=False)
     assert exact["count"] > len(exact["data"])  # the count is not the page
-    _, none_jobs = _jobs(eng.spark, "wand-count-none", lambda: eng.search(
-        q, strategy="wand", count_mode="none", with_snippets=False))
-    wand, jobs = _jobs(eng.spark, "wand-count-exact", lambda: eng.search(
-        q, strategy="wand", with_snippets=False))
-    assert jobs == none_jobs
+    sc = eng.spark.sparkContext
+    with job_group(sc, "wand-count-none") as none_jobs:
+        eng.search(q, strategy="wand", count_mode="none", with_snippets=False)
+    with job_group(sc, "wand-count-exact") as jobs:
+        wand = eng.search(q, strategy="wand", with_snippets=False)
+    assert jobs() == none_jobs()
     assert wand["count"] == exact["count"]
     assert ([h["doc_id"] for h in wand["data"]]
             == [h["doc_id"] for h in exact["data"]])
